@@ -1,0 +1,1 @@
+"""Closed-loop benchmark of the engine: ``python3 perfbench/run.py --help``."""
