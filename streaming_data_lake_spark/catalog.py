@@ -14,6 +14,7 @@ schemas against the declared contracts in :mod:`schemas`.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -68,7 +69,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     pin_session_confs(spark)
     path = table_path(sf_dir, name)
     st = os.stat(path)
-    if os.path.isdir(path):
+    if stat.S_ISDIR(st.st_mode):
         # Directory layout (never the case for this catalog today —
         # table_path names a single file): a dir's stat does not
         # change when an inner file is rewritten in place at the same

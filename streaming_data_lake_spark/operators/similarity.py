@@ -5,11 +5,14 @@ Brute-force cosine top-k as the exact baseline, and an IVF
 its nearest centroid, then search only within the probe cluster.
 
 Scale notes:
- - The dot product is a left-fold over zipped arrays
-   (``F.aggregate``/``F.zip_with``) — JVM-side higher-order
-   functions, no Python.
- - Brute force is queries × corpus: broadcast the (small) query set
-   against the corpus so the big side never shuffles.
+ - The IVF/PQ paths fold dot products over zipped arrays
+   (``F.aggregate``/``F.zip_with``): JVM higher-order functions,
+   which run interpreted, outside whole-stage codegen.
+ - Brute force is queries × corpus: the (small) query set is
+   collected to the driver and every corpus Arrow batch is scored in
+   NumPy in one ``mapInArrow`` stage, with the JVM fold's exact
+   summation order, so the big side never shuffles and only per-batch
+   top-k candidates leave the stage.
  - IVF turns the corpus scan into a cluster-pruned scan: the
    centroid assignment is a narrow map (corpus × k centroids with k
    broadcast), and the search join hits only matching cluster ids —
@@ -28,11 +31,25 @@ Scale notes:
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from streaming_data_lake_spark.schemas import EMBEDDING_DIM
+
+# The brute-force scoring closure calls this module's kernels on the
+# executors' Python workers, which see the repo only when the driver's
+# cwd is its root: ship them by value (as streaming/sessionize.py does).
+try:
+    import sys as _sys
+
+    from pyspark import cloudpickle as _cloudpickle
+
+    _cloudpickle.register_pickle_by_value(_sys.modules[__name__])
+except Exception:  # noqa: BLE001 — best-effort; repo-on-path still works
+    pass
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -67,24 +84,28 @@ def lit_doubles(vals) -> Column:
 
 def spread(df: DataFrame) -> DataFrame:
     """Spread an under-parallel frame across the cluster's cores
-    before CPU-heavy per-row scoring (guide §2.5 input skew: "one
+    before CPU-heavy per-row work (guide §2.5 input skew: "one
     huge unsplittable file ... repartition immediately after the
     read").
 
-    The O(pairs·d) similarity folds run where the corpus rows sit; a
-    corpus read from a single file (or a single parquet row group —
-    Spark parallelizes scans at row-group granularity) executes the
-    ENTIRE scoring stage in one task while every other core idles.
-    Repartitioning such a frame to the default parallelism costs one
-    tiny shuffle of the raw vectors and unlocks an N-core scoring
-    stage. Scale-adaptive on purpose: a corpus already wider than the
+    The IVF/PQ folds, shingling and hashing run where the input rows
+    sit; a frame read from a single file (or a single parquet row
+    group — Spark parallelizes scans at row-group granularity)
+    executes the ENTIRE stage in one task while every other core
+    idles. Repartitioning such a frame to the default parallelism
+    costs one tiny shuffle of the raw rows and unlocks an N-core
+    stage. Scale-adaptive on purpose: a frame already wider than the
     core count — every real deployment — returns UNCHANGED, so this
     never adds a shuffle at 100 TB. Round-robin repartition keeps
     Spark's deterministic sort-before-repartition assignment; results
     are unaffected because every consumer here is a per-row map, a
     keyed join, or a totally-ordered window — and the engine's float
     aggregations go through exact decimal sums (kmeans_recenter), so
-    even partial-aggregation grouping is order-independent."""
+    even partial-aggregation grouping is order-independent.
+    :func:`brute_force_knn` does not spread: its NumPy scoring is
+    cheap enough that the shuffle and extra tasks cost more than they
+    save (with a spread 4,000-vector corpus on 4 cores, the perfbench
+    ``serve`` workload's ``cpu_s_per_op`` rose from 0.62 to 0.78 s)."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
@@ -272,6 +293,72 @@ def ensure_unique_ids(
     return n_dup
 
 
+#: Queries scored per NumPy pass in :func:`brute_force_knn`. Fixed, not
+#: a setting: it bounds the per-batch score matrix at _QUERY_TILE x
+#: ``spark.sql.execution.arrow.maxRecordsPerBatch`` doubles (5 MB at
+#: the 10,000-row default) whatever the query count.
+_QUERY_TILE = 64
+
+
+def _degenerate(ids, mask, id_col: str, why: str):
+    i = int(np.flatnonzero(mask)[0])
+    return ValueError(
+        f"brute_force_knn: the embedding of {id_col}={ids[i].as_py()!r} is "
+        f"{why}; admit vectors through valid_vectors before scoring"
+    )
+
+
+def _vector_block(ids, vecs, dim: int | None, id_col: str):
+    """Admit one Arrow batch of embeddings for scoring.
+
+    Returns ``(dim, vt, norms)``: ``vt`` is the ``(dim, n)`` float64
+    transpose (one contiguous row per dimension, the fold's loop
+    order) and ``norms`` the left-fold norms. ``dim=None`` takes the
+    first vector's length. Raises ``ValueError`` naming the id of the
+    first vector that is NULL, of another dimension, holds a NULL or
+    non-finite element, or has a zero or non-finite norm — the shapes
+    :func:`valid_vectors` drops, which would otherwise score as NULL
+    or abort under ANSI with DIVIDE_BY_ZERO."""
+    n = len(vecs)
+    if vecs.null_count:
+        raise _degenerate(ids, vecs.is_null().to_numpy(zero_copy_only=False), id_col, "NULL")
+    lengths = vecs.value_lengths().to_numpy(zero_copy_only=False)
+    if dim is None:
+        dim = int(lengths[0]) if n else 0
+    if (lengths != dim).any():
+        raise _degenerate(ids, lengths != dim, id_col, f"not of dimension {dim}")
+    vals = vecs.flatten()
+    if vals.null_count:
+        rows = vals.is_null().to_numpy(zero_copy_only=False).reshape(n, dim).any(axis=1)
+        raise _degenerate(ids, rows, id_col, "holding a NULL element")
+    v = vals.to_numpy(zero_copy_only=False).astype(np.float64).reshape(n, dim)
+    if not np.isfinite(v).all():
+        raise _degenerate(ids, ~np.isfinite(v).all(axis=1), id_col, "holding a non-finite element")
+    vt = np.ascontiguousarray(v.T)
+    acc = np.zeros(n)
+    with np.errstate(over="ignore"):  # an overflow is refused below
+        for row in vt:
+            acc += row * row
+    norms = np.sqrt(acc)
+    if not (np.isfinite(norms) & (norms > 0)).all():
+        raise _degenerate(ids, ~(np.isfinite(norms) & (norms > 0)), id_col, "of zero or non-finite norm")
+    return dim, vt, norms
+
+
+def _cosine_block(qt, q_norm, ct, c_norm):
+    """Cosine of every (query, corpus) pair, bit-identical to
+    ``dot(q, c) / (q_norm * c_norm)`` in the JVM: per pair one
+    double-precision add per dimension in dimension order, starting
+    from 0.0. No ``np.dot``/``matmul``/``einsum``: BLAS and SIMD
+    kernels are free to reorder the sum."""
+    s = np.zeros((qt.shape[1], ct.shape[1]))
+    prod = np.empty_like(s)
+    for qd, cd in zip(qt, ct):
+        np.multiply(qd[:, None], cd, out=prod)
+        s += prod
+    return s / (q_norm[:, None] * c_norm)
+
+
 def brute_force_knn(
     corpus: DataFrame,
     queries: DataFrame,
@@ -282,33 +369,66 @@ def brute_force_knn(
     """Exact top-k cosine neighbors for each query vector.
 
     Output: (query_id, neighbor_id, rank, cosine_sim). Ties broken by
-    neighbor id so ranking is total and deterministic.
+    neighbor id so ranking is total and deterministic. Pairs with a
+    NULL id on either side, and self pairs, are not scored.
+
+    The query side is the small side: it is collected once on the
+    driver. The corpus is scored in one ``mapInArrow`` stage, every
+    query against each Arrow batch in NumPy (:func:`_cosine_block`,
+    bit-identical to the JVM fold). A batch emits only the pairs
+    scoring at least its query's k-th best in that batch, ties kept:
+    any lower pair has k better ones in the same batch, so it cannot
+    reach the top k. The ``row_number`` window then ranks the
+    survivors (planned as a ``WindowGroupLimit``).
+
+    Every query and corpus vector must be admitted by
+    :func:`valid_vectors` and share the query set's dimension;
+    otherwise ``ValueError`` names the vector's id. A degenerate query
+    raises here; a degenerate corpus vector raises in the scoring
+    task, so the action surfaces it as a ``PythonException`` carrying
+    the ``ValueError``.
     """
-    # Norms are precomputed once per side (Nq + Nc folds) instead of
-    # inside the pair expression (3·Nq·Nc folds); the arithmetic —
-    # dot/(√·√) with the same fold order — is unchanged, so results
-    # stay bit-identical to the oracle.
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm_named(vec_col).alias("q_norm"),
+    q_tbl = (
+        queries.select(F.col(id_col), F.col(vec_col))
+        .filter(F.col(id_col).isNotNull())
+        .toArrow()
     )
-    # spread(): the corpus side carries the O(Nq·Nc·d) scoring fold
-    # plus the admission norms — single-file corpora must not run
-    # that stage on one core (no-op at real scale, see spread()).
-    c = spread(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm_named(vec_col).alias("c_norm"),
-    )
+    q_ids = q_tbl.column(0).combine_chunks()
+    dim, q_t, q_norm = _vector_block(q_ids, q_tbl.column(1).combine_chunks(), None, id_col)
+    q_keys = q_ids.to_numpy(zero_copy_only=False)
+
+    def score(batches):
+        for batch in batches:
+            ids, vecs = batch.column(0), batch.column(1)
+            m = len(ids)
+            if not m or not len(q_keys):
+                continue
+            _, c_t, c_norm = _vector_block(ids, vecs, dim, id_col)
+            c_keys = ids.to_numpy(zero_copy_only=False)
+            for lo in range(0, len(q_keys), _QUERY_TILE):
+                hi = lo + _QUERY_TILE
+                sim = _cosine_block(q_t[:, lo:hi], q_norm[lo:hi], c_t, c_norm)
+                other = q_keys[lo:hi, None] != c_keys
+                keep = other
+                if 0 < k < m:
+                    # k-th best per query among non-self pairs. No NaN:
+                    # admitted norms are finite, so |dot| <= q_norm*c_norm
+                    # cannot overflow.
+                    key = np.where(other, sim, -np.inf)
+                    kth = np.partition(key, m - k, axis=1)[:, m - k]
+                    keep = other & (key >= kth[:, None])
+                qi, ci = np.nonzero(keep)
+                yield pa.RecordBatch.from_arrays(
+                    [q_ids.take(qi + lo), ids.take(ci), pa.array(sim[qi, ci])],
+                    names=["query_id", "neighbor_id", "cosine_sim"],
+                )
+
+    q_type = queries.schema[id_col].dataType.simpleString()
+    c_type = corpus.schema[id_col].dataType.simpleString()
     scored = (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cosine_qc().alias("cosine_sim"),
-        )
+        corpus.select(F.col(id_col), F.col(vec_col))
+        .filter(F.col(id_col).isNotNull())
+        .mapInArrow(score, f"query_id {q_type}, neighbor_id {c_type}, cosine_sim double")
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()

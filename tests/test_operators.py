@@ -5,6 +5,8 @@ drift detection."""
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -117,6 +119,137 @@ def test_ivf_knn_empty_centroids_degrades_to_exact(spark):
         for r in brute_force_knn(emb, queries, k=5).collect()
     }
     assert got == exact
+
+
+def _jvm_knn(corpus, queries, k):
+    """The JVM higher-order-fold formulation brute_force_knn replaced:
+    the bit-identity reference for the Arrow scoring stage."""
+    from pyspark.sql.window import Window
+
+    from streaming_data_lake_spark.operators.similarity import dot, norm
+
+    q = queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        norm(F.col("embedding")).alias("q_norm"),
+    )
+    c = corpus.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        norm(F.col("embedding")).alias("c_norm"),
+    )
+    scored = (
+        F.broadcast(q)
+        .join(c, F.col("query_id") != F.col("neighbor_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            (dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))).alias(
+                "cosine_sim"
+            ),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id").asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k).select(
+        "query_id", "neighbor_id", "rank", "cosine_sim"
+    )
+
+
+@contextlib.contextmanager
+def _arrow_batch_rows(spark, n: int):
+    """Arrow batches of ``n`` rows: a small ``n`` scores every
+    partition in several batches, so the per-batch pruning has to hold
+    across them."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _knn_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("batch_rows", [7, 10_000])
+def test_brute_force_knn_bit_identical_to_jvm_fold(spark, batch_rows):
+    """NumPy scoring keeps the JVM fold's summation order, so every
+    cosine is bit-equal (float ==, not approx) to the old operator's,
+    with the corpus over 3 partitions scored in 7-row batches (pruning
+    across batches) and in whole partitions. On the random double
+    corpus the same fold in reverse dimension order changes most dot
+    products in the last bit."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    doubles = spark.createDataFrame(
+        [(i, rng.standard_normal(64).tolist()) for i in range(300)],
+        "vec_id long, embedding array<double>",
+    )
+    for emb in (load_table(spark, SF_DIR, "embeddings"), doubles):
+        emb = emb.repartition(3)
+        queries = emb.filter(F.col("vec_id") < 20)
+        for k in (1, 5):
+            with _arrow_batch_rows(spark, batch_rows):
+                got = _knn_rows(brute_force_knn(emb, queries, k=k))
+            assert got == _knn_rows(_jvm_knn(emb, queries, k))
+            assert len(got) == 20 * k
+
+
+def test_brute_force_knn_tie_storm_and_k_beyond_batch(spark):
+    """More than k neighbours at the same cosine (exact duplicate
+    vectors spread over 7-row batches and 3 partitions): pruning keeps
+    ties, and the window breaks them by neighbour id. k larger than a
+    batch keeps every pair of the batch."""
+    base = [1.0, 2.0, 3.0, 4.0]
+    dup_ids = list(range(2, 40, 2))
+    rows = [(i, base if i in dup_ids else [float(i), 1.0, float(i % 3), 0.5]) for i in range(40)]
+    rows.append((100, base))
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>").repartition(3)
+    queries = corpus.filter(F.col("vec_id").isin(100, 7))
+    with _arrow_batch_rows(spark, 7):
+        got = {k: _knn_rows(brute_force_knn(corpus, queries, k=k)) for k in (3, 5, 12)}
+    for k, top_k in got.items():
+        assert top_k == _knn_rows(_jvm_knn(corpus, queries, k))
+    top = [r for r in got[5] if r[0] == 100]
+    assert [r[1] for r in top] == dup_ids[:5]
+    assert len({r[3] for r in top}) == 1
+
+
+def test_brute_force_knn_empty_sides(spark):
+    emb = load_table(spark, SF_DIR, "embeddings")
+    none = emb.filter(F.lit(False))
+    for corpus, queries in ((emb, none), (none, emb.filter(F.col("vec_id") < 3))):
+        out = brute_force_knn(corpus, queries, k=5)
+        assert out.columns == ["query_id", "neighbor_id", "rank", "cosine_sim"]
+        assert out.collect() == []
+
+
+@pytest.mark.parametrize(
+    "bad, why",
+    [
+        (None, "NULL"),
+        ([1.0, None, 1.0], "holding a NULL element"),
+        ([1.0, 1.0], "not of dimension 3"),
+        ([1.0, float("nan"), 1.0], "holding a non-finite element"),
+        ([1.0, float("inf"), 1.0], "holding a non-finite element"),
+        ([0.0, 0.0, 0.0], "of zero or non-finite norm"),
+        ([1e200, 1e200, 1e200], "of zero or non-finite norm"),
+    ],
+)
+def test_brute_force_knn_refuses_degenerate_vectors(spark, bad, why):
+    """A vector valid_vectors would drop raises ValueError naming its
+    id instead of scoring as NULL or aborting on DIVIDE_BY_ZERO: on
+    the driver for a query, in the scoring task for the corpus."""
+    good = [(i, [1.0, float(i), 2.0]) for i in range(1, 6)]
+    df = spark.createDataFrame(good + [(7, bad)], "vec_id long, embedding array<double>")
+    clean = df.filter(F.col("vec_id") != 7)
+    with pytest.raises(ValueError, match=f"vec_id=7 is {why}"):
+        brute_force_knn(clean, df, k=2)
+    with pytest.raises(Exception, match=f"ValueError: .*vec_id=7 is {why}"):
+        brute_force_knn(df, clean, k=2).collect()
 
 
 def test_multimodal_stub_gate(spark):

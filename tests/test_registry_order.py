@@ -146,9 +146,7 @@ def test_r20_drain_is_the_committed_one():
     age-obligatory r20 set computed from them must be exactly the
     committed R20_DRAIN — the forward simulation the r19 revision
     pinned, now checked against ground truth instead of simulation."""
-    verdicts = {
-        name: v for name, v in ledger.load_verdicts().items() if v[0] <= 19
-    }
+    verdicts = ledger.load_verdicts(max_round=19)
     assert any(v[0] == 19 for v in verdicts.values()), (
         "CORRECTNESS_r19.json missing — r20 rotation rests on it"
     )
@@ -166,9 +164,7 @@ def test_final_horizon_no_stale_name_after_r20():
     this window. At the horizon every registry name must carry a
     verdict no older than r18 (age <= 2 when r20 is the latest
     round) — the judge's 3-round freshness window, zero stragglers."""
-    simulated = {
-        name: v for name, v in ledger.load_verdicts().items() if v[0] <= 19
-    }
+    simulated = ledger.load_verdicts(max_round=19)
     order = list(all_queries())
     for name in order[:WINDOW]:
         simulated[name] = (20, True, "")

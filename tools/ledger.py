@@ -52,17 +52,23 @@ PENDING_SINCE: dict[str, int] = {
 }
 
 
-def load_verdicts(repo: str = REPO) -> dict[str, tuple[int, bool, str]]:
+def load_verdicts(
+    repo: str = REPO, max_round: int | None = None
+) -> dict[str, tuple[int, bool, str]]:
     """query -> (latest_round, passed, detail). ``passed`` means the
     latest verdict is a full rows+schema+hash match (hash may be
     absent for oracle-less queries: then rows_match is the bar, the
-    driver's weaker rows-only check)."""
+    driver's weaker rows-only check). ``max_round`` ignores verdict
+    files of later rounds, so the result is the ledger as it stood
+    after that round."""
     out: dict[str, tuple[int, bool, str]] = {}
     for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         if not m:
             continue
         rnd = int(m.group(1))
+        if max_round is not None and rnd > max_round:
+            continue
         with open(path) as fh:
             data = json.load(fh)
         for name, v in data.items():

@@ -14,6 +14,8 @@ Writes ``plans/<round>/REGISTRY_SWEEP.json`` and, when the previous
 round's artifact exists, prints a tripwire list of queries whose warm
 time grew more than ``--factor`` (default 1.5x) above the previous
 sweep with an absolute delta over 0.2 s (ignores sub-floor jitter).
+Exits non-zero on a tripwire, on any query that errored, and on any
+query the previous sweep timed that has no time now.
 
 Usage: python tools/registry_sweep.py [sf_dir] [--round rNN] [--factor 1.5]
 """
@@ -99,27 +101,47 @@ def main() -> int:
         json.dump(payload, fh, indent=1, sort_keys=True)
     print(f"wrote {dest}")
 
-    # Tripwire vs the previous round's sweep artifact, if present.
     prev_n = int(rnd[1:]) - 1
     prev_path = os.path.join(REPO, "plans", f"r{prev_n}", "REGISTRY_SWEEP.json")
+    prev = None
     if os.path.exists(prev_path):
         with open(prev_path) as fh:
             prev = json.load(fh)["queries"]
-        tripped = []
-        for name, cur in out.items():
-            p = prev.get(name, {}).get("warm")
-            c = cur.get("warm")
-            if p and c and c > p * factor and c - p > 0.2:
-                tripped.append(f"{name}: {p} -> {c}")
-        if tripped:
-            print("TRIPWIRE (warm > %.1fx prev + 0.2s):" % factor)
-            for t in tripped:
-                print("  " + t)
-            return 1
-        print(f"tripwire clean vs r{prev_n}")
     else:
         print(f"no previous sweep at {prev_path} — baseline recorded")
-    return 0
+    failed, tripped = judge(out, prev, factor)
+    if tripped:
+        print("TRIPWIRE (warm > %.1fx prev + 0.2s):" % factor)
+        for t in tripped:
+            print("  " + t)
+    elif prev is not None:
+        print(f"tripwire clean vs r{prev_n}")
+    if failed:
+        print("FAILED (no warm time):")
+        for f in failed:
+            print("  " + f)
+    return 1 if failed or tripped else 0
+
+
+def judge(
+    out: dict[str, dict], prev: dict[str, dict] | None, factor: float
+) -> tuple[list[str], list[str]]:
+    """(failed, tripped) for one sweep against the previous one.
+
+    A gate that cannot measure fails: ``failed`` names every query
+    that errored, and every query the previous sweep timed that has no
+    warm time now. ``tripped`` names the queries whose warm time grew
+    more than ``factor`` with an absolute delta over 0.2 s."""
+    failed = [f"{name}: {cur['err']}" for name, cur in out.items() if "err" in cur]
+    tripped = []
+    for name, cur in out.items():
+        p = (prev or {}).get(name, {}).get("warm")
+        c = cur.get("warm")
+        if p and c is None and "err" not in cur:
+            failed.append(f"{name}: timed {p} s before, no time now")
+        if p and c and c > p * factor and c - p > 0.2:
+            tripped.append(f"{name}: {p} -> {c}")
+    return failed, tripped
 
 
 if __name__ == "__main__":
