@@ -4,7 +4,7 @@
 exposes the engine's full certified inventory (one entry per
 implemented operator class from SURVEY.md §2 plus the
 training-data-pipeline operators); ``oracle_sql()`` returns the
-DuckDB oracle for every SQL-expressible query.
+DuckDB oracle for every query, in the same order.
 """
 
 from __future__ import annotations
@@ -34,4 +34,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     from streaming_data_lake_spark.queries import all_queries
 
-    return {name: q.oracle for name, q in all_queries().items() if q.oracle is not None}
+    return {name: q.oracle for name, q in all_queries().items()}

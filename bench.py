@@ -143,7 +143,7 @@ def _span_cal(payload: dict, fallback: float) -> float:
     the SLOWER of (pre, post) when both exist, else the pre-probe,
     else ``fallback``.
 
-    One-sided on purpose (r14, tools/probe_spancal.py): the probe's
+    One-sided on purpose (r14, CHANGELOG_r14.md): the probe's
     own JIT tail keeps drifting downward through a session, so a
     post-probe FASTER than pre is warm-process state, not host
     signal — the r13 spancal averaged it in and overstated slowness
@@ -348,7 +348,7 @@ def main() -> int:
     # default) raises ARITHMETIC_OVERFLOW on a plain sum(id*id).
     #
     # The probe is brought to STEADY STATE before the pre measurement
-    # (r14, tools/probe_spancal.py): the probe's own JIT tail drifts
+    # (r14, CHANGELOG_r14.md): the probe's own JIT tail drifts
     # ~0.376 -> 0.25 s over its first ~9 executions with NO query
     # work in between, while a fully-warmed probe shows post/pre
     # jitter around 1.0 (0.93/0.85/1.11 over three work-interleaved
@@ -426,7 +426,7 @@ def main() -> int:
     # artifact builds — on the priming pass, so scored best-of-2
     # measures the steady-state plan regardless of position.
     # SPARK_GRAFT_BENCH_PRIME=0 restores the unprimed r17 behavior
-    # (used by the interleaved A/B in tools/ab_pricing_warmup.py).
+    # (the interleaved A/B in CHANGELOG_r18.md compared the two).
     primed = os.environ.get("SPARK_GRAFT_BENCH_PRIME", "1") != "0"
     if primed:
         t_prime0 = time.time()

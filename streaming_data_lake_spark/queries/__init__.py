@@ -1,13 +1,18 @@
 """Query registry: the engine's certified query inventory.
 
 Every entry pairs a Spark implementation (``fn(spark, sf_dir) ->
-DataFrame``) with, where SQL-expressible, an ANSI-SQL oracle that
-DuckDB runs on the same parquet tables. The driver hash-compares the
-two — this registry IS the correctness contract (SURVEY.md §2.11
-re-expressed on the engine's tables).
+DataFrame``) with an ANSI-SQL oracle that DuckDB runs on the same
+parquet tables. The driver hash-compares the two — this registry IS
+the correctness contract (SURVEY.md §2.11 re-expressed on the
+engine's tables).
 
 Column-name parity rule: every computed/aggregate column is aliased
 identically in the Spark plan and the oracle SQL.
+
+Order rule: every registered query appears exactly once, and
+``all_queries()`` returns them in registration order — the submodules
+in the order it imports them, each query in source order.
+``__spark_entry__`` exposes that order unchanged.
 """
 
 from __future__ import annotations
@@ -22,189 +27,27 @@ from pyspark.sql import DataFrame, SparkSession
 class Query:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None
+    oracle: str
     doc: str = ""
 
 
 REGISTRY: dict[str, Query] = {}
 
 
-def register(name: str, oracle: str | None, doc: str = ""):
+def register(name: str, oracle: str, doc: str = ""):
+    """Decorator adding ``fn`` to ``REGISTRY``. Raises ``ValueError``
+    for a missing oracle or a name already registered (a plain dict
+    store would let the second ``@register`` replace the first)."""
+    if not isinstance(oracle, str) or not oracle.strip():
+        raise ValueError(f"query {name!r} has no oracle SQL")
+
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
+        if name in REGISTRY:
+            raise ValueError(f"query {name!r} is already registered")
         REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, doc=doc)
         return fn
 
     return deco
-
-
-# The driver hash-checks the FIRST 50 registered queries per round.
-# Round 20 (the FINAL round) executes the rotation the r19 revision of
-# this module committed at positions 51-99 and
-# tests/test_registry_order.py pinned by forward simulation: the
-# 27-name r17-verdict drain (age 3 the moment CORRECTNESS_r19 landed)
-# at positions 1-27, then the 22 r19 LATE code-touches (names whose
-# current code — the expression memo / spread / sessionize-guard
-# optimization work of r19 sessions 2-3 — lacks a driver verdict) at
-# 28-49, then the single free slot filled by the oldest-position
-# r18-certified name (bucketed_colocated_join; ledger fill order =
-# ascending verdict round, ties by prior registry position). Every
-# name after position 50 ends the final round at age <= 2 — inside
-# the 3-round freshness window, zero stragglers (pinned by
-# test_final_horizon_no_stale_name_after_r20). Rotated at round-20
-# start, before any driver run. tools/ledger.py cross-references the
-# verdict files.
-_CERTIFICATION_ORDER = [
-    # ---- (a) the 27-name r20 drain: r17 verdicts, stale the moment
-    # ---- CORRECTNESS_r19 landed (committed by the r19 revision of
-    # ---- this module; pinned by test_r20_drain_is_the_committed_one)
-    "sliding_window_metrics",
-    "streaming_hourly_metrics",
-    "monthly_nation_revenue",
-    "revenue_by_region",
-    "top_nations_by_customers",
-    "customers_with_orders",
-    "customers_without_orders",
-    "order_priority_rollup",
-    "priority_decode_rollup",
-    "scd2_current_enrichment",
-    "like_pattern_source_classes",
-    "nested_double_unnest_roundtrip",
-    "currency_normalized_revenue",
-    "range_band_pricing",
-    "simhash_fingerprints",
-    "schema_evolution_read",
-    "blocklist_filter_retention",
-    "quality_percentile_filter",
-    "crossdoc_boilerplate_ngrams",
-    "large_orders_having",
-    "cube_device_day_metrics",
-    "value_histogram_quantiles",
-    "zorder_layout_keys",
-    "topn_customers_per_nation",
-    "seeded_dim_hierarchy_enrichment",
-    "events_dedup_canonical",
-    "pricing_summary",
-    # ---- (b) the 22 r19 LATE code-touches (committed by the r19
-    # revision at positions 78-99; every name here EXECUTES r19
-    # optimization code — expression memo across similarity/sketches/
-    # shingles, native-sessionize replay batching + ANSI guard,
-    # shingle call-site spread — while carrying a pre-r19 verdict;
-    # oracle-green at sf0.01 when landed, re-certified by THIS
-    # round's driver run). Pinned by
-    # tests/test_registry_order.R19_LATE_CODE_TOUCHED. ----
-    "streaming_sessionize",
-    "minhash_lsh_near_dups",
-    "dup_clusters_connected",
-    "knn_ivf_cosine",
-    "knn_ivf_multiprobe_cosine",
-    "knn_bruteforce_cosine",
-    "knn_pq_adc_l2",
-    "knn_ivf_pq_adc",
-    "kmeans_train_centroids",
-    "knn_ivf_trained_cosine",
-    "bigram_lm_quality",
-    "ngram_jaccard_near_dups",
-    "semantic_dedup_centroid",
-    "embedding_cosine_near_dups",
-    "knn_ivf_materialized_cosine",
-    "embedding_label_stats",
-    "embedding_int8_quantization",
-    "knn_ivf_recall_at_k",
-    "streaming_hll_daily_users",
-    "streaming_cms_token_counts",
-    "cms_heavy_hitter_tokens",
-    "hll_distinct_users_daily",
-    # ---- (c) the single free slot: oldest-position r18-certified
-    # ---- name (ledger fill order — ascending verdict round, ties by
-    # ---- prior registry position). 27 + 22 + 1 = 50. ----
-    "bucketed_colocated_join",
-    # ---- position 51+ : NOT certified this round. r20 is the FINAL
-    # ---- round, so there is no next drain: every name below ends
-    # ---- the horizon at age <= 2 (r18/r19 verdicts — inside the
-    # ---- 3-round freshness window; pinned by
-    # ---- test_final_horizon_no_stale_name_after_r20). r18-certified
-    # ---- tail first (age 2 at horizon), then the 50 r19-certified
-    # ---- names (age 1 at horizon) in their r19 window order. ----
-    "partition_pruned_scan",
-    "schema_drift_check",
-    "asof_latest_view_before_purchase",
-    "asof_view_within_6h",
-    "doc_chunks_overlap",
-    "pii_redaction",
-    "salted_skew_aggregation",
-    "replicated_skew_join_rollup",
-    "conditional_distinct_users",
-    "user_engagement_ratios",
-    "user_daily_landscape",
-    "latest_event_per_user_type",
-    "interval_join_click_view",
-    "funnel_conversion_daily",
-    "value_distribution_by_class",
-    "flag_distribution",
-    "avg_value_spread",
-    "funnel_leakage_daily",
-    "materialize_incremental_clean_events",
-    "materialize_dim_change_repair",
-    "materialize_funnel_exists_repair",
-    "maintenance_compaction",
-    "two_level_overlay_maintenance",
-    "streaming_upsert_hourly",
-    "batch_sessionize_windows",
-    "token_budget_packing",
-    "bloom_semi_join_prune",
-    # ---- the 50 r19-certified names (CORRECTNESS_r19 all-green), in
-    # ---- their r19 window order — age 1 at the final horizon ----
-    "winnowing_fingerprints",
-    "exact_substring_dups",
-    "dedup_keep_best_quality",
-    "event_quality_spine_hourly",
-    "multimodal_resize",
-    "multimodal_frame_sample",
-    "user_rolling_7day_value",
-    "rollup_revenue_levels",
-    "price_quantiles_by_flag",
-    "user_event_gaps",
-    "running_revenue_by_nation",
-    "order_value_deciles",
-    "props_json_stats",
-    "keyset_intersect_except",
-    "orders_above_global_avg",
-    "supplier_name_near_matches",
-    "domain_mixture_resample",
-    "events_clean",
-    "streaming_clean_events",
-    "streaming_fanout_ingest",
-    "tfidf_top_terms",
-    "token_counts",
-    "top_tokens",
-    "doc_fingerprints",
-    "quality_scores",
-    "lang_id_heuristic",
-    "repetition_signals",
-    "benchmark_decontamination",
-    "user_event_type_paths",
-    "price_outliers_zscore",
-    "lineitem_flag_pivot",
-    "corr_quantity_price",
-    "priority_window_profile",
-    "stratified_sample_by_lang",
-    "top_busiest_hours",
-    "time_travel_read_v1",
-    "snapshot_metadata",
-    "duplicate_rates_hourly",
-    "consistent_hash_sample",
-    "events_rejected",
-    "dedup_exact_text",
-    "streaming_interval_join_daily",
-    "streaming_funnel_daily",
-    "streaming_dedup_keys",
-    "streaming_dedup_within_watermark",
-    "multimodal_media_features",
-    "sql_over_views_adhoc",
-    "scd2_point_in_time_enrichment",
-    "daily_distinct_users",
-    "event_counters_unpivot",
-]
 
 
 def all_queries() -> dict[str, Query]:
@@ -218,10 +61,4 @@ def all_queries() -> dict[str, Query]:
         streamq,
     )
 
-    missing = set(REGISTRY) - set(_CERTIFICATION_ORDER)
-    extra = set(_CERTIFICATION_ORDER) - set(REGISTRY)
-    if missing or extra:
-        raise AssertionError(
-            f"certification order out of sync: missing={sorted(missing)} extra={sorted(extra)}"
-        )
-    return {name: REGISTRY[name] for name in _CERTIFICATION_ORDER}
+    return dict(REGISTRY)

@@ -136,7 +136,7 @@ def test_find_regressions_uses_prev_span_calibration_when_present():
 
 def test_span_cal_is_one_sided():
     """A post-probe FASTER than pre is probe warm-up (the r13
-    0.263->0.216 anomaly — tools/probe_spancal.py showed the probe's
+    0.263->0.216 anomaly — CHANGELOG_r14.md shows the probe's
     JIT tail drifts down with no query work at all) and must NOT
     move the span; a slower one is a load ramp and must."""
     faster_post = {"cpu_calibration_sec": 0.263,

@@ -95,11 +95,6 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {exc}")
             failures += 1
             continue
-        if q.oracle is None:
-            print(f"ok   {name}: rows-only ({len(s_rows)} rows) [{time.time()-t0:.1f}s]")
-            if len(s_rows) == 0:
-                print(f"     WARNING: {name} returned 0 rows")
-            continue
         try:
             cur = con.execute(q.oracle)
             d_cols = [d[0] for d in cur.description]

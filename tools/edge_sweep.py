@@ -783,7 +783,7 @@ def order_sensitive_names() -> list[str]:
 
     out = []
     for name, q in all_queries().items():
-        hay = (q.oracle or "").lower()
+        hay = q.oracle.lower()
         try:
             hay += inspect.getsource(q.fn).lower()
         except (OSError, TypeError):

@@ -72,7 +72,7 @@ Gates (fail-fast off: one red gate must not hide another):
                            (r15 — pre-lock, both cycles staged the
                            same increment and double-appended)
  15. bare-sweep @ sf0.01 — bare-session portability, twice
- 16. ledger              — certification-window audit
+ 16. ledger              — latest driver verdicts: none failed, none orphaned
  17. driver smoke        — __spark_entry__ entry/queries/oracle_sql
 
 The seventeen gates run in eight concurrent LANES (sequential within a
