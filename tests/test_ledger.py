@@ -54,6 +54,19 @@ def test_ledger_detects_a_hole():
     assert blamed == {"failed_q", "gone_q"}, problems
 
 
+def test_ledger_failed_verdict_fires_even_when_windowed():
+    """A recorded FAILURE is red whatever its round and wherever the
+    query sits in the registry order — no rotation, window or age can
+    hide a regression."""
+    for rnd in (1, 5, 99):
+        for order in (["ok_q", "bad_q"], ["bad_q", "ok_q"]):
+            problems, _rows = ledger.audit(
+                verdicts={"bad_q": (rnd, False, "rows mismatch"), "ok_q": (rnd, True, "")},
+                order=order,
+            )
+            assert len(problems) == 1 and problems[0].startswith("bad_q:"), problems
+
+
 def test_every_verdict_name_is_a_registered_query():
     """A CORRECTNESS entry for a name the registry no longer exports
     means a query was renamed/deleted after certification — its
