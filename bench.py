@@ -8,12 +8,17 @@ The headline set spans the engine's surface: parquet scan + hash agg,
 broadcast-dim joins, the 4-stage funnel, sliding windows, interval
 joins, exact + fuzzy dedup, ANN similarity search, text analysis, and
 a full streaming pipeline (availableNow replay + MERGE upsert sink).
+
+It measures one run in a fixed query order and compares it with
+nothing; to compare two commits, run an interleaved A/B of
+``perfbench/run.py`` on both.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import random
 import sys
 import time
 
@@ -50,231 +55,27 @@ HEADLINE = [
     "semantic_dedup_centroid",  # centroid-bucketed semantic dedup
     "doc_chunks_overlap",       # overlapping-token training chunks
     "bloom_semi_join_prune",    # runtime Bloom filter + exact semi-join
-    "crossdoc_boilerplate_ngrams",  # global repeated-span table + joinback
+    "crossdoc_boilerplate_ngrams",  # corpus-wide repeated-span table + joinback
     "streaming_upsert_hourly",  # streaming replay + MERGE upsert
     "streaming_funnel_daily",   # streaming interval-join funnel
     "streaming_sessionize",     # stateful sessionization replay
     "materialize_incremental_clean_events",  # incremental materializer
 ]
 
-# Hard cap on regression entries in the stdout contract line: even an
-# everything-regressed pathological run must keep the line inside the
-# driver's ~2000-char tail capture (full entries go to the sidecar).
-_REG_CAP = 8
+#: Default seed of the execution-order shuffle. Shuffling decorrelates
+#: a query's position from its identity (a fixed list would always
+#: leave the streaming entries last, absorbing end-of-session GC); a
+#: fixed seed keeps the executed order the same from run to run and
+#: commit to commit. ``SPARK_GRAFT_BENCH_SEED`` overrides it.
+ORDER_SEED = 21
 
 
-def _round_seed() -> int:
-    """Deterministic per-round seed for the execution-order shuffle:
-    one past the highest CORRECTNESS_r{N} on disk (the round being
-    built), overridable via SPARK_GRAFT_BENCH_SEED. A FIXED order
-    let the slowest streaming entries always sit last and absorb
-    end-of-session GC pressure, confounding round-over-round
-    comparisons (VERDICT r8 "Next round" #7); per-round shuffling
-    decorrelates position from query identity. The derived seed
-    SHIFTS when the driver lands the round's CORRECTNESS file, so
-    for an order-stable within-round A/B pin SPARK_GRAFT_BENCH_SEED
-    explicitly; the executed order + seed are recorded in the output
-    JSON either way, so any run remains exactly replayable."""
-    env = os.environ.get("SPARK_GRAFT_BENCH_SEED")
-    if env is not None:
-        return int(env)
-    import glob
-    import re
-
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                        "CORRECTNESS_r*.json"))
-        if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))
-    ]
-    return (max(rounds) if rounds else 0) + 1
-
-
-def _prev_bench(
-    repo: str, before_round: int | None = None
-) -> tuple[dict | None, int | None]:
-    """The latest usable BENCH_r{N}.json's parsed payload (driver
-    files wrap the JSON line under "parsed"; a bare line parses
-    as-is), or (None, highest round seen) when none is usable.
-
-    ``before_round`` excludes the in-flight round: a bench rerun
-    after the driver has already written THIS round's artifact must
-    not compare the run against its own round's record (ADVICE r13).
-    Unreadable artifacts (BENCH_r13's "parsed": null truncation) fall
-    back to the next-lower round instead of silently disabling the
-    tripwire."""
-    import glob
-    import re
-
-    rounds: list[tuple[int, str]] = []
-    for p in glob.glob(os.path.join(repo, "BENCH_r*.json")):
-        if m := re.search(r"BENCH_r(\d+)\.json$", p):
-            rnd = int(m.group(1))
-            if before_round is None or rnd < before_round:
-                rounds.append((rnd, p))
-    if not rounds:
-        return None, None
-    rounds.sort(reverse=True)
-    for rnd, path in rounds:
-        try:
-            with open(path) as fh:
-                d = json.load(fh)
-        except (OSError, json.JSONDecodeError):
-            continue
-        payload = d.get("parsed", d) if isinstance(d, dict) else None
-        if isinstance(payload, dict) and payload.get("queries"):
-            return payload, rnd
-    return None, rounds[0][0]
-
-
-#: Version of the calibration-probe semantics behind the normalized
-#: fields, stamped into the artifact line (VERDICT r14 "What's wrong"
-#: #4: normalized totals quietly became a few % incomparable across
-#: the r14 probe change; the stamp makes any future tripwire or judge
-#: read see the boundary instead of comparing across it silently).
-#: 1 = r13 semantics (6-run steadied pre-probe, symmetric pre/post
-#: span mean); 2 = r14 semantics (one-sided span: a faster post-probe
-#: is probe warm-up and is ignored, only a slower one counts).
-PROBE_SEMANTICS = 2
-
-
-def _span_cal(payload: dict, fallback: float) -> float:
-    """A run's span calibration: the mean of its pre-run probe and
-    the SLOWER of (pre, post) when both exist, else the pre-probe,
-    else ``fallback``.
-
-    One-sided on purpose (r14, CHANGELOG_r14.md): the probe's
-    own JIT tail keeps drifting downward through a session, so a
-    post-probe FASTER than pre is warm-process state, not host
-    signal — the r13 spancal averaged it in and overstated slowness
-    on every idle run (VERDICT r13 #6). A post-probe SLOWER than pre
-    is the thing the post-probe exists to catch (load arriving
-    mid-run, ADVICE r13) and is counted."""
-    pre = payload.get("cpu_calibration_sec")
-    post = payload.get("cpu_calibration_post_sec")
-    if pre and post:
-        return (pre + max(post, pre)) / 2
-    return pre or fallback
-
-
-def find_regressions(
-    per_query: dict[str, float],
-    calibration: float,
-    prev: dict,
-    cal_baseline: float,
-    ratio_bar: float = 1.5,
-    abs_floor_sec: float = 0.2,
-) -> list[dict]:
-    """Per-query regression tripwire (VERDICT r12 "Next round" #6):
-    compare THIS run's calibration-normalized per-query times against
-    the previous round's artifact, normalized with ITS recorded
-    calibration, and flag any query over ``ratio_bar`` x. The
-    ``abs_floor_sec`` guard drops sub-second flapping (r12 saw 0.31 s
-    vs 0.23 s read as a spike) — a real regression at headline scale
-    moves the normalized time by far more than 0.2 s.
-
-    ``calibration`` should be the CURRENT run's span calibration
-    (mean of pre+post probes, ADVICE r13) so a load ramp arriving
-    mid-run is at least half-credited; the previous side uses its own
-    recorded span when the artifact carries a post-probe.
-
-    TWO-SIDED (r15, VERDICT r14 "What's wrong" #1): a query flags
-    only when BOTH the normalized AND the raw ratios clear
-    ``ratio_bar``. The r13 and r14 artifacts both shipped phantom
-    flags whose entire excess lived in the calibration probe — a
-    ±13-30% swing in a 0.2-0.3 s probe multiplies uniformly into
-    every normalized ratio, so calibration sampling alone could cross
-    the bar on code that was bit-unchanged. A REAL regression moves
-    the raw time too (same host class round over round); requiring
-    both sides mechanizes the interleaved-A/B absolution the
-    changelogs kept doing by hand. ``ratio`` reports the normalized
-    side (the comparable number); ``raw_ratio`` rides along in the
-    full entry for the sidecar."""
-    prev_cal = _span_cal(prev, cal_baseline)
-    out: list[dict] = []
-    for name, cur in sorted(per_query.items()):
-        p = prev["queries"].get(name)
-        if p is None or p <= 0:
-            continue
-        cur_n = cur * cal_baseline / calibration
-        prev_n = p * cal_baseline / prev_cal
-        if (
-            cur_n > ratio_bar * prev_n
-            and cur > ratio_bar * p
-            and cur_n - prev_n > abs_floor_sec
-        ):
-            out.append({
-                "query": name,
-                "prev_normalized": round(prev_n, 3),
-                "now_normalized": round(cur_n, 3),
-                "ratio": round(cur_n / prev_n, 2),
-                "raw_ratio": round(cur / p, 2),
-            })
-    return out
-
-
-def find_near_misses(
-    per_query: dict[str, float],
-    calibration: float,
-    prev: dict,
-    cal_baseline: float,
-    ratio_bar: float = 1.5,
-    abs_floor_sec: float = 0.2,
-) -> list[dict]:
-    """Queries the two-sided rule ABSOLVED: normalized ratio over the
-    bar (with the same abs floor) but raw ratio under it. The
-    two-sided flag kills calibration-swing phantoms, but it can also
-    mask a genuine code regression when the host got uniformly
-    faster round-over-round — normalized crosses, raw stays under,
-    and the query is silently absolved (ADVICE r15). These entries
-    go to the sidecar only (never the contract line), so a masked
-    regression stays auditable instead of invisible."""
-    prev_cal = _span_cal(prev, cal_baseline)
-    out: list[dict] = []
-    for name, cur in sorted(per_query.items()):
-        p = prev["queries"].get(name)
-        if p is None or p <= 0:
-            continue
-        cur_n = cur * cal_baseline / calibration
-        prev_n = p * cal_baseline / prev_cal
-        if (
-            cur_n > ratio_bar * prev_n
-            and cur_n - prev_n > abs_floor_sec
-            and not (cur > ratio_bar * p)
-        ):
-            out.append({
-                "query": name,
-                "prev_normalized": round(prev_n, 3),
-                "now_normalized": round(cur_n, 3),
-                "ratio": round(cur_n / prev_n, 2),
-                "raw_ratio": round(cur / p, 2),
-            })
-    return out
-
-
-def primed_tripwire_gate(
-    prev: dict | None,
-    primed: bool,
-    regressions: list[dict],
-    near_misses: list[dict],
-) -> tuple[list[dict], list[dict], list[dict], bool]:
-    """Primed-boundary guard (ADVICE r18 #3): the r18 priming pass
-    changed measurement methodology, so comparing a primed run
-    against an UNPRIMED baseline (or vice versa — someone sets
-    SPARK_GRAFT_BENCH_PRIME=0) measures the harness change, not the
-    code: unprimed early-position times carry JVM/JIT warmup the
-    primed side never pays. On a methodology mismatch the tripwire
-    entries are SUPPRESSED from the contract line (they'd be position
-    artifacts, the exact phantom class the r16/r17 A/Bs kept
-    adjudicating by hand) and parked in the sidecar with the reason,
-    so the boundary round stays auditable instead of noisy. A missing
-    ``primed`` field in the baseline means pre-r18 ⇒ unprimed.
-
-    Returns ``(regressions, near_misses, suppressed, mismatch)``."""
-    mismatch = prev is not None and bool(prev.get("primed", False)) != primed
-    if mismatch:
-        return [], [], regressions, True
-    return regressions, near_misses, [], False
+def run_order() -> tuple[int, list[str]]:
+    """The order seed and the HEADLINE permutation it executes."""
+    seed = int(os.environ.get("SPARK_GRAFT_BENCH_SEED", ORDER_SEED))
+    order = list(HEADLINE)
+    random.Random(seed).shuffle(order)
+    return seed, order
 
 
 def main() -> int:
@@ -293,27 +94,18 @@ def main() -> int:
 
     spark.range(1000).selectExpr("sum(id)").collect()
     load_table(spark, sf_dir, "region").groupBy("r_regionkey").count().count()
-    # Warm EVERY input table with one narrow scan (VERDICT r13 "What's
-    # wrong" #1): the r13 tripwire flagged 5 phantom regressions that
-    # were exactly the head of the reshuffled execution order, because
-    # whichever queries ran first paid each table's first-touch costs
-    # (file listing, footer parse, page-cache fill, per-table codegen)
-    # on BOTH best-of-2 runs. One min() over the first column decodes
-    # real data pages through the same reader path the queries use, so
-    # position in the shuffled order no longer correlates with cold
-    # tables.
+    # Warm every input table with one narrow scan, so each table's
+    # first-touch costs (file listing, footer parse, page cache,
+    # per-table codegen) land here and not on whichever query runs first.
     from pyspark.sql import functions as F
 
     for _tbl in TABLES:
         _df = load_table(spark, sf_dir, _tbl)
         _df.select(F.min(_df.columns[0])).collect()
-    # Warm the STREAMING engine too (MicroBatchExecution, file-stream
-    # source, state store, foreachBatch + in-batch parquet write):
-    # with the shuffled order a streaming query can land in slot 0,
-    # and without this its scored best-of-2 still carries
-    # first-stream class-loading (~3s) that the old fixed order hid
-    # by always running streaming entries late. Uses the 5-row
-    # region table — machinery only, no headline table data.
+    # Warm the streaming engine too (MicroBatchExecution, file-stream
+    # source, state store, foreachBatch + in-batch parquet write), so a
+    # streaming query in an early slot does not pay first-stream class
+    # loading. Uses the 5-row region table: machinery only.
     from streaming_data_lake_spark.scratch import scratch_dir
     from streaming_data_lake_spark.sources.streams import stream_table
     from streaming_data_lake_spark.sources.upsert import foreach_batch_upsert
@@ -337,61 +129,34 @@ def main() -> int:
         .awaitTermination()
     )
 
-    # Host-state calibration: a fixed CPU-bound JVM job (no IO, no
-    # engine code) timed best-of-3. Round-over-round comparisons on
-    # this shared host chase 20-35% noise (r8-r11 records); dividing
-    # per-query times by the calibration ratio separates code effects
-    # from host effects. The probe is deliberately shuffle-free and
-    # data-independent so its only variable is available CPU.
-    # (id*id) % p keeps both the per-row product (max 4e16) and the
-    # running sum (≤ 2e14) inside long range — ANSI mode (Spark 4
-    # default) raises ARITHMETIC_OVERFLOW on a plain sum(id*id).
-    #
-    # The probe is brought to STEADY STATE before the pre measurement
-    # (r14, CHANGELOG_r14.md): the probe's own JIT tail drifts
-    # ~0.376 -> 0.25 s over its first ~9 executions with NO query
-    # work in between, while a fully-warmed probe shows post/pre
-    # jitter around 1.0 (0.93/0.85/1.11 over three work-interleaved
-    # cycles). The r13 "post-probe 20% faster" anomaly (VERDICT r13
-    # #6) was the pre-probe sampling a colder probe than the
-    # post-probe, not host load — it made value_normalized_spancal
-    # overstate slowness on every idle run. Discarding 6 warm-up
-    # executions puts pre and post on the same steady probe, making
-    # the pre/post delta a pure load-ramp signal. NOTE: this lowers
-    # the measured calibration ~5-15% vs the r11-r13 semi-cold pre
-    # semantics, so value_normalized_r11cal steps UP by the same
-    # factor relative to older artifacts (documented CHANGELOG_r14).
-    def cpu_probe(n: int = 3, discard: int = 0) -> list[float]:
-        ts: list[float] = []
-        for i in range(discard + n):
-            t0 = time.time()
-            spark.range(1_000_000_000).selectExpr(
-                "sum((id * id) % 1000003) as s"
-            ).collect()
-            if i >= discard:
-                ts.append(round(time.time() - t0, 3))
-        return ts
-
-    cal_times = cpu_probe(n=3, discard=6)
+    # Host-state probes, recorded raw beside the timings so a reader
+    # can tell a loaded host from slow code. CPU: a fixed CPU-bound,
+    # shuffle-free JVM job, best of 3 after 6 discarded runs that bring
+    # the probe's own JIT to steady state. (id*id) % p keeps the
+    # product and the running sum inside long range (ANSI mode raises
+    # ARITHMETIC_OVERFLOW on a plain sum(id*id)).
+    cal_times: list[float] = []
+    for i in range(6 + 3):
+        t0 = time.time()
+        spark.range(1_000_000_000).selectExpr(
+            "sum((id * id) % 1000003) as s"
+        ).collect()
+        if i >= 6:
+            cal_times.append(round(time.time() - t0, 3))
     calibration = min(cal_times)
 
-    # IO probe: CPU calibration alone misses IO/scheduler load — two
-    # r11 runs at identical 0.346/0.347 CPU calibration differed
-    # 37.7 vs 41.0 s on untouched queries (VERDICT r11 "Next round"
-    # #4). Write + read a fixed ~30 MB parquet via pyarrow (no Spark,
-    # no engine code) best-of-3: its only variables are disk/page
-    # cache/scheduler state.
+    # IO: write + read a fixed ~30 MB parquet via pyarrow (no Spark, no
+    # engine code) best of 3; it sees disk, page-cache and scheduler
+    # load that the CPU probe misses.
     io_times = []
     import pyarrow as _pa
     import pyarrow.parquet as _pq
-
-    from streaming_data_lake_spark.scratch import scratch_dir as _sdir
 
     _probe_tbl = _pa.table({
         "i": _pa.array(range(2_000_000), type=_pa.int64()),
         "s": _pa.array([f"row-{i % 9973}" for i in range(2_000_000)]),
     })
-    _probe_path = os.path.join(_sdir("bench_io_probe_"), "probe.parquet")
+    _probe_path = os.path.join(scratch_dir("bench_io_probe_"), "probe.parquet")
     for _ in range(3):
         t0 = time.time()
         _pq.write_table(_probe_tbl, _probe_path)
@@ -402,31 +167,15 @@ def main() -> int:
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
     from streaming_data_lake_spark.plans import artifacts
 
-    # Best-of-N policy (default 2): single runs swing ±20% with host
-    # noise on this shared machine, which made round-over-round
-    # comparisons chase noise (VERDICT r6 #8). Per query we record
-    # every run and score the MINIMUM — the least-noise estimate of
-    # the plan's cost. SPARK_GRAFT_BENCH_RUNS=1 restores single-run.
+    # Best-of-N (default 2): every run is recorded and the minimum is
+    # scored, the least-noise estimate of the plan's cost.
+    # SPARK_GRAFT_BENCH_RUNS=1 scores a single run.
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
-    import random
-
-    seed = _round_seed()
-    order = list(HEADLINE)
-    random.Random(seed).shuffle(order)
-    # UNTIMED PRIMING PASS (r18, VERDICT r17 "Next round" #2): the
-    # table/streaming warmups above warm the readers, but the scored
-    # loop still started JVM/JIT-cold — whoever the per-round shuffle
-    # put at positions 0-9 ate C2/codegen/shuffle-machinery warmup on
-    # BOTH best-of-2 runs (both runs of query 0 execute before
-    # anything else warms the session), tripping the two-sided
-    # regression rule on bit-unchanged code: 5 of the 6 r17-flagged
-    # names sat at positions 0, 1, 3, 4, 9 of that run's order. One
-    # untimed execution of every headline query (same shuffled order)
-    # puts all one-time costs — JIT tiers, per-plan codegen, durable
-    # artifact builds — on the priming pass, so scored best-of-2
-    # measures the steady-state plan regardless of position.
-    # SPARK_GRAFT_BENCH_PRIME=0 restores the unprimed r17 behavior
-    # (the interleaved A/B in CHANGELOG_r18.md compared the two).
+    seed, order = run_order()
+    # Untimed priming pass: one execution of every headline query puts
+    # the one-time costs (JIT tiers, per-plan codegen, durable artifact
+    # builds) outside the scored runs, so a query's time does not
+    # depend on its position. SPARK_GRAFT_BENCH_PRIME=0 skips it.
     primed = os.environ.get("SPARK_GRAFT_BENCH_PRIME", "1") != "0"
     if primed:
         t_prime0 = time.time()
@@ -464,68 +213,13 @@ def main() -> int:
             file=sys.stderr,
         )
 
-    # Calibration-normalized total: value x (baseline / this run's
-    # calibration), so round-over-round reads divide out host-CPU
-    # state IN THE ARTIFACT instead of in changelog prose (VERDICT
-    # r11 "Next round" #4). Baseline = the BENCH_r11 driver run's
-    # cpu_calibration_sec (0.273) — normalized totals are directly
-    # comparable to BENCH_r11's raw 33.763 s.
-    # Post-run CPU calibration (r13): the pre-run probe samples an
-    # instant, and load arriving DURING the run is invisible to it —
-    # r12 run 2 and four r13 runs normalized badly for exactly this
-    # reason. Re-probing after the queries brackets the run;
-    # value_normalized_spancal half-credits a mid-run load RAMP (a
-    # post-probe slower than pre) and ignores a faster post-probe
-    # (probe warm-up, not host signal — r14 spancal validation, see
-    # _span_cal). value_normalized_r11cal keeps its pre-probe
-    # semantics for round-over-round comparability.
-    # One discard resettles the probe after ~70 s of query work (the
-    # pre side is already steady from its 6-run warm-up).
-    cal_post_times = cpu_probe(n=3, discard=1)
-    calibration_post = min(cal_post_times)
-
-    cal_baseline = 0.273
-    # One-sided span (see _span_cal): a faster post-probe is probe
-    # warm-up, not host signal; only a slower one marks a load ramp.
-    cal_span = (calibration + max(calibration_post, calibration)) / 2
-    # Regression tripwire (VERDICT r12 #6): normalized per-query
-    # comparison against the previous round's recorded artifact, in
-    # the JSON line itself — perf claims stop being hand-assembled.
-    # Both sides normalize with their SPAN calibration (ADVICE r13:
-    # pre-probe-only normalization misses load arriving mid-run);
-    # the in-flight round is excluded from the baseline pick so a
-    # rerun never compares against its own round's artifact.
-    prev, prev_round = _prev_bench(
-        os.path.dirname(os.path.abspath(__file__)), before_round=_round_seed()
-    )
-    regressions = (
-        find_regressions(per_query, cal_span, prev, cal_baseline)
-        if prev
-        else []
-    )
-    near_misses = (
-        find_near_misses(per_query, cal_span, prev, cal_baseline)
-        if prev
-        else []
-    )
-    regressions, near_misses, suppressed, primed_mismatch = primed_tripwire_gate(
-        prev, primed, regressions, near_misses
-    )
-
-    # warm=false ⇔ at least one durable artifact (bucketed layout,
-    # LSH signature table, IVF index, …) was built IN-LINE during a
-    # SCORED run — i.e. the headline number includes one-time build
-    # costs a steady-state deployment amortizes away. With best-of-2,
-    # a first-run build followed by a warm second run scores warm.
+    # warm=false means a durable artifact (bucketed layout, LSH
+    # signature table, IVF index, ...) was built in-line during a scored
+    # run, so the total includes a one-time build cost.
     #
-    # Stdout carries the contract line LAST, kept small enough to
-    # survive the driver's ~2000-char tail capture whole — BENCH_r13
-    # landed with parsed:null because run-detail fields bloated the
-    # line past the buffer (VERDICT r13 "Next round" #4). Full detail
-    # (every run, the shuffled order, probe run lists, full
-    # regression entries) goes to a sidecar the judge can read
-    # directly, and regressions in the contract line are compacted to
-    # {q, x} pairs with a hard cap.
+    # The contract line goes to stdout last and stays short enough for
+    # a ~2000-char tail capture; every run, the executed order and the
+    # probe run lists go to the sidecar.
     detail = {
         "query_runs": per_query_runs,
         "order_seed": seed,
@@ -533,18 +227,11 @@ def main() -> int:
         "artifact_builds_all_runs": builds_total,
         "cpu_calibration_runs": cal_times,
         "io_calibration_runs": io_times,
-        "cpu_calibration_post_runs": cal_post_times,
-        "regressions_full": regressions,
-        "regression_near_misses": near_misses,
-        "regressions_suppressed_primed_mismatch": suppressed,
     }
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "BENCH_DETAIL_local.json"), "w") as fh:
         json.dump(detail, fh, indent=1)
 
-    compact_reg = [
-        {"q": r["query"], "x": r["ratio"]} for r in regressions[:_REG_CAP]
-    ]
     line = {
         "metric": "headline_queries_total",
         "value": round(total, 3),
@@ -557,21 +244,8 @@ def main() -> int:
         "artifact_builds": builds_in_best,
         "cpu_calibration_sec": calibration,
         "io_calibration_sec": io_calibration,
-        "value_normalized_r11cal": round(total * cal_baseline / calibration, 3),
-        "cpu_calibration_post_sec": calibration_post,
-        "value_normalized_spancal": round(total * cal_baseline / cal_span, 3),
-        "regressions": compact_reg,
-        "regression_baseline": f"BENCH_r{prev_round:02d}" if prev else None,
-        "probe_semantics": PROBE_SEMANTICS,
         "primed": primed,
     }
-    if len(regressions) > _REG_CAP:
-        line["regressions_omitted"] = len(regressions) - _REG_CAP
-    if primed_mismatch:
-        line["regression_note"] = (
-            f"primed-mismatch vs BENCH_r{prev_round:02d}: tripwire "
-            f"suppressed ({len(suppressed)} entries in sidecar)"
-        )
     print(json.dumps(line, separators=(",", ":")))
     return 0
 

@@ -48,15 +48,6 @@ def duck_davg(expr: str, spec: str = DUCK_MONEY) -> str:
     )
 
 
-def lsum(c: Column) -> Column:
-    """Integer SUM surfaced as long (DuckDB sums int to HUGEINT)."""
-    return F.sum(c).cast("long")
-
-
-def duck_lsum(expr: str) -> str:
-    return f"CAST(sum({expr}) AS BIGINT)"
-
-
 def finite(c: Column) -> Column:
     """Value-level finiteness guard: NaN/+Inf/-Inf → NULL, finite
     values pass through unchanged (identity on clean data).

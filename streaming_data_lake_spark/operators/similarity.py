@@ -1037,49 +1037,6 @@ def _adc_rank(
     )
 
 
-def ivf_pq_adc_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
-    codebook_row: DataFrame,
-    k: int = 5,
-    n_sub: int = 8,
-    dsub: int = 8,
-    nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF bucket pruning composed with the compressed-domain ADC
-    scan — the IVFPQ index of Jegou et al. 2011 §V re-expressed
-    declaratively (the composition knn_pq_adc_l2's docstring
-    promises).
-
-    Corpus path is ONE narrow scan: cosine argmax assignment
-    (:func:`ivf_assign`, nprobe=1) feeds :func:`pq_encode` via
-    ``keep_cols`` — no corpus self-join, no shuffle; the stored
-    index row is (id, cluster_id, c0..c{n_sub-1}): bytes, not
-    vectors. Queries probe their ``nprobe`` nearest clusters and ADC-
-    score ONLY codes in probed buckets — the scanned fraction drops
-    to ~nprobe/n_centroids of the full-scan :func:`pq_adc_topk`,
-    which is what makes the 100 TB path CPU- as well as memory-
-    feasible. Candidates stay duplicate-free (each corpus vector
-    lives in exactly one bucket). Recall < 1 by design, rising with
-    nprobe — same dial as :func:`ivf_knn`.
-
-    Build-once deployments materialize :func:`ivf_pq_index` as a
-    durable table and call :func:`ivf_pq_adc_search` on it per query
-    batch (the certified query does exactly that through the artifact
-    cache); this convenience composition re-derives the index
-    in-line."""
-    codes = ivf_pq_index(
-        corpus, centroids, codebook_row, n_sub, dsub, id_col, vec_col
-    )
-    return ivf_pq_adc_search(
-        codes, queries, centroids, codebook_row, k, n_sub, dsub, nprobe,
-        id_col, vec_col,
-    )
-
-
 def ivf_pq_index(
     corpus: DataFrame,
     centroids: DataFrame,
@@ -1112,10 +1069,15 @@ def ivf_pq_adc_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """ADC top-k over a prebuilt :func:`ivf_pq_index` table: the
-    corpus side carries only (id, cluster_id, codes); queries assign
-    to their ``nprobe`` buckets, broadcast onto the codes scan, and
-    only probed buckets are scored."""
+    """ADC top-k over a prebuilt :func:`ivf_pq_index` table — the
+    IVFPQ index of Jegou et al. 2011 §V re-expressed declaratively:
+    the corpus side carries only (id, cluster_id, codes); queries
+    assign to their ``nprobe`` buckets, broadcast onto the codes scan,
+    and only probed buckets are scored, so the scanned fraction drops
+    to ~nprobe/n_centroids of the full-scan :func:`pq_adc_topk`.
+    Candidates stay duplicate-free (each corpus vector lives in
+    exactly one bucket). Recall < 1 by design, rising with nprobe —
+    same dial as :func:`ivf_knn`."""
     q = ivf_assign(queries, centroids, id_col, vec_col, nprobe=nprobe).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),

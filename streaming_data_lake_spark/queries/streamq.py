@@ -216,8 +216,8 @@ GROUP BY user_id, sess_id
     "Gap sessionization on the built-in JVM-side session_window "
     "(SessionWindowStateStore aggregation, watermark-flushed append "
     "mode); converges to the batch gaps-and-islands result. The "
-    "custom stateful implementations (applyInPandasWithState / "
-    "transformWithStateInPandas) share this oracle as operator tests.",
+    "custom stateful implementation (applyInPandasWithState) shares "
+    "this oracle as operator tests.",
 )
 def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streaming_data_lake_spark.streaming.sessionize import sessionize_native_replay

@@ -60,19 +60,6 @@ def physical_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType
     return schema
 
 
-def invalidate_schema_cache(sf_dir: str | None = None) -> None:
-    """Drop cached physical schemas (for one ``sf_dir``, or all) —
-    for the rare case where a testdata dir is replaced in-process,
-    which the immutable-input assumption otherwise caches through.
-    Mirrors ``sessionize.invalidate_tws_probe``."""
-    if sf_dir is None:
-        _SCHEMA_CACHE.clear()
-    else:
-        real = os.path.realpath(sf_dir)
-        for k in [k for k in _SCHEMA_CACHE if k[0] == real]:
-            del _SCHEMA_CACHE[k]
-
-
 _STREAM_DIRS: dict[tuple[str, str], str] = {}
 
 

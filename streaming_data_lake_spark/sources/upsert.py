@@ -405,7 +405,7 @@ def _merge_upsert_locked(
         # (guide §1.2: don't compute what you throw away — the batch
         # plan behind foreachBatch re-executes per action). The r19
         # driver bench flagged this form +24%; the r20 interleaved
-        # A/B (tools/ab_r20.py upsert) measured the fused form FASTER
+        # A/B (CHANGELOG_r20.md) measured the fused form FASTER
         # 5/5 pairwise (min 1.728 vs 1.899 s, median 1.895 vs 2.121),
         # so it stays — the driver reading is attributed to the
         # streaming family's cold-JVM variance.

@@ -303,8 +303,8 @@ def streaming_funnel_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     view → click (≤10 min) → purchase (≤60 min).
 
     A literal chain of stream-stream LEFT joins is unsound in Spark —
-    re-verified empirically on Spark 4.1.2 (tools/
-    probe_chained_funnel.py, 2026-08-15), multiple-stateful-operator
+    re-verified empirically on Spark 4.1.2 (CHANGELOG_r11.md, chained
+    funnel probe, 2026-08-15), multiple-stateful-operator
     support notwithstanding: the verbatim chain fails analysis with
     "More than one event time columns are available" (the first
     join's output carries both v.ts and c.ts as event-time), and the

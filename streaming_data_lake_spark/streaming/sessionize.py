@@ -1,19 +1,18 @@
-"""Gap-based streaming sessionization, three ways.
+"""Gap-based streaming sessionization, two ways.
 
 The PRODUCTION path is :func:`sessionize_native`: Spark's built-in
 ``session_window`` (3.2+) computes gap sessions entirely JVM-side —
 SessionWindowStateStore aggregation inside whole-stage-codegen'd
 stages, no Python worker in the loop. The certified query rides it.
 
-The custom stateful operators (:func:`sessionize` on
-``applyInPandasWithState``, :func:`sessionize_tws` on
-``transformWithStateInPandas``) implement the SAME semantics by hand
-and are kept as the demonstration of Spark's arbitrary-stateful
-surface — the construct for operators the built-in streaming API
-genuinely lacks (SURVEY.md §2.7). Sessionization is deliberately the
-worked example: all three paths converge to one batch
-gaps-and-islands oracle, so the custom-state machinery is certified
-against a built-in it must agree with.
+The custom stateful operator (:func:`sessionize` on
+``applyInPandasWithState``) implements the SAME semantics by hand and
+is kept as the demonstration of Spark's arbitrary-stateful surface —
+the construct for operators the built-in streaming API genuinely
+lacks (SURVEY.md §2.7). Sessionization is deliberately the worked
+example: both paths converge to one batch gaps-and-islands oracle, so
+the custom-state machinery is certified against a built-in it must
+agree with.
 
 Semantics: per user, consecutive events closer than ``gap`` belong to
 one session; a session closes when the next event is further than
@@ -48,7 +47,6 @@ DuckDB oracle computes via decimal SUM.
 from __future__ import annotations
 
 import os
-import time
 from collections.abc import Iterator
 from typing import Any
 
@@ -119,13 +117,13 @@ _STATE_SCHEMA = (
 # documented rather than theoretically impossible.
 _SENTINEL_USER = -(2**63)
 
-# The stateful fold helpers below are module-level (ONE implementation
-# shared by both stateful APIs), which means the closures shipped to
-# executors reference this module by name — and executor Python
-# workers only see the repo when the driver's cwd happens to be the
-# repo root. Register the module for BY-VALUE cloudpickle so the
-# shipped functions are self-contained, exactly like nested closures:
-# the engine then runs from any cwd with no executor-side install.
+# The stateful fold helpers below are module-level, which means the
+# closures shipped to executors reference this module by name — and
+# executor Python workers only see the repo when the driver's cwd
+# happens to be the repo root. Register the module for BY-VALUE
+# cloudpickle so the shipped functions are self-contained, exactly like
+# nested closures: the engine then runs from any cwd with no
+# executor-side install.
 try:
     import sys as _sys
 
@@ -549,203 +547,3 @@ def sessionize_replay(
     (availableNow, one staged file per micro-batch) and return every
     emitted session."""
     return _replay_to_parquet(spark, sf_dir, gap_minutes, sessionize, "sessions")
-
-
-# applicationId -> (probe result, probe time). The probe is one tiny
-# job, cached per Spark application (executor envs are per-context,
-# and id(spark) could alias a new session after GC). Staleness: under
-# dynamic allocation over HETEROGENEOUS node images, a later executor
-# set can differ from the probed one — so entries expire after
-# _TWS_PROBE_TTL_S and `invalidate_tws_probe()` forces an immediate
-# re-probe (call it after changing executor images / pools).
-_TWS_EXEC_PROBE: dict[str, tuple[bool, float]] = {}
-_TWS_PROBE_TTL_S = 3600.0
-
-
-def invalidate_tws_probe(spark: SparkSession | None = None) -> None:
-    """Drop the cached executor-side protobuf probe (for ``spark``'s
-    application, or all applications when ``None``) so the next
-    :func:`tws_available` call re-probes a possibly-changed executor
-    fleet."""
-    if spark is None:
-        _TWS_EXEC_PROBE.clear()
-    else:
-        _TWS_EXEC_PROBE.pop(spark.sparkContext.applicationId, None)
-
-
-def tws_available(spark: SparkSession | None = None) -> bool:
-    """Whether the transformWithStateInPandas state protocol can run:
-    it is driven over protobuf, which this container lacks (round 5:
-    ``ModuleNotFoundError: No module named 'google'``; an earlier
-    image shipped protobuf without its descriptor module). Probed up
-    front because the failure otherwise surfaces at stream start as
-    an opaque worker crash.
-
-    Pass the session to ALSO probe an executor Python worker: on a
-    real cluster the driver venv and executor env can differ (the
-    driver having protobuf as a transitive dependency is common), and
-    a driver-only probe would dispatch TWS onto workers that crash at
-    stream start — the exact failure this gate exists to prevent. The
-    probe is one single-row mapInPandas job, cached per session;
-    local mode degenerates to the driver env."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except Exception:  # noqa: BLE001
-        return False
-    if spark is None:
-        return True
-    key = spark.sparkContext.applicationId
-    cached = _TWS_EXEC_PROBE.get(key)
-    if cached is not None and (time.monotonic() - cached[1]) < _TWS_PROBE_TTL_S:
-        return cached[0]
-
-    def probe(batches):
-        ok = 1
-        try:
-            from google.protobuf import descriptor  # noqa: F401,F811
-        except Exception:  # noqa: BLE001
-            ok = 0
-        for _ in batches:
-            pass
-        yield pd.DataFrame({"ok": [ok]})
-
-    try:
-        rows = (
-            spark.range(1)
-            .repartition(1)
-            .mapInPandas(probe, "ok int")
-            .collect()
-        )
-        result = bool(rows and rows[0][0] == 1)
-    except Exception:  # noqa: BLE001 — no pandas/arrow on workers etc.
-        result = False
-    _TWS_EXEC_PROBE[key] = (result, time.monotonic())
-    return result
-
-
-def _require_tws(spark: SparkSession | None = None) -> None:
-    """Raise with guidance when TWS cannot run — the same gating
-    discipline as the Kafka/Avro source."""
-    if not tws_available(spark):
-        raise RuntimeError(
-            "transformWithStateInPandas requires a working google.protobuf "
-            "(pip install protobuf); not available in this environment. "
-            "Use sessionize()/sessionize_replay() (applyInPandasWithState), "
-            "which implements identical semantics."
-        )
-
-
-def _tws_settle_step(handle, sess_state, sessions, wm_us: int, gap_us: int):
-    """The TWS sealed-emission settle, module-level so the timer
-    bookkeeping is unit-pinned without a live TWS runtime: split ripe
-    vs pending against the watermark; pending sessions stay in state
-    with ONE timer at the earliest ``end + gap`` (re-arming deletes
-    the stale timer — the old API's implicit setTimeoutTimestamp
-    overwrite, made explicit); when nothing is pending the state is
-    cleared AND any outstanding timer is deleted too (ADVICE r17 #1:
-    the clear path previously left the registered timer armed, so it
-    later fired a no-op handleExpiredTimer — a wasted wakeup per
-    sealed key). Returns the ripe sessions for the caller to emit."""
-    ripe, pending = _split_ripe(sessions, wm_us, gap_us)
-    for t in list(handle.listTimers()):
-        handle.deleteTimer(t)
-    if pending:
-        sess_state.update(_arrays(pending))
-        handle.registerTimer(
-            (min(s[1] for s in pending) + gap_us) // 1000 + 1
-        )
-    elif sess_state.exists():
-        sess_state.clear()
-    return ripe
-
-
-def sessionize_tws(src: DataFrame, gap_minutes: int = 120) -> DataFrame:
-    """Gap sessionization on ``transformWithStateInPandas`` — the
-    Spark 4 successor to ``applyInPandasWithState`` (typed state
-    variables + explicit per-key timers instead of a single opaque
-    state tuple). Same semantics as :func:`sessionize`; kept as a
-    parallel implementation so pipelines can migrate API-by-API.
-
-    State: one ValueState holding the PENDING sessions as parallel
-    arrays (starts/ends/ns/centss/nfins — nfin is the finite-value
-    count that distinguishes an all-excluded session, total_value
-    NULL, from a zero-sum one, ADVICE r12). Sessions wait in state
-    until the watermark passes ``end + gap`` (the r17 sealed-emission
-    protocol — see :func:`sessionize`). Timers: one event-time timer
-    at the earliest pending ``end + gap``; re-arming on new data
-    deletes the stale timer (the old API's implicit
-    setTimeoutTimestamp overwrite, made explicit).
-
-    Requires a working ``google.protobuf`` (the TWS state protocol
-    transport); raises with guidance where absent."""
-    _require_tws(src.sparkSession)
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_us = gap_minutes * 60_000_000
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._sess = handle.getValueState("sess", _STATE_SCHEMA)
-
-        def close(self) -> None:
-            pass
-
-        def _settle(self, user_id, sessions, wm_us):
-            """Shared sealed-emission step: keep pending sessions in
-            state with a timer at the earliest end+gap, emit ripe."""
-            ripe = _tws_settle_step(
-                self._handle, self._sess, sessions, wm_us, gap_us
-            )
-            if ripe:
-                yield _emit_sessions(user_id, ripe)
-
-        def handleInputRows(self, key, rows, timerValues):
-            user_id = key[0]
-            if user_id == _SENTINEL_USER:
-                return  # watermark carrier
-            parts = list(rows)
-            pdf = parts[0] if len(parts) == 1 else pd.concat(parts)
-            if pdf.empty:
-                return
-            merged = _fold_batch(
-                pdf,
-                _state_sessions(self._sess.get()) if self._sess.exists() else [],
-                gap_us,
-            )
-            yield from self._settle(
-                user_id, merged, timerValues.getCurrentWatermarkInMs() * 1000
-            )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            if self._sess.exists():
-                yield from self._settle(
-                    key[0],
-                    _state_sessions(self._sess.get()),
-                    timerValues.getCurrentWatermarkInMs() * 1000,
-                )
-
-    return (
-        # Admission matches the native twin (r13 time-edge contract).
-        src.select("user_id", "ts", "value")
-        .filter(_admissible(F.col("ts")))
-        .withWatermark("ts", "30 seconds")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            SessionProcessor(),
-            outputStructType=SESSION_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )
-
-
-def sessionize_tws_replay(
-    spark: SparkSession, sf_dir: str, gap_minutes: int = 120
-) -> DataFrame:
-    """Bounded replay of :func:`sessionize_tws` (same staging and
-    sentinel discipline as :func:`sessionize_replay`)."""
-    return _replay_to_parquet(spark, sf_dir, gap_minutes, sessionize_tws, "sessions_tws")

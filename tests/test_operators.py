@@ -570,7 +570,8 @@ def test_ivfpq_probing_all_buckets_equals_full_adc_scan(spark):
     must reproduce the full-scan ADC ranking exactly — the composition
     changes WHAT is scanned, never how pairs are scored."""
     from streaming_data_lake_spark.operators.similarity import (
-        ivf_pq_adc_topk,
+        ivf_pq_adc_search,
+        ivf_pq_index,
         pq_adc_topk,
         pq_codebook_row,
         pq_encode,
@@ -590,7 +591,9 @@ def test_ivfpq_probing_all_buckets_equals_full_adc_scan(spark):
     pruned = sorted(
         map(
             tuple,
-            ivf_pq_adc_topk(emb, queries, cents, cb, k=3, nprobe=4).collect(),
+            ivf_pq_adc_search(
+                ivf_pq_index(emb, cents, cb), queries, cents, cb, k=3, nprobe=4
+            ).collect(),
         )
     )
     assert pruned == full
@@ -601,7 +604,8 @@ def test_ivfpq_candidates_come_only_from_probed_buckets(spark):
     the pruning actually prunes."""
     from streaming_data_lake_spark.operators.similarity import (
         ivf_assign,
-        ivf_pq_adc_topk,
+        ivf_pq_adc_search,
+        ivf_pq_index,
         pq_codebook_row,
     )
 
@@ -617,7 +621,8 @@ def test_ivfpq_candidates_come_only_from_probed_buckets(spark):
         r["vec_id"]: r["cluster_id"]
         for r in ivf_assign(emb, cents).select("vec_id", "cluster_id").collect()
     }
-    for r in ivf_pq_adc_topk(emb, queries, cents, cb, k=5, nprobe=1).collect():
+    codes = ivf_pq_index(emb, cents, cb)
+    for r in ivf_pq_adc_search(codes, queries, cents, cb, k=5, nprobe=1).collect():
         assert bucket[r["neighbor_id"]] == bucket[r["query_id"]]
 
 

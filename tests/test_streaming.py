@@ -115,25 +115,6 @@ def test_confluent_frame_validation(spark):
     assert [r["ok"] for r in df.collect()] == [ok for _, ok in rows]
 
 
-def test_sessionize_tws_gate(spark):
-    """The transformWithStateInPandas sessionizer either builds a
-    valid stream (working protobuf) or raises the documented guidance
-    error — never the opaque driver-worker crash."""
-    import pytest as _pytest
-
-    from streaming_data_lake_spark.sources.streams import stream_table
-    from streaming_data_lake_spark.streaming.sessionize import sessionize_tws
-
-    src = stream_table(spark, SF_DIR, "events")
-    try:
-        df = sessionize_tws(src, 120)
-        assert df.isStreaming
-    except RuntimeError as exc:
-        assert "protobuf" in str(exc)
-    except Exception:
-        _pytest.fail("unexpected error type from sessionize_tws gate")
-
-
 def test_confluent_wire_format_expressions(spark):
     """The wire-header helpers are pure binary expressions — exercise
     them without any Kafka/Avro jar: a frame built to the public
@@ -253,7 +234,7 @@ def test_sessionize_native_gap_boundary(spark):
 
 def test_fold_matches_native_session_window_random(spark):
     """Unification property: the custom stateful fold (_fold_batch,
-    the pandas/TWS operators' engine) and the built-in session_window
+    the pandas operator's engine) and the built-in session_window
     aggregate must produce identical sessions for random event sets —
     the two sessionization paths share one semantics by construction,
     not by coincidence."""
@@ -1156,65 +1137,6 @@ def test_sessionize_native_refuses_ansi_off_session(spark):
         sessionize_native(stream_table(spark, SF_DIR, "events"), 120)
     finally:
         spark.conf.set("spark.sql.ansi.enabled", "true")
-
-
-def test_tws_settle_step_deletes_timer_on_clear():
-    """ADVICE r17 #1: when the last pending session seals, the settle
-    step must delete the outstanding event-time timer along with the
-    state — previously the stale timer stayed armed and later fired a
-    no-op handleExpiredTimer (a wasted wakeup per sealed key)."""
-    from streaming_data_lake_spark.streaming.sessionize import (
-        _state_sessions,
-        _tws_settle_step,
-    )
-
-    class FakeHandle:
-        def __init__(self):
-            self.timers = []
-
-        def listTimers(self):
-            return list(self.timers)
-
-        def deleteTimer(self, t):
-            self.timers.remove(t)
-
-        def registerTimer(self, t):
-            self.timers.append(t)
-
-    class FakeState:
-        def __init__(self):
-            self.raw = None
-
-        def exists(self):
-            return self.raw is not None
-
-        def get(self):
-            return self.raw
-
-        def update(self, arrays):
-            self.raw = arrays
-
-        def clear(self):
-            self.raw = None
-
-    gap_us = 100
-    handle, state = FakeHandle(), FakeState()
-    sessions = [(0, 10, 1, 100, 1), (1000, 2000, 2, 50, 2)]
-
-    # batch 1: wm=500 seals the first session, second stays pending
-    ripe = _tws_settle_step(handle, state, sessions, 500, gap_us)
-    assert [s[0] for s in ripe] == [0]
-    assert state.exists()
-    assert handle.timers == [(2000 + gap_us) // 1000 + 1]
-
-    # batch 2 (timer fires): wm past everything -> emit, clear state
-    # AND the timer — nothing left armed
-    ripe = _tws_settle_step(
-        handle, state, _state_sessions(state.get()), 10_000_000, gap_us
-    )
-    assert [s[0] for s in ripe] == [1000]
-    assert not state.exists()
-    assert handle.timers == []
 
 
 def test_sessionize_multibatch_random_splits_match_batch_oracle(spark, tmp_path):
