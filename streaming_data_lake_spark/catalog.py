@@ -131,12 +131,6 @@ def normalize_timestamps(df: DataFrame, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:
-    """Register every table as a temp view named after itself."""
-    for name in tables:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def diff_schemas(declared, observed) -> list[str]:
     """Drift messages for one table: declared contract vs observed
     physical schema. Sorted within each category (set-difference

@@ -42,12 +42,24 @@ walking the filesystem. The MERGE sink's per-batch sizing check
 reads this cached figure and stats only the leaves it actually
 replaced, so the per-micro-batch cost is O(touched leaves), not
 O(table files) (VERDICT r8 "What's wrong" #3).
+
+Both keyed writers — the MERGE sink (:mod:`sources.upsert`) and the
+materializer (:mod:`plans.materialize`) — take every rule of the
+shared on-disk layout from here: the layout column list
+(:func:`layout_cols`), the key derivation (:func:`with_layout`,
+:func:`bucket_expr`), physical-layout detection and stripping
+(:func:`has_layout_level`, :func:`strip_layout`) and data-byte bucket
+sizing (:func:`sized_buckets`). Each writer keeps its own sidecar
+fields and its own write arrangement.
 """
 
 from __future__ import annotations
 
 import json
 import os
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 #: Outer (day) partition column of managed two-level tables. No
 #: leading underscore: Spark file listing hides `_`/`.` paths.
@@ -120,16 +132,101 @@ def dir_data_bytes(path: str, include_hidden: bool = False) -> int:
     return total
 
 
-def count_partition_dirs(path: str, partition_col: str) -> int:
+def _partition_dirs(path: str, partition_col: str) -> list[str]:
     prefix = f"{partition_col}="
     try:
-        return sum(
-            1
+        return [
+            os.path.join(path, e)
             for e in os.listdir(path)
             if e.startswith(prefix) and os.path.isdir(os.path.join(path, e))
-        )
+        ]
     except OSError:
-        return 0
+        return []
+
+
+def count_partition_dirs(path: str, partition_col: str) -> int:
+    return len(_partition_dirs(path, partition_col))
+
+
+def layout_cols(day: bool, kb: bool) -> list[str]:
+    """The partition columns of a managed table, outermost first:
+    ``day_pt`` when the table has the day level, ``kb`` when it has
+    the key-hash bucket level."""
+    return [c for c, on in ((DAY_COL, day), (BUCKET_COL, kb)) if on]
+
+
+def qcol(name: str) -> Column:
+    """Column reference that takes ``name`` LITERALLY: a bare
+    F.col("a.b") parses as a nested path, so key/payload names
+    containing dots or backticks would misresolve. Backtick-quote
+    (`` escapes a literal backtick) at every by-name reference."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def bucket_expr(cols: list[str], n_buckets: int) -> Column:
+    """The ``kb`` value of a row: Spark's hash() is seeded murmur3 —
+    deterministic across sessions and processes, so an existing row
+    and its update always land in the same bucket for a FIXED bucket
+    count (resizes re-bucket the whole table). The hash depends on
+    the column TYPES: murmur3 of int(7) and long(7) differ."""
+    return F.pmod(F.hash(*[qcol(c) for c in cols]), F.lit(n_buckets))
+
+
+def with_layout(
+    df: DataFrame,
+    day_col: str | None,
+    bucket_cols: list[str] | None,
+    n_buckets: int = 1,
+) -> DataFrame:
+    """Derive the layout key column(s) for a write: ``kb`` from
+    ``bucket_cols`` when given, ``day_pt`` from ``day_col`` when
+    given. try_to_date: an unparseable day reaches the caller's
+    admission check as a NULL day instead of raising an ANSI
+    DateTimeException mid-write. Session tz is pinned UTC by the
+    engine session factory; the day is a layout key, only compared
+    against values derived the same way."""
+    out = df
+    if bucket_cols:
+        out = out.withColumn(BUCKET_COL, bucket_expr(bucket_cols, n_buckets))
+    if day_col:
+        out = out.withColumn(DAY_COL, F.try_to_date(qcol(day_col)))
+    return out
+
+
+def has_layout_level(table_dir: str, col: str) -> bool:
+    """Whether ``col`` is PHYSICALLY a partition level of the table
+    at ``table_dir``: ``col=`` directories at the top, or — for the
+    bucket level — under the day directories."""
+    if _partition_dirs(table_dir, col):
+        return True
+    return col == BUCKET_COL and any(
+        _partition_dirs(d, BUCKET_COL) for d in _partition_dirs(table_dir, DAY_COL)
+    )
+
+
+def strip_layout(df: DataFrame, table_dir: str, strict: bool = False) -> DataFrame:
+    """``df`` (read from ``table_dir``) without its layout columns.
+    A ``day_pt``/``kb`` column is dropped only when it is physically
+    a partition level: managed writers reject data columns of those
+    names, so a layout-partitioned table's copies can never be user
+    data. A FLAT table carrying such a column is undecidable — a
+    demoted layout key or a genuine user column. Reads
+    (``strict=False``) return it untouched: hiding a possibly-genuine
+    column is destructive, reading it is not. Rewrites
+    (``strict=True``) refuse loudly instead of silently destroying
+    either."""
+    for col in (DAY_COL, BUCKET_COL):
+        if col not in df.columns:
+            continue
+        if has_layout_level(table_dir, col):
+            df = df.drop(col)
+        elif strict:
+            raise ValueError(
+                f"flat table {table_dir!r} carries a {col!r} column; "
+                f"cannot tell a demoted layout key from user data — "
+                f"rebuild the table (or rename the column) before writing to it"
+            )
+    return df
 
 
 def size_buckets(
@@ -146,3 +243,18 @@ def size_buckets(
     while n < cap and per_outer / n > target_bytes:
         n *= 2
     return n
+
+
+def sized_buckets(
+    table_dir: str, n_outer: int | None = None, data_bytes: int | None = None
+) -> int:
+    """:func:`size_buckets` for the table at ``table_dir``, from its
+    DATA bytes (checksums, ``_SUCCESS`` and the sidecar excluded).
+    ``n_outer`` defaults to the table's day-directory count;
+    ``data_bytes`` is the sidecar's cached size when the caller has
+    it, else the stat walk."""
+    if n_outer is None:
+        n_outer = count_partition_dirs(table_dir, DAY_COL)
+    if data_bytes is None:
+        data_bytes = dir_data_bytes(table_dir)
+    return size_buckets(data_bytes, n_outer)

@@ -52,6 +52,12 @@ is what makes the passes survive 100 TB:
    every other leaf — repair IO proportional to the touched key
    buckets, not the table. Without ``bucket_col`` the repairs keep
    the full rewrite — the reference's own contract.
+
+The layout rules — partition columns, day/bucket key derivation,
+physical-layout detection and stripping, bucket sizing — live in
+:mod:`streaming_data_lake_spark.layout`, shared with the MERGE sink;
+this module keeps its sidecar fields, its write arrangement and the
+day-span count of flat-table migrations.
 """
 
 from __future__ import annotations
@@ -68,11 +74,23 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from streaming_data_lake_spark.formats import resolve_format
+from streaming_data_lake_spark.layout import (
+    BUCKET_COL as KB_COL,
+    DAY_COL,
+    bucket_expr,
+    copy_layout_meta,
+    count_partition_dirs,
+    has_layout_level,
+    layout_cols,
+    read_layout_meta,
+    sized_buckets,
+    strip_layout,
+    with_layout,
+    write_layout_meta,
+)
 from streaming_data_lake_spark.locks import acquire_flock
 from streaming_data_lake_spark.overlay import (
     atomic_swap,
-    has_partition_dirs,
     heal_missing_base,
     link_untouched_partitions,
     link_untouched_subpartitions,
@@ -218,32 +236,21 @@ class MatTarget:
     #: columns fall back to the full rewrite.
     bucket_col: str | None = None
     #: Bucket count for ``bucket_col`` layouts. ``None`` (default)
-    #: SIZES the count from the M1 load's bytes — floor 1, so toy
+    #: SIZES the count from the M1 load's data bytes — floor 1, so toy
     #: scale factors stop paying per-leaf write overhead for leaves
     #: that would hold ~200 rows, while 100 TB loads get enough
-    #: buckets for ~128 MB leaves (layout.size_buckets). The chosen
+    #: buckets for ~128 MB leaves (layout.sized_buckets). The chosen
     #: count is recorded in the table's ``_layout.json`` sidecar and
     #: honored by every later cycle; declaring a DIFFERENT explicit
     #: count against an existing table is a layout change and takes
     #: the migrating full rewrite.
     n_buckets: int | None = None
 
-
-#: Partition/bucket column names are the SHARED reserved-name
-#: contract across all managed tables (layout.py hosts them; the
-#: MERGE upsert sink uses the same names). DAY_COL is derived from
-#: the target's ts column at write time and dropped on read — an
-#: internal layout key, never part of the view contract. No leading
-#: underscore: Spark file listing hides `_`/`.`-prefixed paths.
-from streaming_data_lake_spark.layout import (  # noqa: E402
-    BUCKET_COL as KB_COL,
-    DAY_COL,
-    copy_layout_meta,
-    count_partition_dirs,
-    read_layout_meta,
-    size_buckets,
-    write_layout_meta,
-)
+    @property
+    def layout(self) -> list[str]:
+        """The mat table's partition columns: ``day_pt`` always,
+        ``kb`` for bucket_col targets."""
+        return layout_cols(day=True, kb=bool(self.bucket_col))
 
 
 class Materializer:
@@ -274,29 +281,7 @@ class Materializer:
             return self.spark.createDataFrame(
                 [], target.view(self.spark).schema
             )
-        df = self._read_raw(name)
-        if DAY_COL in df.columns:
-            df = df.drop(DAY_COL)
-        # kb is dropped only when it is PHYSICALLY the second layout
-        # level (same layout-scoped rule as sources/upsert.read_upsert:
-        # a flat/day-only table with a genuine 'kb' data column reads
-        # back intact).
-        if KB_COL in df.columns and self._kb_is_layout(self._mat_dir(name)):
-            df = df.drop(KB_COL)
-        return df
-
-    @staticmethod
-    def _kb_is_layout(mat_dir: str) -> bool:
-        """Whether the table physically carries the ``kb=`` bucket
-        level under its day partitions."""
-        try:
-            for e in os.listdir(mat_dir):
-                d = os.path.join(mat_dir, e)
-                if e.startswith(f"{DAY_COL}=") and os.path.isdir(d):
-                    return has_partition_dirs(d, KB_COL)
-        except OSError:
-            pass
-        return False
+        return strip_layout(self._read_raw(name), self._mat_dir(name))
 
     def _has_layout(self, mat_dir: str, target: MatTarget) -> bool:
         """Whether ``mat_dir`` matches the target's DECLARED layout:
@@ -310,7 +295,7 @@ class Materializer:
         physical checks alone cannot tell which column the buckets
         were hashed on. A table with no sidecar (pre-sidecar legacy,
         foreign rewrite) is layout-unknown: also migrate."""
-        if not has_partition_dirs(mat_dir, DAY_COL):
+        if not has_layout_level(mat_dir, DAY_COL):
             return False
         meta = read_layout_meta(mat_dir)
         if meta is None or meta.get("bucket_col") != target.bucket_col:
@@ -321,8 +306,8 @@ class Materializer:
                 and meta.get("n_buckets") != target.n_buckets
             ):
                 return False
-            return self._kb_is_layout(mat_dir)
-        return not self._kb_is_layout(mat_dir)
+            return has_layout_level(mat_dir, KB_COL)
+        return not has_layout_level(mat_dir, KB_COL)
 
     def _resolve_buckets(self, mat_dir: str, target: MatTarget) -> int:
         """The bucket count every pass of this cycle must use: the
@@ -334,21 +319,16 @@ class Materializer:
         return int(read_layout_meta(mat_dir)["n_buckets"])
 
     def _sized_buckets(
-        self,
-        mat_dir: str,
-        target: MatTarget,
-        df_for_day_span: DataFrame | None = None,
+        self, mat_dir: str, target: MatTarget, df_for_day_span: DataFrame
     ) -> int:
-        """Bucket count for a (re)build of ``mat_dir``: the explicit
-        declaration, else sized from the existing table's bytes
-        (layout.size_buckets; emulation-scale stat walk — a format
-        reads this from manifest statistics)."""
+        """Bucket count for a migrating rebuild of ``mat_dir``: the
+        explicit declaration, else sized from the existing table's
+        data bytes (layout.sized_buckets; emulation-scale stat walk —
+        a format reads this from manifest statistics)."""
         if target.n_buckets is not None:
             return target.n_buckets
-        from streaming_data_lake_spark.plans.maintenance import dir_bytes
-
         n_days = count_partition_dirs(mat_dir, DAY_COL)
-        if n_days == 0 and df_for_day_span is not None:
+        if n_days == 0:
             # FLAT-table migration (r17 review): no day dirs exist
             # yet, so byte-based sizing would treat the whole table
             # as ONE day and pick a bucket count that, once the data
@@ -363,7 +343,7 @@ class Materializer:
                 ).head()["d"]
                 or 1
             )
-        return size_buckets(dir_bytes(mat_dir), max(1, n_days))
+        return sized_buckets(mat_dir, n_days)
 
     def _mat_meta(self, target: MatTarget, n_buckets: int) -> dict:
         return {
@@ -373,33 +353,14 @@ class Materializer:
         }
 
     @staticmethod
-    def _with_day(df: DataFrame, ts_col: str) -> DataFrame:
-        # Session tz is pinned UTC by the engine session factory, and
-        # the derivation is only ever compared against values derived
-        # the same way in the same process — the column is a layout
-        # key, not a semantic output.
-        return df.withColumn(DAY_COL, F.to_date(F.col(ts_col)))
-
-    @staticmethod
-    def _layout_cols(target: MatTarget) -> list[str]:
-        return [DAY_COL, KB_COL] if target.bucket_col else [DAY_COL]
-
-    def _with_layout(
-        self, df: DataFrame, target: MatTarget, n_buckets: int
-    ) -> DataFrame:
-        """Derive the layout key column(s) for a write. The kb hash is
-        Spark's seeded murmur3 — deterministic across sessions, so a
-        row and any later repair keyed on the same value always land
-        in the same bucket (the upsert sink's invariant), for a FIXED
-        bucket count: ``n_buckets`` MUST be the table's recorded
-        count (a rebuild may choose a new one — atomically, sidecar
-        and data in one swap)."""
-        out = self._with_day(df, target.ts_col)
-        if target.bucket_col:
-            out = out.withColumn(
-                KB_COL, F.pmod(F.hash(F.col(target.bucket_col)), F.lit(n_buckets))
-            )
-        return out
+    def _with_layout(df: DataFrame, target: MatTarget, n_buckets: int) -> DataFrame:
+        """The target's layout key column(s) for a write. ``n_buckets``
+        MUST be the table's recorded count — a row and any later
+        repair keyed on the same value land in the same bucket only
+        for a fixed count (a rebuild may choose a new one —
+        atomically, sidecar and data in one swap)."""
+        cols = [target.bucket_col] if target.bucket_col else None
+        return with_layout(df, target.ts_col, cols, n_buckets)
 
     # Watermarks are per-table single-row CONTROL metadata, like the
     # reference's ``materialization_watermarks`` (materialize.sh:66-71)
@@ -412,19 +373,17 @@ class Materializer:
     # are epoch micros: Python-side timestamp conversion goes through
     # the driver OS timezone, where naive values shift across DST
     # boundaries when the lookback arithmetic re-enters a plan
-    # literal; micros are TZ-free. Legacy parquet watermark tables
-    # (written by the pre-r9 MERGE path, possibly inside durable
-    # artifact lakes) are read once and migrated on the next set.
+    # literal; micros are TZ-free.
 
     def _wm_json_path(self) -> str:
         return os.path.join(self.wm_dir, "_watermarks.json")
 
     def _read_wm_map(self) -> dict[str, int] | None:
         """name -> epoch micros, or None when no JSON store exists
-        yet (absent lake, or a legacy parquet-only store). A corrupt
-        file of the WRONG JSON shape (array/scalar at top level,
-        non-numeric values) is treated the same as malformed JSON —
-        absent — rather than crashing every maintenance cycle."""
+        yet. A corrupt file of the WRONG JSON shape (array/scalar at
+        top level, non-numeric values) is treated the same as
+        malformed JSON — absent — rather than crashing every
+        maintenance cycle."""
         try:
             with open(self._wm_json_path()) as fh:
                 data = json.load(fh)
@@ -433,32 +392,6 @@ class Materializer:
             return {str(k): int(v) for k, v in data.items()}
         except (OSError, ValueError, TypeError):
             return None
-
-    def _read_legacy_wm_table(self) -> dict[str, int]:
-        """The pre-r9 parquet watermark table, as a micros map."""
-        rows = (
-            resolve_format(self.spark)
-            .read_table(self.spark, self.wm_dir)
-            .select(
-                "table_name",
-                F.unix_micros(F.col("last_materialized_at")).alias("us"),
-            )
-            .collect()
-        )
-        return {r["table_name"]: int(r["us"]) for r in rows}
-
-    def _has_legacy_wm_table(self) -> bool:
-        """Whether wm_dir holds pre-r9 parquet DATA (hidden entries
-        and sidecars alone don't count: a dir with only _layout.json
-        has nothing to read, and returning True would crash the
-        schema-less parquet read instead of yielding 'no
-        watermark')."""
-        try:
-            return any(
-                not e.startswith((".", "_")) for e in os.listdir(self.wm_dir)
-            )
-        except OSError:
-            return False
 
     # -- M4 append intent journal ---------------------------------------
     #
@@ -587,12 +520,7 @@ class Materializer:
 
     def get_watermark(self, name: str) -> dt.datetime | None:
         """Returns the watermark as an AWARE-UTC datetime."""
-        m = self._read_wm_map()
-        if m is None:
-            if not self._has_legacy_wm_table():
-                return None
-            m = self._read_legacy_wm_table()
-        us = m.get(name)
+        us = (self._read_wm_map() or {}).get(name)
         return _utc_from_micros(us) if us is not None else None
 
     def _set_watermark(self, name: str, ts: dt.datetime) -> None:
@@ -611,11 +539,7 @@ class Materializer:
         os.makedirs(self.wm_dir, exist_ok=True)
         lock_fh = acquire_flock(self._wm_json_path() + ".lock", "watermark store")
         try:
-            m = self._read_wm_map()
-            if m is None:
-                # First JSON write: fold in any legacy parquet rows so
-                # other targets' watermarks survive the migration.
-                m = self._read_legacy_wm_table() if self._has_legacy_wm_table() else {}
+            m = self._read_wm_map() or {}
             m[name] = (ts - _EPOCH_UTC) // dt.timedelta(microseconds=1)
             tmp = self._wm_json_path() + f".tmp_{os.getpid()}"
             with open(tmp, "w") as fh:
@@ -629,9 +553,7 @@ class Materializer:
         """The watermark state as a queryable DataFrame — the
         reference exposes ``materialization_watermarks`` as a table;
         the JSON store keeps that surface available."""
-        m = self._read_wm_map()
-        if m is None:
-            m = self._read_legacy_wm_table() if self._has_legacy_wm_table() else {}
+        m = self._read_wm_map() or {}
         return self.spark.createDataFrame(
             [(k, _utc_from_micros(v)) for k, v in sorted(m.items())],
             "table_name string, last_materialized_at timestamp",
@@ -740,7 +662,8 @@ class Materializer:
         from streaming_data_lake_spark.functions.parity import admissible_ts
 
         view = view.filter(admissible_ts(F.col(target.ts_col)))
-        for reserved in self._layout_cols(target):
+        layout = target.layout
+        for reserved in layout:
             if reserved in view.columns:
                 # Checked BEFORE M1 too: _with_layout's withColumn
                 # would silently replace a user column of the same
@@ -751,7 +674,6 @@ class Materializer:
                 )
         mat_dir = self._mat_dir(target.name)
         ts = F.col(target.ts_col)
-        layout = self._layout_cols(target)
 
         if not os.path.exists(mat_dir):  # M1 full load
             if view.isEmpty():
@@ -791,22 +713,9 @@ class Materializer:
                 # leaves (or have nothing to link) and M4 appends
                 # would produce a mixed layout that breaks partition
                 # discovery. Re-establish the declared layout with
-                # one atomic full rewrite first.
-                flat = self.read_mat(target.name)
-                raw_cols = set(self._read_raw(target.name).columns)
-                for col in (DAY_COL, KB_COL):
-                    if col in raw_cols and not (
-                        has_partition_dirs(mat_dir, col)
-                        or (col == KB_COL and self._kb_is_layout(mat_dir))
-                    ):
-                        # Demoted layout key or genuine user column?
-                        # Not decidable — refuse instead of silently
-                        # dropping.
-                        raise ValueError(
-                            f"flat mat table {target.name!r} carries a "
-                            f"{col!r} column; rebuild it before running "
-                            f"maintenance cycles against it"
-                        )
+                # one atomic full rewrite first. A flat table carrying
+                # a day_pt/kb DATA column is refused (strict).
+                flat = strip_layout(self._read_raw(target.name), mat_dir, strict=True)
                 n = self._sized_buckets(
                     mat_dir, target, df_for_day_span=flat
                 ) if target.bucket_col else 1
@@ -1128,7 +1037,7 @@ class Materializer:
         day-only targets). Auto-sized bucket targets (``n_buckets``
         None) cannot know the right count before the bytes exist, so
         the load STAGES day-partitioned parquet first, sizes from the
-        staged bytes (layout.size_buckets — floor 1), then
+        staged data bytes (layout.sized_buckets — floor 1), then
         establishes the kb level: at toy scale (count 1) that is a
         pure file move, no second job; a count > 1 pays one
         re-bucketing pass over the staged COMPACT parquet (one
@@ -1140,20 +1049,15 @@ class Materializer:
             staged = tmp_sibling(mat_dir)
             self._layout_write(
                 self._with_layout(view, target, n), target
-            ).write.mode("overwrite").partitionBy(*self._layout_cols(target)).parquet(
-                staged
-            )
+            ).write.mode("overwrite").partitionBy(*target.layout).parquet(staged)
             write_layout_meta(staged, self._mat_meta(target, n))
             os.rename(staged, mat_dir)
             return n
-        from streaming_data_lake_spark.plans.maintenance import dir_bytes
-
         staged = tmp_sibling(mat_dir)
-        self._with_day(view, target.ts_col).sortWithinPartitions(
+        with_layout(view, target.ts_col, None).sortWithinPartitions(
             DAY_COL
         ).write.mode("overwrite").partitionBy(DAY_COL).parquet(staged)
-        n_days = max(1, count_partition_dirs(staged, DAY_COL))
-        n = size_buckets(dir_bytes(staged), n_days)
+        n = sized_buckets(staged)
         if n == 1:
             # kb is the constant 0: each day's files ARE its single
             # leaf — move them under kb=0 without another Spark job
@@ -1170,7 +1074,7 @@ class Materializer:
         else:
             rebucketed = tmp_sibling(mat_dir)
             df = self.spark.read.parquet(staged).withColumn(
-                KB_COL, F.pmod(F.hash(F.col(target.bucket_col)), F.lit(n))
+                KB_COL, bucket_expr([target.bucket_col], n)
             )
             df.repartition(F.col(DAY_COL), F.col(KB_COL)).write.mode(
                 "overwrite"
@@ -1216,11 +1120,10 @@ class Materializer:
         layout keys are re-derived with ``n_buckets`` (the recorded
         count, or the count a migration newly establishes — sidecar
         and data publish in the same atomic swap)."""
-        layout = self._layout_cols(target)
         tmp = tmp_sibling(path)
         self._layout_write(self._with_layout(df, target, n_buckets), target).write.mode(
             "overwrite"
-        ).partitionBy(*layout).parquet(tmp)
+        ).partitionBy(*target.layout).parquet(tmp)
         write_layout_meta(tmp, self._mat_meta(target, n_buckets))
         self._guard_nonempty_publish(path, tmp, "full rewrite")
         atomic_swap(path, tmp)
@@ -1237,7 +1140,7 @@ class Materializer:
         The publish is the same single atomic swap as a full rewrite,
         so the crash-recovery contract (remove_orphans' restore rule)
         is unchanged."""
-        layout = self._layout_cols(target)
+        layout = target.layout
         tmp = tmp_sibling(path)
         # The repair set is window-sized: one task per rewritten leaf
         # keeps it at one file.
@@ -1279,7 +1182,7 @@ class Materializer:
         # bucket derivation and the anti-join to one type.
         key_type = mat_raw.schema[key_col].dataType
         changed = changed.select(F.col(key_col).cast(key_type).alias(key_col))
-        kb_of = F.pmod(F.hash(F.col(key_col)), F.lit(n_buckets))
+        kb_of = bucket_expr([key_col], n_buckets)
         touched = sorted(
             r[0] for r in changed.select(kb_of.alias("b")).distinct().collect()
         )

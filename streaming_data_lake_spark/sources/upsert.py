@@ -45,7 +45,11 @@ VERDICT r8 "What's wrong" #3). A merge whose DECLARED layout (keys /
 ts_col / explicit bucket count) disagrees with the recorded spec —
 or a table with no sidecar at all (legacy, foreign rewrite) —
 migrates with one atomic full rewrite instead of probing buckets by
-the wrong hash.
+the wrong hash. The layout rules themselves — partition columns,
+day/bucket key derivation, physical-layout detection and stripping,
+bucket sizing — live in :mod:`streaming_data_lake_spark.layout`,
+shared with the materializer; this module keeps its sidecar fields
+and its write arrangement.
 
 Key columns are NON-NULL (primary-key semantics, as in the
 reference's Iceberg ``identifier_fields``), and the sink ENFORCES
@@ -73,51 +77,23 @@ from pyspark.sql import functions as F
 from streaming_data_lake_spark.layout import (
     BUCKET_COL,
     DAY_COL,
-    count_partition_dirs,
     dir_data_bytes,
+    layout_cols,
+    qcol,
     read_layout_meta,
-    size_buckets,
+    sized_buckets,
+    strip_layout,
+    with_layout,
     write_layout_meta,
 )
 from streaming_data_lake_spark.locks import acquire_flock
 from streaming_data_lake_spark.overlay import (
     atomic_swap,
-    has_partition_dirs,
     heal_missing_base,
     link_untouched_leaves,
     link_untouched_partitions,
     tmp_sibling,
 )
-
-
-def _layout_cols(ts_col: str | None) -> list[str]:
-    return [DAY_COL, BUCKET_COL] if ts_col else [BUCKET_COL]
-
-
-def _qcol(name: str) -> Column:
-    """Column reference that takes ``name`` LITERALLY: a bare
-    F.col("a.b") parses as a nested path, so key/payload names
-    containing dots or backticks would misresolve. Backtick-quote
-    (`` escapes a literal backtick) at every by-name reference in the
-    merge path (ADVICE r10 class, extended from _last_writer_wins to
-    the whole sink)."""
-    return F.col("`" + name.replace("`", "``") + "`")
-
-
-def _with_layout(
-    df: DataFrame, keys: list[str], ts_col: str | None, n_buckets: int
-) -> DataFrame:
-    # Spark's hash() is seeded murmur3 — deterministic across
-    # sessions and processes, so an existing row and its update
-    # always land in the same bucket (for a FIXED bucket count;
-    # resizes re-bucket the whole table).
-    out = df.withColumn(BUCKET_COL, F.pmod(F.hash(*[_qcol(k) for k in keys]), F.lit(n_buckets)))
-    if ts_col:
-        # try_to_date: an unparseable ts must reach the fused
-        # null-day GATE as a NULL day (one uniform ValueError) rather
-        # than explode as an ANSI DateTimeException mid-write.
-        out = out.withColumn(DAY_COL, F.try_to_date(_qcol(ts_col)))
-    return out
 
 
 def _meta(
@@ -131,24 +107,10 @@ def _meta(
     }
 
 
-def _desired_buckets(
-    table_dir: str, ts_col: str | None, current: int, data_bytes: int | None
-) -> int:
-    """Grow-only sizing: the smallest power-of-two bucket count whose
-    average leaf fits the target, never below the current count
-    (shrinking would re-bucket for no IO win). ``data_bytes`` is the
-    sidecar's cached table size; only a legacy sidecar without the
-    cache (one publish, at most) falls back to the stat walk."""
-    n_outer = count_partition_dirs(table_dir, DAY_COL) if ts_col else 1
-    if data_bytes is None:
-        data_bytes = dir_data_bytes(table_dir)
-    return max(current, size_buckets(data_bytes, n_outer))
-
-
 def _null_key_check_col(keys: list[str], ts_col: str | None = None) -> Column:
-    pred = _qcol(keys[0]).isNull()
+    pred = qcol(keys[0]).isNull()
     for k in keys[1:]:
-        pred = pred | _qcol(k).isNull()
+        pred = pred | qcol(k).isNull()
     if ts_col:
         # A NON-null ts whose to_date() is NULL (an unparseable string
         # date) evades the key check but produces a NULL day_pt (r17
@@ -161,7 +123,7 @@ def _null_key_check_col(keys: list[str], ts_col: str | None = None) -> Column:
         # plain to_date THROWS DateTimeException mid-probe on the
         # unparseable value — the gate's job is to surface the
         # CONTRACT error uniformly across ANSI settings.
-        pred = pred | F.try_to_date(_qcol(ts_col)).isNull()
+        pred = pred | F.try_to_date(qcol(ts_col)).isNull()
     return pred
 
 
@@ -193,23 +155,7 @@ def read_upsert(spark: SparkSession, table_dir: str) -> DataFrame:
     is not). The engine's own maintenance preserves the layout
     (compaction is partition-aware), so managed tables never reach
     the flat case."""
-    df = spark.read.parquet(table_dir)
-    if DAY_COL in df.columns and has_partition_dirs(table_dir, DAY_COL):
-        # Two-level table: kb dirs live under the day dirs.
-        day_dirs = [
-            os.path.join(table_dir, e)
-            for e in os.listdir(table_dir)
-            if e.startswith(f"{DAY_COL}=") and os.path.isdir(os.path.join(table_dir, e))
-        ]
-        drop = [DAY_COL]
-        if BUCKET_COL in df.columns and any(
-            has_partition_dirs(d, BUCKET_COL) for d in day_dirs
-        ):
-            drop.append(BUCKET_COL)
-        return df.drop(*drop)
-    if BUCKET_COL in df.columns and has_partition_dirs(table_dir, BUCKET_COL):
-        return df.drop(BUCKET_COL)
-    return df
+    return strip_layout(spark.read.parquet(table_dir), table_dir)
 
 
 def _leaf_predicate(pairs: list[tuple[object, int]]) -> Column:
@@ -245,8 +191,8 @@ def _last_writer_wins(updates: DataFrame, keys: list[str]) -> DataFrame:
         return updates.dropDuplicates(keys)
 
     # Every by-name reference takes the column name LITERALLY
-    # (module rule, _qcol); getField on extraction.
-    q = _qcol
+    # (module rule, qcol); getField on extraction.
+    q = qcol
 
     from pyspark.sql.types import MapType
 
@@ -455,8 +401,8 @@ def _merge_upsert_locked(
         # silently duplicate them. Migrate: merge + re-layout the
         # whole table in one atomic swap.
         _check_null_keys()
-        current = _read_sans_layout(spark, table_dir)
-        keep_all = current.join(updates.select(*[_qcol(k) for k in keys]), on=keys, how="left_anti")
+        current = strip_layout(spark.read.parquet(table_dir), table_dir, strict=True)
+        keep_all = current.join(updates.select(*[qcol(k) for k in keys]), on=keys, how="left_anti")
         merged = keep_all.unionByName(updates)
         n = n_buckets or (meta or {}).get("n_buckets") or 1
         _publish_full(spark, table_dir, merged, keys, ts_col, n, exists=True)
@@ -466,14 +412,18 @@ def _merge_upsert_locked(
 
     n = int(meta["n_buckets"])
     if n_buckets is None:
-        desired = _desired_buckets(table_dir, ts_col, n, meta.get("data_bytes"))
+        # Grow-only: a sized count at or below the recorded one changes
+        # nothing (shrinking would re-bucket for no IO win). Sized
+        # from the sidecar's cached data_bytes; only a legacy sidecar
+        # without the cache (one publish, at most) pays the stat walk.
+        desired = sized_buckets(table_dir, None if ts_col else 1, meta.get("data_bytes"))
         if desired > n:
             # Amortized resize: re-bucket the whole table (merge
             # folded in) at the doubled count — pmod(hash, N) changes
             # with N, so growth is necessarily a full rewrite.
             _check_null_keys()
-            current = _read_sans_layout(spark, table_dir)
-            keep_all = current.join(updates.select(*[_qcol(k) for k in keys]), on=keys, how="left_anti")
+            current = strip_layout(spark.read.parquet(table_dir), table_dir, strict=True)
+            keep_all = current.join(updates.select(*[qcol(k) for k in keys]), on=keys, how="left_anti")
             _publish_full(
                 spark, table_dir, keep_all.unionByName(updates), keys, ts_col,
                 desired, exists=True,
@@ -487,7 +437,7 @@ def _merge_upsert_locked(
     # plain distinct and keeps the contract check off the hot path's
     # job count.
     any_null = _null_key_check_col(keys, ts_col)
-    updates_b = _with_layout(updates, keys, ts_col, n).cache()
+    updates_b = with_layout(updates, ts_col, keys, n).cache()
     try:
         if ts_col:
             # Bounded control-flow collect: distinct (day, bucket)
@@ -506,7 +456,7 @@ def _merge_upsert_locked(
             pairs = [(r[0], r[1]) for r in probe]
             keep = spark.read.parquet(table_dir).filter(
                 _leaf_predicate(pairs)
-            ).join(updates_b.select(*[_qcol(k) for k in keys]), on=keys, how="left_anti")
+            ).join(updates_b.select(*[qcol(k) for k in keys]), on=keys, how="left_anti")
             rewritten = {
                 (f"{DAY_COL}={d}", f"{BUCKET_COL}={b}") for d, b in pairs
             }
@@ -529,14 +479,14 @@ def _merge_upsert_locked(
             touched = sorted(r[0] for r in probe)
             keep = spark.read.parquet(table_dir).filter(
                 F.col(BUCKET_COL).isin(touched)
-            ).join(updates_b.select(*[_qcol(k) for k in keys]), on=keys, how="left_anti")
+            ).join(updates_b.select(*[qcol(k) for k in keys]), on=keys, how="left_anti")
             rewritten = {f"{BUCKET_COL}={b}" for b in touched}
             replaced_dirs = [os.path.join(table_dir, b) for b in rewritten]
         # Anti-join keys come off the CACHED updates_b plan — the raw
         # `updates` plan would not match the cache and the batch
         # transform would recompute in the write job.
         merged = keep.unionByName(updates_b)
-        layout = _layout_cols(ts_col)
+        layout = layout_cols(day=bool(ts_col), kb=True)
         tmp = tmp_sibling(table_dir)
         # One task per rewritten leaf -> one file per leaf:
         # emulation-scale file hygiene (a real format's merge
@@ -567,34 +517,6 @@ def _merge_upsert_locked(
         updates_b.unpersist()
 
 
-def _read_sans_layout(spark: SparkSession, table_dir: str) -> DataFrame:
-    """The live table's DATA columns for a migrating rewrite: layout
-    columns are stripped only when physically part of the directory
-    layout; a flat table carrying a reserved-name DATA column is the
-    undecidable case (demoted layout key vs genuine user column) —
-    refuse loudly instead of silently destroying either."""
-    df = spark.read.parquet(table_dir)
-    two_level = has_partition_dirs(table_dir, DAY_COL)
-    kb_layout = has_partition_dirs(table_dir, BUCKET_COL) or (
-        two_level
-        and any(
-            has_partition_dirs(os.path.join(table_dir, e), BUCKET_COL)
-            for e in os.listdir(table_dir)
-            if e.startswith(f"{DAY_COL}=") and os.path.isdir(os.path.join(table_dir, e))
-        )
-    )
-    for col, is_layout in ((DAY_COL, two_level), (BUCKET_COL, kb_layout)):
-        if col in df.columns:
-            if not is_layout:
-                raise ValueError(
-                    f"flat table {table_dir!r} carries a {col!r} column; "
-                    f"cannot tell a demoted layout key from user data — "
-                    f"rebuild the table (or rename the column) before merging"
-                )
-            df = df.drop(col)
-    return df
-
-
 def _publish_full(
     spark: SparkSession,
     table_dir: str,
@@ -607,8 +529,8 @@ def _publish_full(
     """Full-table publish under the declared layout (initial load,
     migration, or resize), with the sidecar riding the same atomic
     rename as the data."""
-    layout = _layout_cols(ts_col)
-    out = _with_layout(df, keys, ts_col, n_buckets)
+    layout = layout_cols(day=bool(ts_col), kb=True)
+    out = with_layout(df, ts_col, keys, n_buckets)
     tmp = tmp_sibling(table_dir)
     out.repartition(*[F.col(c) for c in layout]).write.mode("overwrite").partitionBy(
         *layout
@@ -629,11 +551,11 @@ def _maybe_grow(
     published data already outgrew its bucket count (e.g. a huge
     initial batch at 1 bucket), re-bucket once at the sized count."""
     meta = read_layout_meta(table_dir)
-    n = int(meta["n_buckets"])
-    desired = _desired_buckets(table_dir, ts_col, n, meta.get("data_bytes"))
-    if desired > n:
+    desired = sized_buckets(table_dir, None if ts_col else 1, meta.get("data_bytes"))
+    if desired > int(meta["n_buckets"]):
         _publish_full(
-            spark, table_dir, _read_sans_layout(spark, table_dir),
+            spark, table_dir,
+            strip_layout(spark.read.parquet(table_dir), table_dir, strict=True),
             keys, ts_col, desired, exists=True,
         )
 

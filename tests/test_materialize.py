@@ -814,6 +814,48 @@ def test_bucket_layout_m1_one_file_per_leaf(spark, tmp_path):
         assert len(inos) == 1, f"leaf {leaf} has {len(inos)} files"
 
 
+def test_m1_sizes_buckets_from_data_bytes_like_the_merge_sink(spark, tmp_path, monkeypatch):
+    """An auto-sized bucket_col target sizes its M1 bucket count from
+    DATA bytes only, the rule the MERGE sink sizes by: checksum files,
+    _SUCCESS and the sidecar are metadata, not table size. With the
+    leaf target shrunk to just above the data bytes, counting the
+    hidden files as well would cross the power-of-two boundary and
+    record 2 buckets."""
+    import streaming_data_lake_spark.layout as layout_mod
+    from streaming_data_lake_spark.layout import (
+        count_partition_dirs,
+        dir_data_bytes,
+        read_layout_meta,
+        size_buckets,
+    )
+
+    src = str(tmp_path / "src")
+    _write_events(spark, src, [
+        (i, _ts(f"2024-01-01 {i % 24:02d}:00:00"), i % 7, float(i)) for i in range(200)
+    ])
+
+    def load(lake):
+        target = MatTarget("mat_sz", lambda s: s.read.parquet(src), "ts", bucket_col="id")
+        Materializer(spark, lake).run(target)
+        return os.path.join(lake, "mat_sz")
+
+    # calibration load at the real target: one day, one bucket
+    data = dir_data_bytes(load(str(tmp_path / "calib")))
+    target_bytes = data + 4
+    monkeypatch.setattr(
+        layout_mod.size_buckets, "__defaults__", (target_bytes, layout_mod.MAX_BUCKETS)
+    )
+    mat_dir = load(str(tmp_path / "lake"))
+    recorded = read_layout_meta(mat_dir)["n_buckets"]
+    n_days = count_partition_dirs(mat_dir, layout_mod.DAY_COL)
+    # the MERGE sink's rule on the same bytes
+    merge_pick = size_buckets(dir_data_bytes(mat_dir), n_days)
+    assert recorded == merge_pick == 1, (recorded, merge_pick)
+    assert n_days == 1 and dir_data_bytes(mat_dir) == data
+    # the boundary is real: all files together exceed the target
+    assert size_buckets(dir_data_bytes(mat_dir, include_hidden=True), n_days) == 2
+
+
 def test_bucket_repair_multi_cycle_fuzz_matches_recompute(spark, tmp_path):
     """Five maintenance cycles over pseudo-random late facts + dim
     changes on a bucket_col target must converge to the from-scratch
@@ -1107,12 +1149,10 @@ def test_merge_upsert_auto_bucket_count_grows_by_doubling(spark, tmp_path, monke
     import random
 
     rng = random.Random(11)
-    import streaming_data_lake_spark.sources.upsert as upsert_mod
+    real = layout_mod.size_buckets
     monkeypatch.setattr(
-        upsert_mod, "size_buckets",
-        lambda total, n_outer, **kw: layout_mod.size_buckets(
-            total, n_outer, target_bytes=32 * 1024
-        ),
+        layout_mod, "size_buckets",
+        lambda total, n_outer, **kw: real(total, n_outer, target_bytes=32 * 1024),
     )
     big = spark.createDataFrame(
         [(i, "".join(rng.choices("abcdefghijklmnopqrstuvwxyz0123456789", k=200)))
@@ -1422,39 +1462,6 @@ def test_versioned_append_links_previous_version_files(spark, tmp_path):
     assert t.read(3).count() == 140
 
 
-def test_watermark_legacy_parquet_table_migrates_to_json(spark, tmp_path):
-    """Pre-r9 watermark state lived in a parquet MERGE table; the
-    JSON metadata store must READ that legacy state (no watermark
-    loss on durable lakes) and FOLD IT IN on the first set so other
-    targets' watermarks survive the migration."""
-    from streaming_data_lake_spark.sources.upsert import merge_upsert
-
-    lake = str(tmp_path / "lake")
-    os.makedirs(lake, exist_ok=True)
-    m = Materializer(spark, lake)
-    # the old writer's exact shape: a keyed MERGE table in wm_dir
-    legacy = spark.createDataFrame(
-        [("t_old", _ts("2024-02-01 10:00:00")), ("t_other", _ts("2024-02-02 12:00:00"))],
-        "table_name string, last_materialized_at timestamp",
-    )
-    merge_upsert(spark, m.wm_dir, legacy, ["table_name"])
-    assert not os.path.exists(m._wm_json_path())
-
-    got = m.get_watermark("t_old")
-    assert got is not None and got.isoformat().startswith("2024-02-01T10:00:00")
-    assert m.get_watermark("missing") is None
-
-    # first JSON write folds in ALL legacy rows
-    m._set_watermark("t_new", _ts("2024-03-01 00:00:00"))
-    assert os.path.exists(m._wm_json_path())
-    wm = {r["table_name"]: r["last_materialized_at"] for r in m.watermarks().collect()}
-    assert set(wm) == {"t_old", "t_other", "t_new"}
-    assert wm["t_other"].isoformat().startswith("2024-02-02T12:00:00")
-    # JSON now wins over the stale parquet leftovers
-    m._set_watermark("t_old", _ts("2024-04-01 00:00:00"))
-    assert m.get_watermark("t_old").isoformat().startswith("2024-04-01")
-
-
 def test_watermark_store_corrupt_or_sidecar_only_states(spark, tmp_path):
     """A corrupt _watermarks.json (wrong JSON shape) and a wm_dir
     holding only metadata sidecars must both degrade to 'no
@@ -1479,7 +1486,7 @@ def _wm_hammer(args):
     """Child-process worker for the watermark-concurrency test: each
     process upserts ITS OWN key n times against the shared store.
     Uses __new__ because _set_watermark's path never touches the
-    SparkSession (no legacy parquet present)."""
+    SparkSession."""
     lake, name, n = args
     from streaming_data_lake_spark.plans.materialize import Materializer
 
@@ -2188,7 +2195,7 @@ def test_flat_migration_sizes_buckets_by_real_day_span(spark, tmp_path, monkeypa
     day — after migration each (day x kb) leaf lands ~n_days times
     under the target (permanent small-files). The migration must size
     with the frame's REAL day span."""
-    import streaming_data_lake_spark.plans.materialize as mat_mod
+    import streaming_data_lake_spark.layout as layout_mod
 
     lake = str(tmp_path / "lake")
     src = os.path.join(lake, "src")
@@ -2209,13 +2216,13 @@ def test_flat_migration_sizes_buckets_by_real_day_span(spark, tmp_path, monkeypa
     m._set_watermark("mat_flatmig", _ts("2024-01-05 10:00:00"))
 
     seen = {}
-    real = mat_mod.size_buckets
+    real = layout_mod.size_buckets
 
     def capture(total_bytes, n_outer, *a, **kw):
         seen["n_outer"] = n_outer
         return real(total_bytes, n_outer, *a, **kw)
 
-    monkeypatch.setattr(mat_mod, "size_buckets", capture)
+    monkeypatch.setattr(layout_mod, "size_buckets", capture)
     log = m.run(target, lookback_hours=1)
     assert "layout" in log
     assert seen["n_outer"] == 5, (

@@ -36,3 +36,53 @@ def test_regression_trips_only_past_factor_and_floor():
     prev = {"a": {"warm": 1.0}, "b": {"warm": 0.1}}
     out = {"a": {"warm": 1.6}, "b": {"warm": 0.25}}
     assert judge(out, prev, 1.5) == ([], ["a: 1.0 -> 1.6"])
+
+
+def test_default_run_keeps_the_baseline_and_writes_only_the_local_file(
+    tmp_path, monkeypatch
+):
+    import json
+    import shutil
+
+    import registry_sweep
+
+    import streaming_data_lake_spark.queries as queries_mod
+    import streaming_data_lake_spark.session as session_mod
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    rel = os.path.join("plans", "r20", "REGISTRY_SWEEP.json")
+    baseline = tmp_path / rel
+    baseline.parent.mkdir(parents=True)
+    shutil.copyfile(os.path.join(repo, rel), baseline)
+    before = baseline.read_bytes()
+    names = sorted(json.loads(before)["queries"])[:3]
+
+    class _Ctx:
+        def setJobDescription(self, _desc):
+            pass
+
+    class _Spark:
+        sparkContext = _Ctx()
+
+    class _Frame:
+        def count(self):
+            return 1
+
+    class _Query:
+        def fn(self, spark, sf_dir):
+            return _Frame()
+
+    monkeypatch.setattr(session_mod, "get_spark", lambda *_a, **_kw: _Spark())
+    monkeypatch.setattr(queries_mod, "all_queries", lambda: {n: _Query() for n in names})
+    monkeypatch.setattr(registry_sweep, "REPO", str(tmp_path))
+
+    assert registry_sweep.main([]) == 0
+    assert baseline.read_bytes() == before
+    written = sorted(
+        os.path.relpath(os.path.join(d, f), tmp_path)
+        for d, _, fs in os.walk(tmp_path)
+        for f in fs
+    )
+    assert written == ["REGISTRY_SWEEP_local.json", rel]
+    local = json.loads((tmp_path / "REGISTRY_SWEEP_local.json").read_text())
+    assert sorted(local["queries"]) == names

@@ -10,18 +10,22 @@ recorded time is min (warm best-of-2). Durable artifact builds are
 counted per query. Host CPU probes bracket the sweep so a degraded
 window is visible in the artifact.
 
-Writes ``plans/<round>/REGISTRY_SWEEP.json`` and, when the previous
-round's artifact exists, prints a tripwire list of queries whose warm
-time grew more than ``--factor`` (default 1.5x) above the previous
-sweep with an absolute delta over 0.2 s (ignores sub-floor jitter).
-Exits non-zero on a tripwire, on any query that errored, and on any
-query the previous sweep timed that has no time now.
+Writes each run to ``REGISTRY_SWEEP_local.json`` at the repository
+root (gitignored) and judges it against the committed baseline
+``plans/r20/REGISTRY_SWEEP.json``, which it never overwrites: it
+prints a tripwire list of queries whose warm time grew more than
+``--factor`` (default 1.5x) above the baseline with an absolute delta
+over 0.2 s (ignores sub-floor jitter). Exits non-zero on a tripwire,
+on any query that errored, and on any query the baseline timed that
+has no time now. To move the baseline, copy a reviewed local run over
+it.
 
-Usage: python tools/registry_sweep.py [sf_dir] [--round rNN] [--factor 1.5]
+Usage: python tools/registry_sweep.py [sf_dir] [--factor 1.5]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -41,16 +45,12 @@ def cpu_probe() -> float:
     return round(time.monotonic() - t0, 3)
 
 
-def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    sf_dir = args[0] if args else "/root/testdata/sf0.1"
-    rnd = "r20"
-    factor = 1.5
-    for i, a in enumerate(sys.argv):
-        if a == "--round":
-            rnd = sys.argv[i + 1]
-        if a == "--factor":
-            factor = float(sys.argv[i + 1])
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description="Time every registered query.")
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.1")
+    ap.add_argument("--factor", type=float, default=1.5)
+    args = ap.parse_args(argv)
+    sf_dir, factor = args.sf_dir, args.factor
 
     from streaming_data_lake_spark.plans import artifacts
     from streaming_data_lake_spark.queries import all_queries
@@ -95,27 +95,21 @@ def main() -> int:
         "cpu_probe_post": post,
         "queries": out,
     }
-    dest = os.path.join(REPO, "plans", rnd, "REGISTRY_SWEEP.json")
-    os.makedirs(os.path.dirname(dest), exist_ok=True)
+    dest = os.path.join(REPO, "REGISTRY_SWEEP_local.json")
     with open(dest, "w") as fh:
         json.dump(payload, fh, indent=1, sort_keys=True)
     print(f"wrote {dest}")
 
-    prev_n = int(rnd[1:]) - 1
-    prev_path = os.path.join(REPO, "plans", f"r{prev_n}", "REGISTRY_SWEEP.json")
-    prev = None
-    if os.path.exists(prev_path):
-        with open(prev_path) as fh:
-            prev = json.load(fh)["queries"]
-    else:
-        print(f"no previous sweep at {prev_path} — baseline recorded")
+    baseline = os.path.join(REPO, "plans", "r20", "REGISTRY_SWEEP.json")
+    with open(baseline) as fh:
+        prev = json.load(fh)["queries"]
     failed, tripped = judge(out, prev, factor)
     if tripped:
-        print("TRIPWIRE (warm > %.1fx prev + 0.2s):" % factor)
+        print("TRIPWIRE (warm > %.1fx baseline + 0.2s):" % factor)
         for t in tripped:
             print("  " + t)
-    elif prev is not None:
-        print(f"tripwire clean vs r{prev_n}")
+    else:
+        print(f"tripwire clean vs {os.path.relpath(baseline, REPO)}")
     if failed:
         print("FAILED (no warm time):")
         for f in failed:

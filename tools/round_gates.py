@@ -71,11 +71,15 @@ Gates (fail-fast off: one red gate must not hide another):
                            non-zero append and zero duplicated keys
                            (r15 — pre-lock, both cycles staged the
                            same increment and double-appended)
- 15. bare-sweep @ sf0.01 — bare-session portability, twice
- 16. ledger              — latest driver verdicts: none failed, none orphaned
- 17. driver smoke        — __spark_entry__ entry/queries/oracle_sql
+ 15. orphan-race        — orphan sweep vs live publishers: a real
+                           remove_orphans loop races atomic_swap
+                           publishers and a reader; nothing young is
+                           swept and no reader sees a mixed snapshot
+ 16. bare-sweep @ sf0.01 — bare-session portability, twice
+ 17. ledger              — latest driver verdicts: none failed, none orphaned
+ 18. driver smoke        — __spark_entry__ entry/queries/oracle_sql
 
-The seventeen gates run in eight concurrent LANES (sequential within a
+The eighteen gates run in eight concurrent LANES (sequential within a
 lane) so the full suite fits the round budget without dropping
 coverage (VERDICT r11 #8; rebalanced to four when the skew and
 time-edge gates landed and the shuffle subset grew, VERDICT r12 #8;
@@ -92,11 +96,12 @@ note and the runner continues (ADVICE r11: an uncaught
 TimeoutExpired would crash the runner and hide later gates).
 
 Usage: python tools/round_gates.py [--serial]
-           [--skip pytest,sf01,sf1,edge,empty,shuffle,nonfinite,skew,timeedge,hugedoc,rowscale,allnull,dupkeys,matrace,bare,ledger,smoke]
+           [--skip pytest,sf01,sf1,edge,empty,shuffle,nonfinite,skew,timeedge,hugedoc,rowscale,allnull,dupkeys,matrace,orphanrace,bare,ledger,smoke]
 """
 
 from __future__ import annotations
 
+import argparse
 import functools
 import os
 import subprocess
@@ -240,19 +245,26 @@ def run_gate(name: str, cmd: list[str], needle: str) -> tuple[str, bool, float, 
     return (name, ok, dt, tail[0][:100])
 
 
-def main() -> int:
-    skip: set[str] = set()
-    serial = False
-    args = sys.argv[1:]
-    for i, arg in enumerate(args):
-        if arg == "--serial":
-            serial = True
-        if arg.startswith("--skip"):
-            # accept both --skip=a,b and --skip a,b
-            raw = arg.split("=", 1)[1] if "=" in arg else (
-                args[i + 1] if i + 1 < len(args) else ""
-            )
-            skip = {_SKIP_ALIASES.get(s, s) for s in raw.split(",") if s}
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(
+        description="Run every round-end gate and print GREEN/RED.",
+    )
+    ap.add_argument(
+        "--serial", action="store_true", help="run the gates one at a time"
+    )
+    ap.add_argument(
+        "--skip",
+        default="",
+        metavar="A,B",
+        help="comma-separated gates to skip, by alias or name: "
+        + ", ".join(
+            sorted(_SKIP_ALIASES)
+            + [n for n, *_ in GATES if n not in _SKIP_ALIASES.values()]
+        ),
+    )
+    args = ap.parse_args(argv)
+    serial = args.serial
+    skip = {_SKIP_ALIASES.get(s, s) for s in args.skip.split(",") if s}
     known = {name for name, _cmd, _needle, _lane in GATES}
     unknown = skip - known
     if unknown:
@@ -288,7 +300,7 @@ def main() -> int:
     print()
     red = [n for n, ok, _dt, _t in results if not ok]
     total = sum(dt for _n, _ok, dt, _t in results)
-    mode = "serial" if serial else f"{'1' if serial else str(len({g[3] for g in todo}))} lanes"
+    mode = "serial" if serial else f"{len({g[3] for g in todo})} lanes"
     if red:
         print(f"GATES RED (wall {wall:.0f}s, cpu-serial {total:.0f}s, {mode}): {', '.join(red)}")
         return 1
