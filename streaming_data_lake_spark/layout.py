@@ -5,11 +5,10 @@ fields in table metadata; Delta: ``partitionColumns`` in the log) so
 writers never have to GUESS how an existing table is bucketed. The
 parquet emulation previously inferred layout from the physical
 directory tree alone, which cannot distinguish "bucketed on column X
-with N buckets" from "bucketed on column Y with M buckets" — the
-exact hazard ADVICE r7 flagged for :mod:`plans.materialize`
-(``_has_layout``): a target whose ``bucket_col`` changed would probe
-buckets by the new column's hash while rows were laid out by the old
-one, silently missing stale rows.
+with N buckets" from "bucketed on column Y with M buckets": a
+:mod:`plans.materialize` target whose ``bucket_col`` changed would
+probe buckets by the new column's hash while rows were laid out by
+the old one, silently missing stale rows.
 
 This module is that metadata: a ``_layout.json`` sidecar inside the
 table directory (underscore-prefixed, so Spark's file listing ignores
@@ -23,7 +22,7 @@ The sidecar is only ever written into a not-yet-published directory
 staging dir), so readers never observe a half-updated spec — the
 same publication rule as the data itself.
 
-Bucket-count sizing (VERDICT r7 "Next round" #3): the count is not a
+Bucket-count sizing: the count is not a
 constant but a function of table size, ``ceil_pow2(bytes_per_outer /
 TARGET_LEAF_BYTES)`` with a floor of 1 — at sf0.01 a keyed table gets
 1 bucket (30 leaves instead of 480, so toy-scale maintenance cycles
@@ -41,7 +40,7 @@ real format reading size statistics from manifests/log instead of
 walking the filesystem. The MERGE sink's per-batch sizing check
 reads this cached figure and stats only the leaves it actually
 replaced, so the per-micro-batch cost is O(touched leaves), not
-O(table files) (VERDICT r8 "What's wrong" #3).
+O(table files).
 
 Both keyed writers — the MERGE sink (:mod:`sources.upsert`) and the
 materializer (:mod:`plans.materialize`) — take every rule of the
@@ -51,12 +50,18 @@ shared on-disk layout from here: the layout column list
 (:func:`has_layout_level`, :func:`strip_layout`) and data-byte bucket
 sizing (:func:`sized_buckets`). Each writer keeps its own sidecar
 fields and its own write arrangement.
+
+The module also owns the bound on IDENTITY partition levels
+(:data:`IDENTITY_PARTITION_MAX_KEYS`, :func:`ensure_bounded_identity`):
+one directory per distinct value is only a sane layout for a bounded
+enum; anything wider belongs under a bucket level.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import sys
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -78,6 +83,19 @@ TARGET_LEAF_BYTES = 128 * 1024 * 1024
 #: instead of more hash buckets (a 4096-way hash bucket level already
 #: gives ~512 GB/day of 128 MB leaves).
 MAX_BUCKETS = 4096
+
+#: Identity-partition cardinality bound. An identity partition column
+#: should be a BOUNDED ENUM (the reference's identity-partition specs
+#: key on device_type / auction-type style columns,
+#: iceberg/tables/bid_requests_enriched.yml:59-63): each distinct value
+#: becomes a directory, so an unbounded key turns the table into
+#: small-files soup — 5,815 distinct event_types measured 24x the
+#: maintenance wall, purely layout physics. 4096 leaves per day-level
+#: partition is already generous (at a 128 MB file target that is a
+#: 0.5 TB day before any leaf holds two files); anything larger
+#: belongs under a BUCKET transform, which keeps leaf count fixed
+#: while preserving pruning on equality probes.
+IDENTITY_PARTITION_MAX_KEYS = 4096
 
 LAYOUT_FILE = "_layout.json"
 
@@ -258,3 +276,38 @@ def sized_buckets(
     if data_bytes is None:
         data_bytes = dir_data_bytes(table_dir)
     return size_buckets(data_bytes, n_outer)
+
+
+def ensure_bounded_identity(
+    df: DataFrame,
+    col: str,
+    bound: int = IDENTITY_PARTITION_MAX_KEYS,
+    strict: bool = True,
+) -> int:
+    """Guard an identity-partition layout against unbounded key
+    cardinality BEFORE the write lays down one directory per value.
+
+    Counts distinct values with ``approx_count_distinct`` — a
+    one-pass, no-shuffle HLL sketch, which is the only admissible
+    probe at 100 TB (an exact distinct would shuffle the key column
+    corpus-wide to answer a yes/no question; ±2% standard error on a
+    threshold whose failure mode is a 24x wall is noise). Over
+    ``bound``: raises ``ValueError`` when ``strict`` (refuse at the
+    door), else emits a one-line warning and proceeds (for scenarios
+    whose outputs are defined over whatever layout the data implies).
+    Returns the approximate count either way.
+    """
+    n = int(
+        df.agg(F.approx_count_distinct(F.col(col)).alias("n")).head()["n"]
+    )
+    if n > bound:
+        msg = (
+            f"identity partition on {col!r}: ~{n} distinct values exceeds "
+            f"the {bound}-leaf bound — an unbounded key makes one directory "
+            f"per value (small-files physics, ~linear maintenance cost in "
+            f"leaves); use a bucket transform (plans/bucketing.py) instead"
+        )
+        if strict:
+            raise ValueError(msg)
+        print(f"WARN {msg}", file=sys.stderr)
+    return n

@@ -80,11 +80,11 @@ def exact_text_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
 # gen 2: NULL-total shingle guard — NULL-text docs previously carried
 # one '' shingle and all-paired with Jaccard 1.0 (edge-sweep finding)
 # gen 3: jaccard redefined over h32-HASHED shingle sets (prefix-filter
-# + array-intersect verification, r14 row-scale finding) — values can
-# shift under a within-doc hash collision, so cached pair lists from
-# the string-set era must not be served
+# + array-intersect verification, which bounds the hot-shingle join) —
+# values can shift under a within-doc hash collision, so cached pair
+# lists from the string-set era must not be served
 # gen 4: candidate-stage sizes (n_sh) now counted over the DEDUPED
-# hashed set (ADVICE r14) — under a within-doc h32 collision gen 3's
+# hashed set — under a within-doc h32 collision gen 3's
 # inflated n_sh could size-filter away a boundary pair the hashed-set
 # definition (and the oracle) keeps
 PAIRS_GEN = 4
@@ -98,12 +98,12 @@ def _valid_vec_gen() -> int:
 
 #: Portable whitespace class ↔ ``duckql.DUCK_WS``. Java's default
 #: ``\s`` is exactly [ \t\n\x0B\f\r] while RE2's ``\s`` OMITS \x0B
-#: (vertical tab) — the r15 control-char probe measured
-#: tokens('a\x0Bb') splitting into two tokens in Spark but staying
-#: one token in DuckDB, a silent cross-engine divergence on every
-#: token-derived query the moment a crawled document carries a VT
-#: (real web text does). Both engines now spell the Java set
-#: explicitly; never write a bare ``\s`` in a compared expression.
+#: (vertical tab), so tokens('a\x0Bb') splits into two tokens in
+#: Spark but stays one token in DuckDB — a silent cross-engine
+#: divergence on every token-derived query the moment a crawled
+#: document carries a VT (real web text does). Both engines spell
+#: the Java set explicitly; never write a bare ``\s`` in a compared
+#: expression.
 WS_CLASS = r"[ \t\n\r\f\x0B]"
 
 
@@ -185,42 +185,15 @@ def minhash_signatures(
     )
 
 
-def _self_join_band_pairs(banded: DataFrame, id_col: str) -> DataFrame:
-    """Self-join a (id, band, band_key) frame into candidate pairs.
-
-    The signature subtree executes once per join side (Spark does not
-    reuse subplans through a broadcast join). Measured at sf0.1 that
-    is FASTER than persist + eager materialization — the signatures
-    are a narrow codegen'd pipeline and one side broadcasts, whereas
-    caching forces a materialization barrier and a shuffled join
-    (9.0s vs 6.1s end-to-end). On a cluster-scale corpus the right
-    structure is different again: write the signature table once,
-    then self-join that table — which also makes the band key a
-    bucketing column so the join is co-located."""
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-
-
 def _materialized_band_pairs(
     spark,
     banded: "callable",
     table: str,
     id_col: str,
     buckets: int = 8,
-    inputs: list[str] | None = None,
-    params: dict | None = None,
+    *,
+    inputs: list[str],
+    params: dict,
 ) -> DataFrame:
     """Candidate pairs via a signature table written ONCE, bucketed by
     the composite band key, then self-joined co-located (no signature
@@ -255,7 +228,7 @@ def _materialized_band_pairs(
         inputs=inputs,
         # gen LAST so no caller-supplied key can shadow the module
         # generation — it must stay authoritative for invalidation.
-        params={**(params or {}), "gen": PAIRS_GEN},
+        params={**params, "gen": PAIRS_GEN},
     )
     a, b = sig.alias("a"), sig.alias("b")
     return (
@@ -307,26 +280,6 @@ def banded_minhash_signatures(
     ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("band_key"))
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-) -> DataFrame:
-    """LSH candidate pairs: docs sharing at least one band of their
-    MinHash signature. rows = (id_a, id_b) with id_a < id_b.
-
-    Plan shape at scale: narrow signature computation → explode to
-    (band_id, band_hash) → self equi-join on the band key. The join
-    key is a hash bucket, so Catalyst uses a shuffled hash/sort-merge
-    join on small buckets rather than any all-pairs comparison.
-    """
-    banded = banded_minhash_signatures(df, id_col, text_col, n, num_hashes, bands)
-    return _self_join_band_pairs(banded, id_col)
-
-
 def minhash_lsh_candidates_materialized(
     spark,
     df: DataFrame,
@@ -337,20 +290,18 @@ def minhash_lsh_candidates_materialized(
     num_hashes: int = 16,
     bands: int = 4,
     buckets: int = 8,
-    inputs: list[str] | None = None,
+    *,
+    inputs: list[str],
 ) -> DataFrame:
-    """LSH candidates via a materialized signature table — the 100 TB
-    shape. :func:`minhash_lsh_candidates` recomputes the full
-    shingle+hash pipeline once per self-join side (Spark does not
-    share subplans across a join); here the banded signatures are
-    written ONCE as a managed table bucketed by the composite band
-    key, and the self-join reads co-located buckets: no signature
-    recompute, no join Exchange. At cluster scale the signature table
-    is the durable artifact every dedup run reuses.
-
-    The composite key ``bkey = band:band_key`` folds both logical
-    join columns into the single bucketing column, so bucket-join
-    co-location applies directly."""
+    """LSH candidate pairs ``(id_a, id_b)``, ``id_a < id_b``: docs
+    sharing at least one band of their MinHash signature. Spark does
+    not share subplans across a join, so a plain self-join would run
+    the shingle+hash pipeline once per side; here the banded
+    signatures are written ONCE as a table bucketed by the composite
+    band key (see :func:`_materialized_band_pairs`), and the
+    self-join reads co-located buckets: no signature recompute, no
+    join Exchange. ``inputs`` are the source files the corpus derives
+    from; the signature table is a durable artifact keyed on them."""
     return _materialized_band_pairs(
         spark,
         lambda: banded_minhash_signatures(df, id_col, text_col, n, num_hashes, bands),
@@ -377,7 +328,7 @@ def ngram_jaccard_pairs(
     family — Bayardo et al., WWW'07; Xiao et al., WWW'08), not a raw
     shared-shingle self-join. The raw join costs Σ_s df(s)² over
     shingle document-frequencies, and that sum is dominated by a few
-    HOT shingles (the r14 row-scale sweep measured 247M join rows on
+    HOT shingles (measured: 247M join rows on
     ~sf0.6 documents, 59% of them from the top-100 shingles — 23x
     the sf0.1 wall for 6x the rows; at 100 TB the hot-shingle term
     alone is a cluster-killer). Prefix filtering orders each doc's
@@ -411,7 +362,7 @@ def ngram_jaccard_pairs(
     shingles (h32, the md5-based hash the minhash oracles already
     share with DuckDB) — a narrow projection, NOT a second
     shingle-level join: aggregating (id_a, id_b) groups out of the
-    verification join was the r14-measured bottleneck (105M candidate
+    verification join was the measured bottleneck (105M candidate
     groups, 178 s at ~sf0.6 vs 18 s for the join itself). The arrays
     ride two ordinary equi-joins against the per-doc array table —
     size O(n_docs), never broadcast by hint, so the plan stays valid
@@ -448,7 +399,7 @@ def ngram_jaccard_pairs(
     # EVERY stage: under a within-doc h32 collision a bare row count
     # would inflate n_sh by one vs size(arr) and the oracle's
     # DISTINCT-based n, and the size filter below could then prune a
-    # boundary pair the oracle keeps (ADVICE r14). Post-dedup,
+    # boundary pair the oracle keeps. Post-dedup,
     # n_sh == size(arr) == the oracle's n exactly, collisions or not.
     sh = (
         sh.select(F.col(id_col), h32("sh").alias("h"))
@@ -474,7 +425,7 @@ def ngram_jaccard_pairs(
     # j-th earliest has alpha-j intersection elements after it, so it
     # sits within the first n - (alpha - j) positions), so requiring
     # n_shared >= min(2, alpha_pair) below is still lossless — and it
-    # collapsed the candidate set 34.5M -> 3.1M on the r14 row-scale
+    # collapsed the candidate set 34.5M -> 3.1M on ~sf0.6 row-scale
     # tables (single-shared-mid-frequency-shingle pairs are the
     # candidate mass at a 0.12 threshold; true pairs share many).
     # alpha_pair = ceil(t/(1+t)*(n_a+n_b)) >= each side's own
@@ -577,7 +528,7 @@ def banded_embedding_signatures(
     # lit_doubles: ONE driver→JVM call per hyperplane. F.lit(list)
     # still issues one py4j call per ELEMENT under the hood — the 16
     # × 64 weight family measured 1.4 s of pure plan-construction
-    # time per query build (r19, guide §7.3).
+    # time per query build (guide §7.3).
     bits = [
         F.when(dot(F.col(vec_col), lit_doubles(ws)) >= 0, F.lit("1"))
         .otherwise(F.lit("0"))
@@ -598,21 +549,6 @@ def banded_embedding_signatures(
     ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("band_key"))
 
 
-def embedding_lsh_candidates(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = EMBEDDING_DIM,
-    num_bits: int = 16,
-    bands: int = 2,
-) -> DataFrame:
-    """Sign-LSH candidate pairs: vectors sharing >=1 band of sign
-    bits. Same self-join shape as :func:`minhash_lsh_candidates`; no
-    all-pairs comparison ever materializes."""
-    banded = banded_embedding_signatures(df, id_col, vec_col, dim, num_bits, bands)
-    return _self_join_band_pairs(banded, id_col)
-
-
 def embedding_lsh_candidates_materialized(
     spark,
     df: DataFrame,
@@ -623,7 +559,8 @@ def embedding_lsh_candidates_materialized(
     num_bits: int = 16,
     bands: int = 2,
     buckets: int = 8,
-    inputs: list[str] | None = None,
+    *,
+    inputs: list[str],
 ) -> DataFrame:
     """Sign-LSH candidates via the materialized bucketed signature
     table (see :func:`_materialized_band_pairs`): the hyperplane
@@ -657,22 +594,21 @@ def embedding_cosine_near_dups(
     dim: int = EMBEDDING_DIM,
     num_bits: int = 16,
     bands: int = 2,
-    spark=None,
-    table: str | None = None,
-    inputs: list[str] | None = None,
+    *,
+    spark,
+    table: str,
+    inputs: list[str],
 ) -> DataFrame:
     """Embedding near-dup pairs: sign-LSH candidates verified with
     exact cosine ≥ threshold. Returns (id_a, id_b, cosine_sim).
-    When ``spark`` and ``table`` are given, candidates come from the
-    materialized bucketed signature table (one signature pass)."""
+    Candidates come from the bucketed signature table ``table``
+    (:func:`embedding_lsh_candidates_materialized`, one signature
+    pass), a durable artifact keyed on the ``inputs`` files."""
     from streaming_data_lake_spark.operators.similarity import dot, norm
 
-    if spark is not None and table is not None:
-        cand = embedding_lsh_candidates_materialized(
-            spark, df, table, id_col, vec_col, dim, num_bits, bands, inputs=inputs
-        )
-    else:
-        cand = embedding_lsh_candidates(df, id_col, vec_col, dim, num_bits, bands)
+    cand = embedding_lsh_candidates_materialized(
+        spark, df, table, id_col, vec_col, dim, num_bits, bands, inputs=inputs
+    )
     va = df.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("v_a"),
@@ -876,7 +812,7 @@ def winnowing_fingerprints(
     # WHOLE tokenization (split of the full text) once per n-gram —
     # O(tokens²) work that is invisible on 100-token docs but turns
     # one 1 MB scraped-binary document into a stage that never
-    # finishes (r13 huge-doc probe: 20k tokens = 171 s unbound vs
+    # finishes (measured: 20k tokens = 171 s unbound vs
     # 1.1 s bound, identical output; a 225k-token doc hung outright).
     def _grams_of(tk):
         # coalesce: NULL-total short-doc guard, same rationale as

@@ -22,8 +22,8 @@ Scale notes:
    so the DuckDB oracle reproduces results bit-for-bit.
  - INPUT CONTRACT: ``vec_id`` is a primary key. Top-k-by-id, code
    tables, and pair generation are ill-defined under at-least-once
-   replay duplicates (r15 dup-key probe: both engines emit divergent
-   garbage shapes on the same duplicated corpus) — collapse replays
+   replay duplicates (on one duplicated corpus both engines emitted
+   divergent garbage shapes) — collapse replays
    upstream with the exact-dedup operators (A4) before indexing, the
    same discipline events get; ``ensure_unique_ids`` is the opt-in
    detector (id-column-only aggregate, vectors never shuffle).
@@ -64,7 +64,7 @@ def lit_doubles(vals) -> Column:
     ``F.lit(list)`` issues one py4j call per element; a family of
     literal weight arrays (16 hyperplanes × 64 dims) costs ~1000
     round-trips ≈ 1.4 s of pure driver-side plan construction PER
-    QUERY BUILD (measured r19, guide §7.3 "planning time itself can
+    QUERY BUILD (measured; guide §7.3 "planning time itself can
     become the bottleneck"). Parsing one SQL expression string is a
     single call. Bit-exactness: ``repr()`` of a finite Python float
     is the shortest decimal that round-trips, and the JVM's
@@ -126,10 +126,6 @@ def norm_named(name: str) -> Column:
     return memo_column(("norm", name), lambda: norm(F.col(name)))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def _cosine_qc() -> Column:
     """The pair-scoring cosine over the family's fixed internal
     column names (q_vec/c_vec/q_norm/c_norm), memoized — identical
@@ -147,9 +143,8 @@ def _cosine_qc() -> Column:
 #: every durable artifact built from admitted embeddings (IVF index,
 #: sign-LSH signatures, IVF-PQ codes) so caches built under an older
 #: admission rule are never served. GEN 3: non-finite-element
-#: exclusion (r12). GEN 4: declared-dimension exclusion (r15 — the
-#: corpus-wide form of the r14 kmeans_train dim admission; VERDICT
-#: r14 "Next round" #2).
+#: exclusion. GEN 4: declared-dimension exclusion (the corpus-wide
+#: form of kmeans_train's dimension admission).
 VALID_VEC_GEN = 4
 
 
@@ -173,7 +168,7 @@ def valid_vectors(
     false predicate drops the row. It does NOT cover NaN/Inf
     elements — both engines treat NaN as greater than any number, so
     a NaN norm PASSES ``> 0`` and then poisons every cosine in its
-    cluster with NaN (r12 probe) — hence the explicit finite-norm
+    cluster with NaN — hence the explicit finite-norm
     conjunct. Nor does it cover WRONG-DIMENSION vectors (encoder
     version drift, truncated rows): those are finite and nonzero, so
     GEN 3 admitted them and relied on zip_with folds yielding NULL
@@ -197,8 +192,7 @@ def valid_vectors(
             # the array header while each norm fold below is O(dim).
             # Catalyst may split or reorder conjuncts during
             # optimization, so the short-circuit ordering is not a
-            # guaranteed contract — only the predicate's value is
-            # (ADVICE r15).
+            # guaranteed contract — only the predicate's value is.
             pred = pred & (F.size(v) == F.lit(int(dim)))
         # Bind the O(dim) norm fold ONCE per row via the single-
         # element-array transform (the ivf_assign/shingles trick):
@@ -226,34 +220,6 @@ def valid_vectors(
     )
 
 
-def admit_corpus(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = EMBEDDING_DIM,
-    strict: bool = True,
-) -> DataFrame:
-    """PRODUCTION front door for an embedding corpus (VERDICT r15
-    "Next round" #5): one named call that applies the full admission
-    contract before anything indexes or pairs the vectors —
-    :func:`valid_vectors` (finite, nonzero, declared dimension) AND
-    :func:`ensure_unique_ids` (primary-key ids), strict by default.
-
-    The certified query scenarios deliberately call
-    :func:`valid_vectors` alone — their corpus is unique by
-    construction and a mandatory dedup aggregate on every hot
-    admission path would be the real anti-pattern — so the convention
-    is: non-certified / production call sites enter HERE and get the
-    refuse-at-the-door behavior without opting into anything;
-    relaxations (``strict=False``) are the explicit, visible choice.
-    The id probe is one aggregate over the single id column; the
-    corpus vectors never shuffle for it.
-    """
-    out = valid_vectors(df, vec_col=vec_col, dim=dim)
-    ensure_unique_ids(out, id_col=id_col, strict=strict)
-    return out
-
-
 def ensure_unique_ids(
     df: DataFrame, id_col: str = "vec_id", strict: bool = True
 ) -> int:
@@ -264,9 +230,9 @@ def ensure_unique_ids(
     under at-least-once replay duplicates, a duplicated neighbor
     occupies multiple ranks, a duplicated query emits two interleaved
     ranked lists, and self-pair exclusion silently drops the replay
-    pair — ILL-DEFINED output in ANY engine (the r15 dup-key probe
-    measured Spark and DuckDB diverging in two different garbage
-    shapes on the same duplicated corpus). The contract matches the
+    pair — ILL-DEFINED output in ANY engine (on one duplicated
+    corpus Spark and DuckDB diverged in two different garbage
+    shapes). The contract matches the
     reference's keyed ingestion: replays are collapsed UPSTREAM by
     the ingest/dedup operators (A4 exact dedup — the same discipline
     events get) before an embedding corpus is indexed; FAISS-with-ids
@@ -603,8 +569,8 @@ def ivf_knn(
             # broadcast join's condition — the O(k·d) assignment fold
             # ran TWICE per corpus row (seen as
             # `isnotnull(-element_at(transform(...)))` inside the
-            # BroadcastNestedLoopJoin condition of the r19 before
-            # plan). cluster_id is never NULL (argmax over a non-empty
+            # BroadcastNestedLoopJoin condition without it).
+            # cluster_id is never NULL (argmax over a non-empty
             # centroid array whose sims are finite by the valid_vectors
             # admission), so <=> selects the identical row set while
             # suppressing the IsNotNull inference; the join still
@@ -679,7 +645,8 @@ def ivf_knn_materialized(
     vec_col: str = "embedding",
     nprobe: int = 1,
     buckets: int = 8,
-    inputs: list[str] | None = None,
+    *,
+    inputs: list[str],
     centroid_spec: str = "",
 ) -> DataFrame:
     """:func:`ivf_knn` with the index as a durable artifact: corpus
@@ -693,7 +660,9 @@ def ivf_knn_materialized(
     SelectedBucketsCount in the scan. The probed-cluster list is
     collected driver-side, which is sound by construction: it is
     bounded by the centroid count, and an IVF centroid table is
-    broadcast-small by definition."""
+    broadcast-small by definition. The index is keyed on the
+    fingerprints of ``inputs`` (the source files the corpus derives
+    from) and on ``centroid_spec``."""
     from pyspark.sql import functions as F
 
     from streaming_data_lake_spark.plans.bucketing import bucketed_frame
@@ -820,7 +789,7 @@ def kmeans_train(
     That is the textbook distributed k-means cost: iters × (one scan
     + one k-row shuffle). Clusters that lose all members drop out
     (deterministically) rather than being re-seeded."""
-    # Dimension admission (r14 wrong-dim probe): a finite nonzero
+    # Dimension admission: a finite nonzero
     # vector of the WRONG length passes valid_vectors (GEN-3 checks
     # norm, not shape) and then ABORTS the whole training job in
     # recentering — element_at(v, d) raises INVALID_ARRAY_INDEX under

@@ -486,22 +486,6 @@ def heal_missing_base(path: str) -> str | None:
     return newest
 
 
-def has_partition_dirs(path: str, partition_col: str) -> bool:
-    """Whether ``path`` is physically laid out with
-    ``{partition_col}=`` directories. Partial-rewrite paths MUST
-    check this before linking: against a flat directory there is
-    nothing to link and a partition-scoped rewrite would silently
-    drop everything outside the rewritten subset."""
-    prefix = f"{partition_col}="
-    try:
-        return any(
-            e.startswith(prefix) and os.path.isdir(os.path.join(path, e))
-            for e in os.listdir(path)
-        )
-    except OSError:
-        return False
-
-
 def tmp_sibling(path: str) -> str:
     """A private scratch dir name colocated with ``path`` (same
     filesystem, so links work and the swap is atomic), following the

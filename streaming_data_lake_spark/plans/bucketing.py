@@ -125,7 +125,7 @@ def _ddl_type(t) -> str:
 
 def _durable_bucketed(
     spark: SparkSession,
-    df: "DataFrame | callable",
+    df: "callable",
     tbl: str,
     key: str,
     buckets: int,
@@ -136,9 +136,7 @@ def _durable_bucketed(
         f"bkt_{tbl}",
         inputs,
         {"key": key, "buckets": buckets, **params},
-        lambda tmp: _build_bucketed(
-            spark, df() if callable(df) else df, tbl, key, buckets, tmp
-        ),
+        lambda tmp: _build_bucketed(spark, df(), tbl, key, buckets, tmp),
     )
     return _register_and_read(spark, tbl, art, key, buckets)
 
@@ -152,7 +150,7 @@ def bucketed_table(
     tbl = f"bkt_{name}_{_safe_tag(sf_dir)}"
     return _durable_bucketed(
         spark,
-        load_table(spark, sf_dir, name),
+        lambda: load_table(spark, sf_dir, name),
         tbl,
         key,
         _BUCKETS,
@@ -163,49 +161,36 @@ def bucketed_table(
 
 def bucketed_frame(
     spark: SparkSession,
-    df: "DataFrame | callable",
+    df: "callable",
     tbl: str,
     key: str,
     buckets: int = _BUCKETS,
-    inputs: list[str] | None = None,
+    *,
+    inputs: list[str],
     params: dict | None = None,
 ) -> DataFrame:
-    """Write an arbitrary frame bucketed+sorted by ``key`` and read
-    it back. Self-joins on ``key`` over the returned frame are
-    co-located: the expensive subtree that produced ``df`` executes
-    exactly once (at write time), and the join needs no Exchange on
-    either side.
+    """Write a frame bucketed+sorted by ``key`` as a durable artifact
+    and read it back. Self-joins on ``key`` over the returned frame
+    are co-located: the expensive subtree that produced the frame
+    executes exactly once (at write time), and the join needs no
+    Exchange on either side.
 
-    ``df`` may be a zero-arg callable returning the frame: on an
-    artifact HIT the frame is never needed, and constructing a
-    signature frame is real driver time (a banded sign-LSH family is
-    hundreds of py4j calls ≈ 0.5 s per query build — measured r19,
-    guide §7.3); a thunk defers that cost to the one build per
-    (inputs, params) generation.
+    ``df`` is a zero-arg callable returning the frame: on an artifact
+    HIT the frame is never needed, and constructing a signature frame
+    is real driver time (a banded sign-LSH family is hundreds of py4j
+    calls ≈ 0.5 s per query build — guide §7.3), so the thunk defers
+    that cost to the one build per (inputs, params) generation.
 
-    With ``inputs`` (the source files the frame derives from) the
-    copy is a durable artifact shared across sessions and processes;
-    without, it is rebuilt once per process. The durable cache key is
-    (table name, key, buckets, input fingerprints, ``params``):
-    callers MUST pass every generation parameter that changes the
-    frame's content (hash counts, band counts, dims, …) in
-    ``params`` — the durable cache outlives the process, so a
-    parameter change without a key change would silently serve the
-    old artifact to every future run."""
-    if inputs is not None:
-        return _durable_bucketed(
-            spark, df, tbl, key, buckets, inputs, {"tbl": tbl, **(params or {})}
-        )
-    if tbl not in _REGISTERED or not spark.catalog.tableExists(tbl):
-        from streaming_data_lake_spark.scratch import scratch_dir
-
-        tmp = scratch_dir(f"bkt_{tbl}_")
-        _build_bucketed(spark, df() if callable(df) else df, tbl, key, buckets, tmp)
-        return _register_and_read(spark, tbl, tmp, key, buckets)
-    # Already registered in this process: re-resolve under the lock so
-    # a concurrent re-registration cannot re-point the name mid-read.
-    return _register_and_read(
-        spark, tbl, os.path.dirname(_REGISTERED[tbl]), key, buckets
+    ``inputs`` (required) are the source files the frame derives
+    from; the copy is shared across sessions and processes. The
+    durable cache key is (table name, key, buckets, input
+    fingerprints, ``params``): callers MUST pass every generation
+    parameter that changes the frame's content (hash counts, band
+    counts, dims, …) in ``params`` — the durable cache outlives the
+    process, so a parameter change without a key change would
+    silently serve the old artifact to every future run."""
+    return _durable_bucketed(
+        spark, df, tbl, key, buckets, inputs, {"tbl": tbl, **(params or {})}
     )
 
 

@@ -10,8 +10,11 @@ doubles; ratios are single double divisions of exact integers.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from streaming_data_lake_spark.catalog import load_table
@@ -35,6 +38,7 @@ from streaming_data_lake_spark.operators.dedup import (
     dedup_row_number,
 )
 from streaming_data_lake_spark.operators.joins import interval_join
+from streaming_data_lake_spark.plans import artifacts
 from streaming_data_lake_spark.queries import register
 
 
@@ -54,12 +58,60 @@ _HOURLY_WHERE = (
 )
 
 
-def _te(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Events restricted to the serving window via the partitioned
-    layout (plans.layout.time_ranged_events)."""
-    from streaming_data_lake_spark.plans.layout import time_ranged_events
+def day_partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table rewritten day-partitioned — the reference's
+    ``days(ts)`` partition spec (SURVEY.md S5,
+    iceberg/apply_tables.py:105-136) as a partitioned-parquet layout.
+    A DURABLE artifact (plans/artifacts.py): built once per source-file
+    fingerprint and reused by every later session and process — the
+    lake-side layout the reference maintains in Iceberg, not a
+    per-run scratch copy. Reads carry an ``event_date`` partition
+    column that time filters prune on at file listing, before any
+    I/O; on Delta/Iceberg the same pruning is metadata-driven."""
+    src = os.path.join(sf_dir, "events.parquet")
 
-    return time_ranged_events(spark, sf_dir, *_HOURLY_WINDOW)
+    def _build(tmp: str) -> None:
+        os.makedirs(tmp, exist_ok=True)
+        (
+            load_table(spark, sf_dir, "events")
+            .withColumn("event_date", F.to_date("ts"))
+            .write.partitionBy("event_date")
+            .mode("overwrite")
+            .parquet(os.path.join(tmp, "data"))
+        )
+
+    art = artifacts.ensure("events_by_day", [src], {}, _build)
+    # Declared-schema read: a partitionBy write of an EMPTY frame
+    # leaves a directory with no schema-carrying files, so an
+    # inference read dies UNABLE_TO_INFER_SCHEMA the moment a source
+    # day is empty — and the declared read is the 100 TB posture
+    # anyway (no inference listing pass). Partition pruning is
+    # directory-driven and unaffected.
+    schema = T.StructType(
+        load_table(spark, sf_dir, "events").schema.fields
+        + [T.StructField("event_date", T.DateType())]
+    )
+    return spark.read.schema(schema).parquet(os.path.join(art, "data"))
+
+
+def _te(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Events restricted to the serving window ``[start, end)`` over
+    the day-partitioned layout.
+
+    Two predicates do two jobs: ``event_date`` prunes whole day
+    partitions at file listing (shows up as PartitionFilters in the
+    plan), and ``ts`` is the exact bound — and because the rewritten
+    copy stores real TIMESTAMP micros (not the raw TIMESTAMP(NANOS)
+    the source files carry), the ts predicate also reaches parquet
+    row-group statistics, which the nanos→timestamp conversion on
+    the direct read path defeats."""
+    start, end = _HOURLY_WINDOW
+    return day_partitioned_events(spark, sf_dir).filter(
+        (F.col("event_date") >= F.lit(start))
+        & (F.col("event_date") < F.lit(end))
+        & (F.col("ts") >= F.to_timestamp(F.lit(start)))
+        & (F.col("ts") < F.to_timestamp(F.lit(end)))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1581,8 +1633,6 @@ GROUP BY 1, 2
     "I/O — the M2 lookback-repair access pattern at scale.",
 )
 def partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from streaming_data_lake_spark.plans.layout import day_partitioned_events
-
     ev = day_partitioned_events(spark, sf_dir)
     return (
         ev.filter(

@@ -483,7 +483,7 @@ def two_level_overlay_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     # too), so it degrades loudly instead of refusing; a production
     # layout builder calls the strict form and switches to a bucket
     # transform.
-    from streaming_data_lake_spark.plans.layout import ensure_bounded_identity
+    from streaming_data_lake_spark.layout import ensure_bounded_identity
 
     ensure_bounded_identity(ev, "etype_pt", strict=False)
     # Fragmented initial write: round-robin tasks scatter every leaf

@@ -416,8 +416,7 @@ def minhash_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialized-signature path: the banded signature table is
     # written once (bucketed by band key) and self-joined co-located —
     # at scale this halves the dominant shingle+hash cost and removes
-    # the join shuffle. minhash_lsh_candidates remains the
-    # no-write-access variant.
+    # the join shuffle.
     cand = minhash_lsh_candidates_materialized(
         spark, d, f"lsh_sig_{_safe_tag(sf_dir)}", num_hashes=16, bands=4,
         inputs=[os.path.join(sf_dir, "documents.parquet")],

@@ -39,8 +39,13 @@ from streaming_data_lake_spark.scratch import scratch_dir
 _scratch_dir = scratch_dir
 
 
+#: Default state-store (shuffle) partition count for stream starts;
+#: see :func:`_state_partitions`.
+STATE_PARTITIONS = 4
+
+
 @contextlib.contextmanager
-def _state_partitions(spark: SparkSession, n: int | None = None):
+def _state_partitions(spark: SparkSession, n: int = STATE_PARTITIONS):
     """Scope the shuffle-partition count around stream starts: the
     number of state-store instances per stateful operator is locked
     to ``spark.sql.shuffle.partitions`` at query start, and per-store
@@ -49,21 +54,8 @@ def _state_partitions(spark: SparkSession, n: int | None = None):
     state per partition is tiny here, commit overhead is not). On a
     production cluster this would be sized to executor count × cores,
     not lowered. Callers that measured a different optimum pass ``n``
-    explicitly (the sessionizer's Python fold wants 16);
-    ``$SPARK_GRAFT_STATE_PARTITIONS`` overrides the DEFAULT only."""
+    explicitly (the sessionizer's Python fold wants 16)."""
     key = "spark.sql.shuffle.partitions"
-    if n is None:
-        raw = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "4")
-        try:
-            n = int(raw)
-        except ValueError:
-            raise ValueError(
-                f"SPARK_GRAFT_STATE_PARTITIONS must be a positive integer, got {raw!r}"
-            ) from None
-        if n < 1:
-            raise ValueError(
-                f"SPARK_GRAFT_STATE_PARTITIONS must be >= 1, got {n}"
-            )
     prev = spark.conf.get(key)
     spark.conf.set(key, str(n))
     try:

@@ -418,7 +418,7 @@ def _replay_to_parquet(
     build,
     name_prefix: str,
     drop_sentinel: bool = False,
-    state_partitions: int | None = 16,
+    state_partitions: int = 16,
 ) -> DataFrame:
     """Shared bounded-replay harness for every sessionize variant:
     sentinel-staged file stream -> variant -> durable scratch parquet
@@ -455,8 +455,8 @@ def _replay_to_parquet(
     # previously no caller passed it, so unwrapped replays ran at the
     # ambient 32 and paid the per-store commit floor, r17 review),
     # while the native session_window path holds far cheaper
-    # per-store state and measured fastest at the env-driven default
-    # (min-of-3 interleaved at sf0.1: 4 → 2.06 s, 8 → 2.93, 16 →
+    # per-store state and measured fastest at the pipelines default
+    # of 4 (min-of-3 interleaved at sf0.1: 4 → 2.06 s, 8 → 2.93, 16 →
     # 3.19 — per-store commit floor dominates JVM-side state).
     # Scoped here, an OUTER _state_partitions (the certified streamq
     # wrapper) set its value first and this inner scope simply
@@ -490,15 +490,16 @@ def sessionize_native_replay(
     sentinel discipline as :func:`sessionize_replay`): batch 0 folds
     the events, batch 1's far-future sentinel advances the watermark,
     and the final no-data batch flushes every open session."""
+    from streaming_data_lake_spark.streaming.pipelines import STATE_PARTITIONS
+
     return _replay_to_parquet(
         spark, sf_dir, gap_minutes, sessionize_native, "sessions_native",
         drop_sentinel=True,
-        # None → the env-driven _state_partitions default (4 locally,
-        # cluster-sized via $SPARK_GRAFT_STATE_PARTITIONS): the
-        # JVM-side session store's per-partition state is cheap, so
-        # the per-store commit floor dominates and fewer instances
-        # win (measured — see _replay_to_parquet).
-        state_partitions=None,
+        # The pipelines default (4): the JVM-side session store's
+        # per-partition state is cheap, so the per-store commit floor
+        # dominates and fewer instances win (measured — see
+        # _replay_to_parquet).
+        state_partitions=STATE_PARTITIONS,
     )
 
 

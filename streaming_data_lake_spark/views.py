@@ -72,6 +72,12 @@ _NON_VIEW = {
     # checkpoints the exact brute-force top-k once at construction
     # (and composes knn_ivf_pq_adc's index build)
     "knn_ivf_recall_at_k",
+    # build the durable day-partitioned events artifact
+    # (queries/core.day_partitioned_events) at construction
+    "top_busiest_hours",
+    "event_quality_spine_hourly",
+    "duplicate_rates_hourly",
+    "partition_pruned_scan",
 }
 
 

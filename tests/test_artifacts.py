@@ -125,21 +125,30 @@ def test_scratch_base_capacity_gate(monkeypatch):
     assert scratch.scratch_base() == "/tmp/somewhere"
 
 
-def test_state_partitions_env_validation(monkeypatch, spark):
+def test_state_partitions_scopes_and_restores(spark):
+    """_state_partitions sets spark.sql.shuffle.partitions only inside
+    its scope — the default count, or an explicit ``n`` — and puts the
+    previous value back afterwards, also when the body raises."""
     import pytest as _pytest
 
-    from streaming_data_lake_spark.streaming.pipelines import _state_partitions
+    from streaming_data_lake_spark.streaming.pipelines import (
+        STATE_PARTITIONS,
+        _state_partitions,
+    )
 
-    monkeypatch.setenv("SPARK_GRAFT_STATE_PARTITIONS", "auto")
-    with _pytest.raises(ValueError, match="positive integer"):
+    key = "spark.sql.shuffle.partitions"
+    orig = spark.conf.get(key)
+    spark.conf.set(key, "11")
+    try:
         with _state_partitions(spark):
-            pass
-    monkeypatch.setenv("SPARK_GRAFT_STATE_PARTITIONS", "0")
-    with _pytest.raises(ValueError, match=">= 1"):
-        with _state_partitions(spark):
-            pass
-    monkeypatch.setenv("SPARK_GRAFT_STATE_PARTITIONS", "6")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    with _state_partitions(spark):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "6"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+            assert spark.conf.get(key) == str(STATE_PARTITIONS) == "4"
+        assert spark.conf.get(key) == "11"
+        with _state_partitions(spark, 6):
+            assert spark.conf.get(key) == "6"
+        assert spark.conf.get(key) == "11"
+        with _pytest.raises(RuntimeError):
+            with _state_partitions(spark, 3):
+                raise RuntimeError("stream start failed")
+        assert spark.conf.get(key) == "11"
+    finally:
+        spark.conf.set(key, orig)

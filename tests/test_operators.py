@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from streaming_data_lake_spark.catalog import check_drift, load_table
 from streaming_data_lake_spark.operators import ingest
 from streaming_data_lake_spark.operators.dedup import (
-    minhash_lsh_candidates,
+    minhash_lsh_candidates_materialized,
     ngram_jaccard_pairs,
     shingles,
 )
@@ -50,7 +50,17 @@ def test_shingle_count(spark):
     assert out[0]["n"] == 0
 
 
-def test_lsh_candidates_catch_near_dups(spark):
+def _as_input(spark, df, tmp_path, monkeypatch, name):
+    """Write ``df`` to a parquet input under ``tmp_path`` and point the
+    durable artifact cache there too, so no shared cache is read or
+    written. Returns (frame read back, inputs list)."""
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / "artifacts"))
+    path = str(tmp_path / f"{name}.parquet")
+    df.write.parquet(path)
+    return spark.read.parquet(path), [path]
+
+
+def test_lsh_candidates_catch_near_dups(spark, tmp_path, monkeypatch):
     """MinHash-LSH (16 hashes / 4 bands → S-curve threshold ≈0.7)
     must catch near-identical pairs (j≈0.98 ⇒ collision probability
     1-(1-j^4)^4 ≈ 1-4e-5; deterministic hashes make the outcome
@@ -67,9 +77,14 @@ def test_lsh_candidates_catch_near_dups(spark):
             "n_chars",
         )
     )
-    corpus = docs.unionByName(dup)
+    corpus, inputs = _as_input(
+        spark, docs.unionByName(dup), tmp_path, monkeypatch, "documents"
+    )
     cands = {
-        (r["id_a"], r["id_b"]) for r in minhash_lsh_candidates(corpus).collect()
+        (r["id_a"], r["id_b"])
+        for r in minhash_lsh_candidates_materialized(
+            spark, corpus, "lsh_sig_near_dup_test", inputs=inputs
+        ).collect()
     }
     for bid in base_ids:
         assert (bid, bid + 100000) in cands
@@ -312,16 +327,22 @@ def test_versioned_append_rejects_schema_drift(spark, tmp_path):
     assert v3 == 3 and vt.read().count() == 40
 
 
-def test_embedding_lsh_candidates_subset_of_pairs(spark):
+def test_embedding_lsh_candidates_subset_of_pairs(spark, tmp_path, monkeypatch):
     from streaming_data_lake_spark.operators.dedup import (
         embedding_cosine_near_dups,
-        embedding_lsh_candidates,
+        embedding_lsh_candidates_materialized,
     )
 
-    emb = load_table(spark, SF_DIR, "embeddings")
-    cand = embedding_lsh_candidates(emb).collect()
+    emb, inputs = _as_input(
+        spark, load_table(spark, SF_DIR, "embeddings"), tmp_path, monkeypatch, "embeddings"
+    )
+    cand = embedding_lsh_candidates_materialized(
+        spark, emb, "emb_sig_subset_test", inputs=inputs
+    ).collect()
     assert all(r["id_a"] < r["id_b"] for r in cand)
-    dups = embedding_cosine_near_dups(emb, threshold=0.3)
+    dups = embedding_cosine_near_dups(
+        emb, threshold=0.3, spark=spark, table="emb_sig_subset_test", inputs=inputs
+    )
     assert all(r["cosine_sim"] >= 0.3 for r in dups.collect())
 
 
@@ -1579,37 +1600,6 @@ def test_ensure_unique_ids_guard(spark):
     with pytest.raises(ValueError, match="not unique"):
         ensure_unique_ids(duped)
     assert ensure_unique_ids(duped, strict=False) == 2
-
-
-def test_admit_corpus_production_path_refuses_replays_by_default(spark):
-    """VERDICT r15 "Next round" #5: the production front door. One
-    named call applies the FULL admission contract — valid_vectors
-    (finite / nonzero / declared dim) and the PK guard — strict by
-    default, so a replayed corpus is refused without the caller
-    opting into anything. Certified scenarios keep calling
-    valid_vectors alone; relaxation is the explicit choice."""
-    import pytest
-
-    from streaming_data_lake_spark.operators.similarity import admit_corpus
-    from streaming_data_lake_spark.schemas import EMBEDDING_DIM
-
-    dim = EMBEDDING_DIM
-    vec = [1.0] * dim
-    clean = spark.createDataFrame(
-        [(i, vec) for i in range(6)] + [(99, [1.0, 2.0]), (98, None)],
-        "vec_id long, embedding array<double>",
-    )
-    # degenerate rows (wrong dim, NULL) are dropped; unique ids admit
-    out = admit_corpus(clean)
-    assert out.count() == 6
-    # replayed ids: refused AT THE DOOR with no strict= argument
-    replayed = clean.unionAll(
-        spark.createDataFrame([(3, vec)], "vec_id long, embedding array<double>")
-    )
-    with pytest.raises(ValueError, match="not unique"):
-        admit_corpus(replayed)
-    # warn mode is the explicit, visible opt-out
-    assert admit_corpus(replayed, strict=False).count() == 7
 
 
 def test_spread_scale_adaptive_and_result_preserving(spark):

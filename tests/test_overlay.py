@@ -7,7 +7,6 @@ import os
 
 from streaming_data_lake_spark.overlay import (
     atomic_swap,
-    has_partition_dirs,
     link_untouched_partitions,
     tmp_sibling,
 )
@@ -56,16 +55,6 @@ def test_atomic_swap_publishes_and_retains_old_version(tmp_path):
     assert os.listdir(tmp_path / retained[0]) == ["old.parquet"]
     assert remove_orphans(str(tmp_path), min_age_s=0) == retained
     assert [e for e in os.listdir(tmp_path) if "__old_" in e] == []
-
-
-def test_has_partition_dirs(tmp_path):
-    t = str(tmp_path / "t")
-    _mk(os.path.join(t, "part-0.parquet"))
-    assert not has_partition_dirs(t, "day")
-    _mk(os.path.join(t, "day=2024-01-01", "a.parquet"))
-    assert has_partition_dirs(t, "day")
-    assert not has_partition_dirs(t, "kb")
-    assert not has_partition_dirs(str(tmp_path / "missing"), "day")
 
 
 def test_tmp_sibling_is_colocated_and_swept_namable(tmp_path):

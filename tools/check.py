@@ -8,15 +8,21 @@ values. Usage:
 plain builder with NO engine confs — so portability regressions
 (e.g. the round-1 nanosAsLong bug) show up locally instead of only
 in the driver's CORRECTNESS run.
+
+The sweep tools run it once per mutated input through
+:func:`parity_lane`.
 """
 
 from __future__ import annotations
 
 import math
+import os
+import subprocess
 import sys
 import time
+from collections.abc import Sequence
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def norm_cell(v):
@@ -43,6 +49,31 @@ def norm_rows(cols, rows):
     out = [tuple(norm_cell(r[i]) for i in order) for r in rows]
     out.sort(key=lambda r: tuple((x is None, str(type(x)), x if not isinstance(x, tuple) else str(x)) for x in r))
     return [cols[i] for i in order], out
+
+
+def parity_lane(
+    lane: str, sf_dir: str, only: Sequence[str] = (), env: dict[str, str] | None = None
+) -> bool:
+    """Run this checker on ``sf_dir`` in a fresh process (``env``
+    added to the environment) and print ``PASS <lane>`` or
+    ``FAIL <lane>`` plus the run's FAIL lines. The lane is green only
+    when the run exits 0 AND prints ALL GREEN: a crash after the
+    verdict line, or a clean exit that never reached it, is red. The
+    lane line never says ALL GREEN, so a sweep's verdict comes only
+    from its own final line."""
+    t0 = time.time()
+    r = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), sf_dir, *only],
+        capture_output=True, text=True, timeout=3000,
+        env={**os.environ, **(env or {})},
+    )
+    green = r.returncode == 0 and "ALL GREEN" in r.stdout
+    fails = [ln for ln in r.stdout.splitlines() if ln.startswith("FAIL")]
+    verdict = "all queries" if green else f"{len(fails)} failures, exit {r.returncode}"
+    print(f"{'PASS' if green else 'FAIL'} {lane}: {verdict} [{time.time() - t0:.1f}s]", flush=True)
+    for ln in fails[:20]:
+        print("   ", ln[:200], flush=True)
+    return green
 
 
 def main() -> int:

@@ -32,7 +32,7 @@ Usage::
 
     python tools/partition_sweep.py [--src DIR] [--only n1 n2 ...]
 
-Exit 0 iff every lane prints ALL GREEN. Runs the three parallelism
+Exit 0 iff every lane is green (tools/check.py ``parity_lane``). Runs the three parallelism
 lanes and the split-input lane SEQUENTIALLY (each subprocess already
 uses local[N] executors; stacking four JVMs would oversubscribe the
 host and teach us nothing about parity).
@@ -41,12 +41,14 @@ host and teach us nothing about parity).
 from __future__ import annotations
 
 import os
-import subprocess
 import sys
-import time
 from pathlib import Path
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from tools.check import parity_lane  # noqa: E402
+
 SRC_DEFAULT = "/root/testdata/sf0.01"
 SPLIT_OUT_DEFAULT = "/tmp/sdl_partsweep_split"
 
@@ -81,21 +83,6 @@ def make_split_tables(src: str, out: str) -> None:
         print(f"  {p.stem}: {t.num_rows} rows -> {meta.num_row_groups} row groups")
 
 
-def run_lane(label: str, sf_dir: str, env_extra: dict[str, str], only: list[str]) -> bool:
-    env = dict(os.environ)
-    env.update(env_extra)
-    cmd = [sys.executable, "tools/check.py", sf_dir, *only]
-    t0 = time.time()
-    print(f"[lane {label}] {' '.join(f'{k}={v}' for k, v in env_extra.items())}")
-    proc = subprocess.run(cmd, cwd=REPO, env=env, stdout=subprocess.PIPE, text=True)
-    ok = proc.returncode == 0 and "ALL GREEN" in proc.stdout
-    tail = [ln for ln in proc.stdout.splitlines() if ln.startswith("FAIL")]
-    for ln in tail[:20]:
-        print(f"  {ln}")
-    print(f"[lane {label}] {'ALL GREEN' if ok else 'FAILURES'} [{time.time() - t0:.1f}s]")
-    return ok
-
-
 def main() -> int:
     argv = sys.argv[1:]
 
@@ -115,7 +102,7 @@ def main() -> int:
 
     failures = []
     for n in PARTITION_COUNTS:
-        if not run_lane(f"P={n}", src, {"SPARK_GRAFT_CPUS": str(n)}, only):
+        if not parity_lane(f"P={n}", src, only, {"SPARK_GRAFT_CPUS": str(n)}):
             failures.append(f"P={n}")
 
     print(f"generating split-row-group tables {src} -> {split_out}")
@@ -124,8 +111,8 @@ def main() -> int:
         f"spark.sql.files.maxPartitionBytes={SPLIT_MAX_PARTITION_BYTES};"
         "spark.sql.files.openCostInBytes=0"
     )
-    if not run_lane(
-        "split-input", split_out, {"SPARK_GRAFT_EXTRA_CONF": conf}, only
+    if not parity_lane(
+        "split-input", split_out, only, {"SPARK_GRAFT_EXTRA_CONF": conf}
     ):
         failures.append("split-input")
 

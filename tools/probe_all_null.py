@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import subprocess
 import sys
 import tempfile
 
@@ -34,11 +33,10 @@ import pyarrow.parquet as pq
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SRC = os.environ.get("SPARK_GRAFT_NULL_SRC", "/root/testdata/sf0.001")
+sys.path.insert(0, REPO)
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from streaming_data_lake_spark.catalog import TABLES  # noqa: E402
+from tools.check import parity_lane  # noqa: E402
 
 # lane -> {table: [columns to NULL]}
 LANES = {
@@ -78,22 +76,7 @@ def main() -> int:
     ok = True
     for lane, spec in LANES.items():
         d = build(lane, spec)
-        r = subprocess.run(
-            [sys.executable, os.path.join(REPO, "tools", "check.py"), d],
-            capture_output=True, text=True, timeout=3000,
-        )
-        green = "ALL GREEN" in r.stdout
-        n_fail = r.stdout.count("FAIL ")
-        print(
-            f"{'PASS' if green else 'FAIL'} {lane}: "
-            f"{'all queries' if green else f'{n_fail} failures'}",
-            flush=True,
-        )
-        if not green:
-            for line in r.stdout.splitlines():
-                if line.startswith("FAIL"):
-                    print("   ", line[:200])
-            ok = False
+        ok = parity_lane(lane, d) and ok
         shutil.rmtree(d, ignore_errors=True)
     print("ALL GREEN" if ok else "PROBE FAILED")
     return 0 if ok else 1

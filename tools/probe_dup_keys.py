@@ -40,7 +40,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import subprocess
 import sys
 import tempfile
 
@@ -49,11 +48,10 @@ import pyarrow.parquet as pq
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SRC = os.environ.get("SPARK_GRAFT_DUP_SRC", "/root/testdata/sf0.001")
+sys.path.insert(0, REPO)
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from streaming_data_lake_spark.catalog import TABLES  # noqa: E402
+from tools.check import parity_lane  # noqa: E402
 
 
 def _dup_rows(table: pa.Table, every: int) -> pa.Table:
@@ -107,7 +105,6 @@ def build(lane: str, spec) -> str:
 def _guard_lane() -> bool:
     """dup-embeddings: the PK guard must REFUSE a replayed corpus and
     pass a clean one (in-process — one Spark session, no subprocess)."""
-    sys.path.insert(0, REPO)
     from streaming_data_lake_spark.catalog import load_table
     from streaming_data_lake_spark.operators.similarity import ensure_unique_ids
     from streaming_data_lake_spark.session import get_spark
@@ -135,22 +132,7 @@ def main() -> int:
     ok = True
     for lane, spec in LANES.items():
         d = build(lane, spec)
-        r = subprocess.run(
-            [sys.executable, os.path.join(REPO, "tools", "check.py"), d],
-            capture_output=True, text=True, timeout=3000,
-        )
-        green = "ALL GREEN" in r.stdout
-        n_fail = r.stdout.count("FAIL ")
-        print(
-            f"{'PASS' if green else 'FAIL'} {lane}: "
-            f"{'all queries' if green else f'{n_fail} failures'}",
-            flush=True,
-        )
-        if not green:
-            for line in r.stdout.splitlines():
-                if line.startswith("FAIL"):
-                    print("   ", line[:200])
-            ok = False
+        ok = parity_lane(lane, d) and ok
         shutil.rmtree(d, ignore_errors=True)
     ok = _guard_lane() and ok
     print("ALL GREEN" if ok else "PROBE FAILED")
