@@ -51,6 +51,11 @@ shared on-disk layout from here: the layout column list
 sizing (:func:`sized_buckets`). Each writer keeps its own sidecar
 fields and its own write arrangement.
 
+:func:`layout_leaves` is the one walk of a table's ``col=value``
+tree: the overlay linker (:func:`overlay.link_untouched`), the layout
+probes here and compaction's per-leaf sizing all find leaves through
+it, so the rule for what counts as a leaf cannot drift between them.
+
 The module also owns the bound on IDENTITY partition levels
 (:data:`IDENTITY_PARTITION_MAX_KEYS`, :func:`ensure_bounded_identity`):
 one directory per distinct value is only a sane layout for a bounded
@@ -62,6 +67,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -150,20 +156,52 @@ def dir_data_bytes(path: str, include_hidden: bool = False) -> int:
     return total
 
 
-def _partition_dirs(path: str, partition_col: str) -> list[str]:
-    prefix = f"{partition_col}="
-    try:
-        return [
-            os.path.join(path, e)
-            for e in os.listdir(path)
-            if e.startswith(prefix) and os.path.isdir(os.path.join(path, e))
-        ]
-    except OSError:
-        return []
+def layout_leaves(
+    table_dir: str,
+    cols: Sequence[str],
+    on_stray: Callable[[tuple[str, ...]], None] | None = None,
+) -> Iterator[tuple[str, ...]]:
+    """Walk the ``col=value`` tree of ``table_dir`` ``len(cols)``
+    levels deep and yield each leaf's tuple of entry names, outermost
+    first (``("day_pt=2024-01-02", "kb=3")``; join them onto
+    ``table_dir`` for the path). Level ``i`` follows only
+    ``{cols[i]}=`` directories, so the sidecar, ``_SUCCESS`` and
+    foreign directories are never leaves. A non-hidden regular file
+    directly under an intermediate level (none in Spark-written
+    tables, which hold data only in leaves) is reported to
+    ``on_stray`` with its entry names, so a caller that copies the
+    tree can keep it; hidden (``.``/``_``) files there are metadata
+    and skipped. This is the one walk over a table's partition tree;
+    every caller that needs leaves goes through it."""
+
+    def walk(names: tuple[str, ...]) -> Iterator[tuple[str, ...]]:
+        depth = len(names)
+        if depth == len(cols):
+            yield names
+            return
+        d = os.path.join(table_dir, *names)
+        prefix = f"{cols[depth]}="
+        for e in os.listdir(d):
+            p = os.path.join(d, e)
+            if e.startswith(prefix) and os.path.isdir(p):
+                yield from walk((*names, e))
+            elif (
+                depth
+                and on_stray is not None
+                and not e.startswith((".", "_"))
+                and os.path.isfile(p)
+            ):
+                on_stray((*names, e))
+
+    return walk(())
 
 
 def count_partition_dirs(path: str, partition_col: str) -> int:
-    return len(_partition_dirs(path, partition_col))
+    """The number of ``partition_col=`` directories at the top of
+    ``path``; 0 when ``path`` is missing."""
+    if not os.path.isdir(path):
+        return 0
+    return sum(1 for _ in layout_leaves(path, [partition_col]))
 
 
 def layout_cols(day: bool, kb: bool) -> list[str]:
@@ -215,11 +253,10 @@ def has_layout_level(table_dir: str, col: str) -> bool:
     """Whether ``col`` is PHYSICALLY a partition level of the table
     at ``table_dir``: ``col=`` directories at the top, or — for the
     bucket level — under the day directories."""
-    if _partition_dirs(table_dir, col):
-        return True
-    return col == BUCKET_COL and any(
-        _partition_dirs(d, BUCKET_COL) for d in _partition_dirs(table_dir, DAY_COL)
-    )
+    if not os.path.isdir(table_dir):
+        return False
+    levels = [[col]] + ([[DAY_COL, BUCKET_COL]] if col == BUCKET_COL else [])
+    return any(next(layout_leaves(table_dir, c), None) for c in levels)
 
 
 def strip_layout(df: DataFrame, table_dir: str, strict: bool = False) -> DataFrame:

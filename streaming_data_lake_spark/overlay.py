@@ -11,10 +11,18 @@ directory swap used for full rewrites — so readers never see a
 partial state and the crash-recovery rule stays one rule
 (``plans/maintenance.remove_orphans``: restore the NEWEST ``__old_``
 when the base is missing). Publishes RETAIN the previous version as
-an ``__old_`` sibling instead of deleting it inline (r16: an inline
-delete races a reader's already-resolved directory handle into a
-partial/empty listing) — Iceberg's snapshot-expiry model: scheduled
-maintenance reclaims retained versions, the publish never deletes.
+an ``__old_`` sibling instead of deleting it inline, because an
+inline delete races a reader's already-resolved directory handle
+into a partial or empty listing — Iceberg's snapshot-expiry model:
+scheduled maintenance reclaims retained versions, the publish never
+deletes.
+
+Which leaves a partial rewrite replaces is one rule with one owner:
+:func:`link_untouched` walks the live tree with
+:func:`streaming_data_lake_spark.layout.layout_leaves` (the one
+walker of a table's ``col=value`` tree) and links every leaf its
+``rewritten`` predicate rejects. Every caller states its shape as
+that predicate over the leaf's entry names.
 
 Hard links are the single-filesystem analog of manifest reuse: no
 data bytes move for untouched partitions. The fallback copy only
@@ -22,8 +30,9 @@ triggers if scratch and table live on different filesystems (the
 engine stages both under one scratch root).
 
 Used by the incremental materializer (M2 lookback repair rewrites
-only the lookback-day partitions) and the keyed MERGE upsert sink
-(each micro-batch rewrites only the key-hash buckets it touches).
+only the lookback-day partitions; keyed M3/M5 repairs rewrite one
+set of ``kb`` buckets in every day) and the keyed MERGE upsert sink
+(each micro-batch rewrites only the leaves its keys land in).
 """
 
 from __future__ import annotations
@@ -33,6 +42,9 @@ import shutil
 import sys
 import time
 import uuid
+from collections.abc import Callable, Sequence
+
+from streaming_data_lake_spark.layout import layout_leaves
 
 
 def _link_file(src: str, dst: str) -> None:
@@ -65,122 +77,31 @@ def _link_tree(src: str, dst: str) -> None:
             _link_file(sf, df)
 
 
-def link_untouched_partitions(
-    live_dir: str, tmp_dir: str, partition_col: str, rewritten: set[str]
-) -> int:
-    """Hard-link every ``{partition_col}=value`` directory of
-    ``live_dir`` whose entry name is NOT in ``rewritten`` into
-    ``tmp_dir`` (recursively: a two-level layout's sub-partition
-    dirs ride along). Returns the number of reused partitions."""
-    reused = 0
-    prefix = f"{partition_col}="
-    for entry in os.listdir(live_dir):
-        src = os.path.join(live_dir, entry)
-        if (
-            not entry.startswith(prefix)
-            or entry in rewritten
-            or not os.path.isdir(src)
-        ):
-            continue
-        _link_tree(src, os.path.join(tmp_dir, entry))
-        reused += 1
-    return reused
-
-
-def link_untouched_subpartitions(
-    live_dir: str, tmp_dir: str, outer_col: str, inner_col: str, rewritten_inner: set[str]
-) -> int:
-    """Two-level overlay for INNER-keyed repairs (e.g. a keyed M3/M5
-    repair on a ``day_pt=/kb=`` table): for EVERY ``{outer_col}=``
-    partition of ``live_dir``, hard-link each ``{inner_col}=`` sub-
-    partition whose entry name is NOT in ``rewritten_inner`` into the
-    same outer dir of ``tmp_dir``. The rewritten inner values scatter
-    across all outer partitions (that is what makes the repair keyed),
-    so reuse is per-LEAF: IO stays proportional to the touched key
-    buckets, not the table. Top-level regular files of an outer
-    partition (none in practice — Spark writes leaves) are linked
-    along. Returns the number of reused leaf partitions."""
-    reused = 0
-    outer_prefix = f"{outer_col}="
-    inner_prefix = f"{inner_col}="
-    for outer in os.listdir(live_dir):
-        src_outer = os.path.join(live_dir, outer)
-        if not outer.startswith(outer_prefix) or not os.path.isdir(src_outer):
-            continue
-        dst_outer = os.path.join(tmp_dir, outer)
-        for inner in os.listdir(src_outer):
-            src_inner = os.path.join(src_outer, inner)
-            if os.path.isfile(src_inner) and not inner.startswith((".", "_")):
-                # A regular data file directly under the outer dir
-                # (none in practice — Spark writes leaves) must ride
-                # the overlay too: skipping it would silently drop it
-                # from the published version.
-                _link_file(src_inner, os.path.join(dst_outer, inner))
-                continue
-            if (
-                not inner.startswith(inner_prefix)
-                or inner in rewritten_inner
-                or not os.path.isdir(src_inner)
-            ):
-                continue
-            _link_tree(src_inner, os.path.join(dst_outer, inner))
-            reused += 1
-    return reused
-
-
-def link_untouched_leaves(
+def link_untouched(
     live_dir: str,
     tmp_dir: str,
-    outer_col: str,
-    inner_col: str,
-    rewritten: set[tuple[str, str]],
+    layout: Sequence[str],
+    rewritten: Callable[[tuple[str, ...]], bool],
 ) -> int:
-    """Two-level overlay scoped to exact ``(outer, inner)`` LEAF
-    pairs — the keyed MERGE sink's shape: a micro-batch touches
-    (recent day x its keys' hash buckets), so reuse must be decided
-    per pair, not per inner value across all days (a batch touching
-    ``kb=3`` today must not rewrite ``kb=3`` of every historical
-    day). ``rewritten`` holds ``("{outer_col}=v", "{inner_col}=v")``
-    entry-name pairs. Outer partitions with NO rewritten leaf are
-    linked wholesale (one recursive link, the common case for
-    historical days); within a touched outer dir, untouched leaves
-    link individually. Returns the number of reused leaves."""
+    """Hard-link every leaf of ``live_dir``'s ``layout`` tree (walked
+    ``len(layout)`` levels deep by :func:`layout_leaves`) for which
+    ``rewritten(leaf)`` is false into the same place under
+    ``tmp_dir``, which already holds the rewritten leaves. ``leaf`` is
+    the leaf's tuple of entry names, e.g. ``("day_pt=D", "kb=3")``,
+    so one rule covers every partial-rewrite shape: a set of days,
+    a set of ``(day, kb)`` pairs, or one ``kb`` value in every day.
+    A leaf is linked recursively, so levels below ``layout`` ride
+    along. A non-hidden regular file at an intermediate level is
+    linked too: a publish that dropped it would lose its rows.
+    Returns the number of reused leaves."""
+
+    def link_stray(names: tuple[str, ...]) -> None:
+        _link_file(os.path.join(live_dir, *names), os.path.join(tmp_dir, *names))
+
     reused = 0
-    outer_prefix = f"{outer_col}="
-    inner_prefix = f"{inner_col}="
-    touched_outers = {o for o, _i in rewritten}
-    for outer in os.listdir(live_dir):
-        src_outer = os.path.join(live_dir, outer)
-        if not outer.startswith(outer_prefix) or not os.path.isdir(src_outer):
-            continue
-        dst_outer = os.path.join(tmp_dir, outer)
-        if outer not in touched_outers:
-            _link_tree(src_outer, dst_outer)
-            reused += sum(
-                1
-                for e in os.listdir(src_outer)
-                if e.startswith(inner_prefix)
-                and os.path.isdir(os.path.join(src_outer, e))
-            )
-            continue
-        for inner in os.listdir(src_outer):
-            src_inner = os.path.join(src_outer, inner)
-            if os.path.isfile(src_inner) and not inner.startswith((".", "_")):
-                # A regular data file directly under a TOUCHED outer
-                # dir (none in practice — Spark writes leaves) rides
-                # the overlay like any untouched data: untouched
-                # outers link it via _link_tree, so dropping it here
-                # would silently lose it from the published version
-                # (ADVICE r8 #3 — mirror of the subpartition case).
-                _link_file(src_inner, os.path.join(dst_outer, inner))
-                continue
-            if (
-                not inner.startswith(inner_prefix)
-                or (outer, inner) in rewritten
-                or not os.path.isdir(src_inner)
-            ):
-                continue
-            _link_tree(src_inner, os.path.join(dst_outer, inner))
+    for leaf in layout_leaves(live_dir, layout, on_stray=link_stray):
+        if not rewritten(leaf):
+            _link_tree(os.path.join(live_dir, *leaf), os.path.join(tmp_dir, *leaf))
             reused += 1
     return reused
 
@@ -190,10 +111,9 @@ _AT_FDCWD = -100
 
 
 def _resolve_renameat2():
-    """Resolve ``libc.renameat2`` ONCE with explicit argtypes/restype
-    (ADVICE r15: re-CDLL'ing libc per published leaf and relying on
-    ctypes int defaults is both wasteful and fragile for a raw
-    syscall wrapper). Returns the typed function or None when libc
+    """Resolve ``libc.renameat2`` ONCE with explicit argtypes/restype:
+    loading libc per published leaf is wasted work, and ctypes' int
+    defaults are fragile for a raw syscall wrapper. Returns the typed function or None when libc
     or the symbol is unavailable (non-Linux)."""
     try:
         import ctypes
@@ -244,7 +164,7 @@ _STAMP_WIDTH = 20  # digits; time_ns() is ~19 through year 2262
 def stamp_ns(entry_or_path: str) -> int:
     """Publish-order stamp of a retained ``__old_`` name, or -1 when
     the name carries none (legacy random-hex names). Only a stamp of
-    EXACTLY the emitted fixed width counts (ADVICE r16): a legacy
+    EXACTLY the emitted fixed width counts: a legacy
     32-char hex suffix that happens to be all digits would otherwise
     parse as an astronomically-large ns value and silently win every
     newest-entry selection."""
@@ -291,7 +211,7 @@ def young_entry(path: str, now: float, min_age_s: float) -> bool:
     children. mtime alone is wrong for ``__old_`` entries: os.rename
     PRESERVES the directory's mtime, so a table last published hours
     ago looks hours old one second after being swapped aside — and a
-    sweep would race the swap's second rename (r10 review finding).
+    sweep would race the swap's second rename.
     rename updates the inode's ctime, so ctime bounds the swap
     moment; children cover long-running writes whose top-dir times go
     stale while files stream into ``_temporary/``. A path that
@@ -318,13 +238,13 @@ def old_sibling(path: str, _group: list[str] | None = None) -> str:
     the orphan sweep's restore rule can pick the NEWEST retained
     version without trusting filesystem ctimes alone.
 
-    MONOTONIC per base (ADVICE r16): wall clocks step backwards (NTP
+    MONOTONIC per base: wall clocks step backwards (NTP
     corrections), and a backwards step between two publishes would
     invert "newest" — crash recovery would then restore a STALE
     snapshot. The stamp is therefore max(now_ns, newest existing
     sibling ORDER KEY + 1) — the order key, not just the embedded
     stamp, because sibling_order_key ranks LEGACY hex-named siblings
-    by inode ctime-ns (ADVICE r17 #3): on a mixed-era table a
+    by inode ctime-ns: on a mixed-era table a
     backwards clock step could otherwise mint a stamp that sorts
     BELOW a legacy sibling's ctime, and a crash restore would
     resurrect the stale legacy version. Publish order is preserved
@@ -347,14 +267,13 @@ def atomic_swap(path: str, tmp: str) -> None:
 
     Preferred path: ``renameat2(RENAME_EXCHANGE)`` swaps the two
     directories in ONE atomic syscall — a concurrent reader observes
-    either the old version or the new one, never a missing path (r15
-    reader-gap finding: the two-step rename leaves an instant where
-    the table path does not exist, and a reader listing it right
-    then fails PATH_NOT_FOUND — a transient job abort on a 100 TB
-    read that happened to straddle a maintenance publish).
+    either the old version or the new one, never a missing path. The
+    two-step rename leaves an instant where the table path does not
+    exist, and a reader listing it right then fails PATH_NOT_FOUND —
+    a transient job abort on a 100 TB read that happened to straddle
+    a maintenance publish.
 
-    The old version is PARKED, not deleted (r16 fallback race pin):
-    an inline rmtree races any reader whose directory handle already
+    The old version is PARKED, not deleted: an inline rmtree races any reader whose directory handle already
     resolved the pre-swap inode — readdir against a directory being
     emptied returns a PARTIAL (even empty) listing, so a scan
     straddling a publish could silently read an empty table. That
@@ -387,8 +306,7 @@ RETIRE_MIN_AGE_S = 3600.0
 
 
 def rmtree_reclaim(path: str, what: str) -> bool:
-    """THE shared reclamation rmtree (VERDICT r17 "What's wrong" #3):
-    race shapes stay silent — the entry vanishing mid-walk means
+    """THE shared reclamation rmtree. Race shapes stay silent — the entry vanishing mid-walk means
     another reclaimer/sweep won, which is fine — but a PERSISTENT
     failure (EACCES, EIO, ...) warns once on stderr with the path
     instead of being swallowed forever by ``ignore_errors=True``.
@@ -417,7 +335,7 @@ def retire_old_siblings(
     group: list[str] | None = None,
 ) -> list[str]:
     """Opportunistic reclamation of ``path``'s retained ``__old_``
-    versions at publish time (ADVICE r16): hot publish loops (a
+    versions at publish time: hot publish loops (a
     micro-batching upsert sink, a minutely materializer) park one
     retained directory per publish, and on deployments that never
     schedule ``plans.maintenance.remove_orphans`` the rewritten-leaf
@@ -453,8 +371,7 @@ def retire_old_siblings(
 
 
 def heal_missing_base(path: str) -> str | None:
-    """Self-heal a crashed fallback swap (VERDICT r16 "What's wrong"
-    #1): a crash between the two-step swap's renames leaves ``path``
+    """Self-heal a crashed fallback swap: a crash between the two-step swap's renames leaves ``path``
     missing with the committed state parked as its newest ``__old_``
     sibling — and the SCHEDULED orphan sweep rightly refuses to
     restore young entries (the mid-swap restore race), so the table

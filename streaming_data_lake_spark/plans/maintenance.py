@@ -8,8 +8,8 @@ engine's parquet tables.
    ``rewrite_data_files`` / ``OPTIMIZE``; here it is a coalesced
    rewrite with an atomic swap.
  - X2/X3 snapshot/orphan cleanup: every atomic-swap publish RETAINS
-   the previous version as an ``__old_`` sibling (r16: inline
-   deletion races a straddling reader into a partial/empty listing),
+   the previous version as an ``__old_`` sibling (inline deletion
+   races a straddling reader into a partial/empty listing),
    and a crash can additionally leave ``__tmp_`` scratch —
    :func:`remove_orphans` is the expire-snapshots analog that both
    RECOVERS and reclaims (maintenance.sh:72-79): when a base table
@@ -37,6 +37,7 @@ from streaming_data_lake_spark.locks import (
 from streaming_data_lake_spark.layout import (
     copy_layout_meta,
     dir_data_bytes as layout_dir_data_bytes,
+    layout_leaves,
     read_layout_meta,
     write_layout_meta,
 )
@@ -112,20 +113,13 @@ def _leaf_sizes(
     partition columns cast to string."""
     from urllib.parse import unquote
 
-    out: list[tuple[tuple[str, ...], int]] = []
-
-    def rec(d: str, depth: int, vals: list[str]) -> None:
-        if depth == len(part_cols):
-            out.append((tuple(vals), layout_dir_data_bytes(d)))
-            return
-        prefix = part_cols[depth] + "="
-        for e in os.listdir(d):
-            p = os.path.join(d, e)
-            if e.startswith(prefix) and os.path.isdir(p):
-                rec(p, depth + 1, vals + [unquote(e[len(prefix):])])
-
-    rec(table_dir, 0, [])
-    return out
+    return [
+        (
+            tuple(unquote(n.split("=", 1)[1]) for n in leaf),
+            layout_dir_data_bytes(os.path.join(table_dir, *leaf)),
+        )
+        for leaf in layout_leaves(table_dir, part_cols)
+    ]
 
 
 def expected_files_after_compact(
@@ -197,7 +191,7 @@ def compact_parquet(
     error (empty-input sweep finding).
 
     The whole compaction holds BOTH of the table's per-table writer
-    flocks (r17 review finding): compaction publishes with the same
+    flocks: compaction publishes with the same
     atomic_swap as the writers, and the writers' heal-at-entry
     (overlay.heal_missing_base, no age guard) assumes the flock
     holder is the only publisher for its target — an unserialized
@@ -221,7 +215,7 @@ def compact_parquet(
     ]
     try:
         # Heal a crashed fallback swap at entry, like the other two
-        # flock-entry writers (r17 review): without this, a missing
+        # flock-entry writers: without this, a missing
         # base walks as "empty table" and compaction reports a silent
         # no-op success while holding the very locks that make an
         # immediate heal safe. The age-guard-free heal is only sound
@@ -246,9 +240,9 @@ def compact_parquet(
                 # gc=True: releases the flock AND unlinks the (always
                 # zero-length) lock file, so compacting a table that
                 # is never an upsert/materializer target leaves no
-                # stray *.lock entries behind (ADVICE r17 #4) — safe
-                # because every flock user revalidates inode-vs-path
-                # after acquiring (locks.py r18).
+                # stray *.lock entries behind — safe because every
+                # flock user revalidates inode-vs-path after acquiring
+                # (locks.py).
                 release_flock(fh, lock_path, gc=True)
 
 
@@ -264,7 +258,7 @@ def _compact_parquet_locked(
     # (every row's key was NULL — one all-NULL-ts batch from a broken
     # upstream writer is enough) infers as VOID, and partitionBy
     # refuses VOID columns — the table becomes permanently
-    # uncompactable (r15 all-NULL probe). Cast exactly those columns
+    # uncompactable. Cast exactly those columns
     # to STRING: they hold only NULLs, so every row still lands in
     # the same null directory and the on-disk tree is bit-identical;
     # mixed-value levels keep their inferred types untouched.
@@ -401,7 +395,7 @@ def remove_orphans(
     A single-process maintenance cycle that KNOWS no writer is in
     flight passes 0 explicitly for run-after-the-fact semantics.
 
-    Clock-skew bound (r16): the age guard compares THIS process's
+    Clock-skew bound: the age guard compares THIS process's
     clock against filesystem timestamps, so the in-flight-writer
     guarantee assumes |sweeper-vs-fs clock skew| << min_age_s — on
     the 1h default, any realistic NTP drift. A sweeper running AHEAD
@@ -420,13 +414,12 @@ def remove_orphans(
     def young(path: str) -> bool:
         """THE shared age guard (overlay.young_entry — the same rule
         the publish-time retirement uses; ctime bounds the swap
-        moment because rename preserves mtime, r10 review finding)."""
+        moment because rename preserves mtime)."""
         return young_entry(path, now, min_age_s)
 
     def try_writer_flocks(base: str) -> tuple[bool, list]:
         """NON-BLOCKING acquisition of both per-table writer flocks
-        for a base-missing restore (r17 review, residual-race fix):
-        under both locks no flock-abiding publisher (upsert MERGE,
+        for a base-missing restore: under both locks no flock-abiding publisher (upsert MERGE,
         materializer cycle, compaction) can be mid-swap for this
         base, and concurrent SWEEPS serialize against each other too
         — closing the microsecond hole where a restore-then-new-swap
@@ -440,7 +433,7 @@ def remove_orphans(
         caller releases with gc=True — the sweep visits every
         base-missing group, most of which are never upsert/
         materializer targets, and without GC their lock files would
-        accumulate in the lake dir forever (ADVICE r17 #4)."""
+        accumulate in the lake dir forever."""
         fhs: list = []
         for suffix in (".merge.lock", ".cycle.lock"):
             lock_path = base + suffix
@@ -457,7 +450,7 @@ def remove_orphans(
             # locks were taken (documented single-writer assumption)
         return True, fhs
 
-    # Retention (r16): every publish parks the previous version as an
+    # Retention: every publish parks the previous version as an
     # ``__old_`` sibling, so multiple entries per base are the NORMAL
     # steady state, and base-missing recovery must restore the NEWEST
     # one — restoring an arbitrary entry would resurrect stale data.
@@ -473,7 +466,7 @@ def remove_orphans(
                 # base; it heals its own target at entry
             try:
                 # Decide from a FRESH listing taken UNDER the writer
-                # locks, not the pass-start one (r17 review finding):
+                # locks, not the pass-start one:
                 # the pass listing can be seconds stale, so it would
                 # MISS a fallback publisher's just-parked young
                 # sibling — a stale-group decision would see only the

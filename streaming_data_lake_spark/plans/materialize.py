@@ -53,6 +53,14 @@ is what makes the passes survive 100 TB:
    buckets, not the table. Without ``bucket_col`` the repairs keep
    the full rewrite — the reference's own contract.
 
+Both partial rewrites publish through one tail (``_publish_partial``:
+write the rewritten leaves, link the rest, copy the sidecar, refuse a
+fileless version, swap). The leaves to keep are chosen by the one
+linker, :func:`streaming_data_lake_spark.overlay.link_untouched`, over
+the one walker of a table's ``col=value`` tree,
+:func:`streaming_data_lake_spark.layout.layout_leaves`: M2 names the
+rewritten days, a keyed repair names its ``kb`` buckets in every day.
+
 The layout rules — partition columns, day/bucket key derivation,
 physical-layout detection and stripping, bucket sizing — live in
 :mod:`streaming_data_lake_spark.layout`, shared with the MERGE sink;
@@ -82,6 +90,7 @@ from streaming_data_lake_spark.layout import (
     count_partition_dirs,
     has_layout_level,
     layout_cols,
+    layout_leaves,
     read_layout_meta,
     sized_buckets,
     strip_layout,
@@ -92,8 +101,7 @@ from streaming_data_lake_spark.locks import acquire_flock
 from streaming_data_lake_spark.overlay import (
     atomic_swap,
     heal_missing_base,
-    link_untouched_partitions,
-    link_untouched_subpartitions,
+    link_untouched,
     tmp_sibling,
 )
 
@@ -204,7 +212,7 @@ class ExistsRepair:
     flag (e.g. a second click on an already has_click=true view), so
     rows whose compared values differ (null-safe) are repaired too —
     without this, count columns certified next to the flags silently
-    go stale (r9 review finding)."""
+    go stale."""
 
     key_col: str
     flag_cols: tuple[str, ...]
@@ -213,8 +221,7 @@ class ExistsRepair:
     def __post_init__(self) -> None:
         # Value-only repair (flag_cols=()) is a supported shape; BOTH
         # empty means there is nothing to detect — fail at
-        # construction, not as an IndexError deep inside run() (ADVICE
-        # r9).
+        # construction, not as an IndexError deep inside run().
         if not self.flag_cols and not self.value_cols:
             raise ValueError(
                 "ExistsRepair needs at least one of flag_cols/value_cols"
@@ -288,7 +295,7 @@ class Materializer:
         physical day partitions (plus the physical kb level for
         bucket_col targets) AND a ``_layout.json`` sidecar agreeing
         on the bucket column identity. The sidecar is what makes
-        layout drift detectable in BOTH directions (ADVICE r7): a
+        layout drift detectable in BOTH directions: a
         target that DROPS bucket_col against a kb-layout table, or
         CHANGES it to a different column (same physical tree, wrong
         hash), is a mismatch and takes the migrating full rewrite —
@@ -329,7 +336,7 @@ class Materializer:
             return target.n_buckets
         n_days = count_partition_dirs(mat_dir, DAY_COL)
         if n_days == 0:
-            # FLAT-table migration (r17 review): no day dirs exist
+            # FLAT-table migration: no day dirs exist
             # yet, so byte-based sizing would treat the whole table
             # as ONE day and pick a bucket count that, once the data
             # spreads over its real day span, leaves every (day x kb)
@@ -399,8 +406,8 @@ class Materializer:
     # at-least-once: any failure after the files land but before M6
     # advances the watermark re-appends the same increment next cycle,
     # and M2's lookback repair only covers the lookback window — so an
-    # increment older than that would duplicate PERMANENTLY (r10
-    # review finding). The append therefore stages its files, journals
+    # increment older than that would duplicate PERMANENTLY. The
+    # append therefore stages its files, journals
     # the destination list + the watermark it was computed against,
     # moves the files in, and deletes the journal only after M6
     # commits the new watermark. Recovery at cycle start: a journal
@@ -408,7 +415,7 @@ class Materializer:
     # listed files (rollback; the same rows re-append this cycle); a
     # stale watermark means the cycle completed — drop the journal.
     #
-    # Reader-visibility contract (r16, stated for honesty): M4 is the
+    # Reader-visibility contract, stated for honesty: M4 is the
     # ONE publish path that is not snapshot-atomic. Files rename in
     # one by one, so a reader listing the table mid-append sees a
     # SUBSET of the increment — Hive-style directory-table append
@@ -464,11 +471,11 @@ class Materializer:
     def _recover_missing_watermark(
         self, target: MatTarget, mat_dir: str, log: dict[str, str]
     ) -> dt.datetime:
-        """Self-heal a mat table that EXISTS without a watermark (r17
-        review): a crash between M1's publish and M6's first
-        watermark write — or a torn watermark store — previously
-        raised 'exists but no watermark' on EVERY later cycle, a
-        permanent wedge needing manual table deletion. But the lost
+        """Self-heal a mat table that EXISTS without a watermark: a
+        crash between M1's publish and M6's first watermark write —
+        or a torn watermark store — would otherwise raise 'exists but
+        no watermark' on EVERY later cycle, a permanent wedge needing
+        manual table deletion. But the lost
         value is not a guess: M6's invariant is wm == max(ts) over
         the mat table at rest, so deriving max(ts) recovers the
         EXACT watermark — M4 then appends nothing already present and
@@ -529,11 +536,10 @@ class Materializer:
         serialized with an flock on a sibling lock file — the atomic
         rename alone only protects the write, and two concurrent
         cycles for different targets could otherwise interleave
-        read→write and silently drop each other's update (ADVICE
-        r9). Where flock is unavailable the store degrades LOUDLY to
-        the documented single-writer-per-wm_dir assumption
-        (locks.acquire_flock closes a half-acquired fh and warns on
-        stderr — ADVICE r15)."""
+        read→write and silently drop each other's update. Where flock
+        is unavailable the store degrades LOUDLY to the documented
+        single-writer-per-wm_dir assumption (locks.acquire_flock
+        closes a half-acquired fh and warns on stderr)."""
         if ts.tzinfo is None:
             ts = ts.replace(tzinfo=dt.timezone.utc)
         os.makedirs(self.wm_dir, exist_ok=True)
@@ -584,12 +590,10 @@ class Materializer:
         Wall-clock per pass is recorded in ``self.last_timings``
         (pass key → seconds) so perf regressions in a cycle can be
         attributed to a PASS instead of re-litigated from aggregate
-        bench numbers (the r8→r9 layout-overhead question took a
-        dedicated A/B harness to answer; this makes the next one a
-        one-look read).
+        bench numbers.
 
-        The WHOLE cycle holds a blocking per-target flock (r15
-        concurrency probe): the watermark-store flock alone only
+        The WHOLE cycle holds a blocking per-target flock: the
+        watermark-store flock alone only
         serializes the wm read-modify-write, so two cycles fired
         concurrently on the SAME target (a scheduler double-fire, the
         oldest cron failure there is) would both read the old
@@ -602,18 +606,18 @@ class Materializer:
         Delta/Iceberg's optimistic-retry outcome without the
         conflict-abort. Where flock is unavailable the documented
         single-writer-per-target assumption applies — loudly, with
-        no fd leak (locks.acquire_flock, ADVICE r15)."""
+        no fd leak (locks.acquire_flock)."""
         lock_path = self._mat_dir(target.name) + ".cycle.lock"
         os.makedirs(os.path.dirname(lock_path), exist_ok=True)
         lock_fh = acquire_flock(lock_path, f"materialize cycle {target.name!r}")
         try:
-            # Self-heal a crashed fallback swap at cycle entry (r17,
-            # VERDICT r16 #1): under the cycle flock no swap is in
+            # Self-heal a crashed fallback swap at cycle entry: under
+            # the cycle flock no swap is in
             # flight for THIS target, so a base-missing table with a
             # parked __old_ sibling recovers now instead of waiting
             # out the scheduled sweep's ORPHAN_MIN_AGE_S blackout.
             # Only a real lock holder may run the age-guard-free heal
-            # (r17 review, same guard as compact_parquet/merge_upsert).
+            # (the same guard as compact_parquet/merge_upsert).
             healed = (
                 heal_missing_base(self._mat_dir(target.name))
                 if lock_fh is not None
@@ -649,8 +653,8 @@ class Materializer:
         # NULL-ts row satisfies NO window, so it would silently fall
         # out of the full load AND every later append/repair while
         # the declarative view kept it (edge-sweep finding: the
-        # materialized table lost every NULL-ts fact). r13 extended
-        # the rule to the full time-edge admission window: an
+        # materialized table lost every NULL-ts fact). The rule
+        # covers the full time-edge admission window: an
         # out-of-range ts would mint a garbage day_pt= partition, and
         # a single far-future fact would pin max(ts) so every
         # watermark-bounded later pass believes it is fully caught up
@@ -681,7 +685,7 @@ class Materializer:
                 # dir with no watermark: read_mat then fails
                 # UNABLE_TO_INFER_SCHEMA and every later cycle hits
                 # the exists-branch's 'no watermark' error — a wedge
-                # only manual deletion cleared (r10 review finding).
+                # only manual deletion cleared.
                 # Leave the table nonexistent; the next cycle retries.
                 log["M1"] = "empty view, load deferred"
                 _mark("M1")
@@ -698,7 +702,7 @@ class Materializer:
                 wm = self._recover_missing_watermark(target, mat_dir, log)
             if self._recover_m4(target.name, wm, mat_dir):
                 # Roll back a crashed append BEFORE any layout
-                # migration (r17 review): the migration's full
+                # migration: the migration's full
                 # rewrite absorbs the uncommitted increment into new
                 # file names the journal cannot name — recovery would
                 # then no-op, retire the journal, and M4 would append
@@ -727,7 +731,7 @@ class Materializer:
             # The lookback window's day partitions — pure arithmetic
             # on the window bounds, no job. day_pt values were derived
             # by to_date(ts) in the SESSION timezone, so the window's
-            # day names must come from the same zone (r17 review): on
+            # day names must come from the same zone: on
             # a non-UTC session a UTC-named list misses the partition
             # a near-midnight row actually lives in, and the repair
             # would write the row into an un-rewritten day while the
@@ -781,15 +785,20 @@ class Materializer:
                 if view_cnt != mat_cnt:
                     # Rewrite ONLY the lookback-day partitions:
                     # windowed view rows plus the same days'
-                    # out-of-window remnant; every other partition is
-                    # reused (hard-linked) into the new table version
-                    # by _overwrite_partitions.
+                    # out-of-window remnant. A day is replaced whole,
+                    # so the link walks the day level alone; every
+                    # other day — its kb leaves included — is
+                    # hard-linked into the new table version.
                     repaired = (
                         mat_raw.filter(day_in_window)
                         .filter(~in_window)
                         .unionByName(self._with_layout(win_view, target, n_buckets))
                     )
-                    self._overwrite_partitions(mat_dir, repaired, days, target)
+                    rewritten = {(f"{DAY_COL}={x.isoformat()}",) for x in days}
+                    self._publish_partial(
+                        mat_dir, repaired, target, [DAY_COL],
+                        rewritten.__contains__, "partition-scoped repair",
+                    )
                     log["M2"] = f"repaired window ({mat_cnt}→{view_cnt} rows)"
                 else:
                     log["M2"] = "no drift"
@@ -805,7 +814,7 @@ class Materializer:
             for dep in target.dims:
                 dim = dep.dim(self.spark)
                 # Change detection is bounded to ADMISSIBLE validity
-                # starts (r14, dim-side extension of the r13 time-edge
+                # starts (the dim-side half of the time-edge
                 # contract): a single dim version stamped with a
                 # year-9999 valid_from would otherwise satisfy
                 # `valid_from > wm` on EVERY cycle and phantom-flag
@@ -856,7 +865,7 @@ class Materializer:
             if target.exists_repair is not None:
                 er = target.exists_repair
                 mat = self.read_mat(target.name)
-                # Null-safe rising edge (r17 review): a flag that
+                # Null-safe rising edge: a flag that
                 # materialized NULL (nullable outer-join flag before
                 # the downstream event existed) and later turns true
                 # must repair — `(~NULL) & true` is NULL and filter()
@@ -894,8 +903,8 @@ class Materializer:
                     if changed.isEmpty():
                         log["M5"] = "no flag flips"
                     else:
-                        # ts <= wm, exactly like M3's reinsert (r17
-                        # review): a flipped key can ALSO carry a new
+                        # ts <= wm, exactly like M3's reinsert: a
+                        # flipped key can ALSO carry a new
                         # view row at ts > wm, which M4 appends later
                         # this same cycle — without the guard M5
                         # inserts it first and the append duplicates
@@ -1062,15 +1071,14 @@ class Materializer:
             # kb is the constant 0: each day's files ARE its single
             # leaf — move them under kb=0 without another Spark job
             # (checksum companions move with their data files).
-            for e in os.listdir(staged):
-                d = os.path.join(staged, e)
-                if e.startswith(f"{DAY_COL}=") and os.path.isdir(d):
-                    leaf = os.path.join(d, f"{KB_COL}=0")
-                    os.makedirs(leaf)
-                    for f in os.listdir(d):
-                        p = os.path.join(d, f)
-                        if os.path.isfile(p):
-                            os.rename(p, os.path.join(leaf, f))
+            for day in layout_leaves(staged, [DAY_COL]):
+                d = os.path.join(staged, *day)
+                leaf = os.path.join(d, f"{KB_COL}=0")
+                os.makedirs(leaf)
+                for f in os.listdir(d):
+                    p = os.path.join(d, f)
+                    if os.path.isfile(p):
+                        os.rename(p, os.path.join(leaf, f))
         else:
             rebucketed = tmp_sibling(mat_dir)
             df = self.spark.read.parquet(staged).withColumn(
@@ -1087,9 +1095,9 @@ class Materializer:
 
     @staticmethod
     def _guard_nonempty_publish(path: str, tmp: str, what: str) -> None:
-        """Refuse to publish a version with ZERO data files (r17
-        review): parquet writes of an empty frame emit only _SUCCESS,
-        and a published fileless dir wedges EVERY later cycle
+        """Refuse to publish a version with ZERO data files: parquet
+        writes of an empty frame emit only _SUCCESS, and a published
+        fileless dir wedges EVERY later cycle
         (read_mat / the migration read die UNABLE_TO_INFER_SCHEMA —
         the typed-empty fallback covers a MISSING path, not an
         existing fileless one). A repair that would converge the
@@ -1128,30 +1136,33 @@ class Materializer:
         self._guard_nonempty_publish(path, tmp, "full rewrite")
         atomic_swap(path, tmp)
 
-    def _overwrite_partitions(
-        self, path: str, df: DataFrame, days: list[dt.date], target: MatTarget
+    def _publish_partial(
+        self,
+        path: str,
+        df: DataFrame,
+        target: MatTarget,
+        link_layout: list[str],
+        rewritten: Callable[[tuple[str, ...]], bool],
+        what: str,
     ) -> None:
-        """Publish a new table version that REWRITES only the ``days``
-        partitions (``df`` must hold exactly those days' rows, layout
-        columns included) and reuses every other partition from the
-        current version via hard links — the filesystem analog of an
-        Iceberg overwrite snapshot keeping untouched manifests (a
-        bucket-layout target's kb sub-dirs ride the recursive link).
-        The publish is the same single atomic swap as a full rewrite,
-        so the crash-recovery contract (remove_orphans' restore rule)
-        is unchanged."""
+        """Publish a new table version that REWRITES only the leaves
+        ``df`` holds (layout columns included) and reuses every leaf
+        of ``link_layout`` that ``rewritten`` rejects from the current
+        version via hard links (:func:`overlay.link_untouched`) — the
+        filesystem analog of an Iceberg overwrite snapshot keeping
+        untouched manifests. The publish is the same single atomic
+        swap as a full rewrite, so the crash-recovery contract
+        (remove_orphans' restore rule) is unchanged. The repair set is
+        window- or key-sized: one task per rewritten leaf keeps it at
+        one file."""
         layout = target.layout
         tmp = tmp_sibling(path)
-        # The repair set is window-sized: one task per rewritten leaf
-        # keeps it at one file.
         df.repartition(*[F.col(c) for c in layout]).write.mode(
             "overwrite"
         ).partitionBy(*layout).parquet(tmp)
-        link_untouched_partitions(
-            path, tmp, DAY_COL, {f"{DAY_COL}={d.isoformat()}" for d in days}
-        )
+        link_untouched(path, tmp, link_layout, rewritten)
         copy_layout_meta(path, tmp)
-        self._guard_nonempty_publish(path, tmp, "partition-scoped repair")
+        self._guard_nonempty_publish(path, tmp, what)
         atomic_swap(path, tmp)
 
     def _repair_keys(
@@ -1190,14 +1201,9 @@ class Materializer:
             F.broadcast(changed), on=key_col, how="left_anti"
         )
         df = keep.unionByName(self._with_layout(reinsert, target, n_buckets))
-        tmp = tmp_sibling(path)
-        df.repartition(F.col(DAY_COL), F.col(KB_COL)).write.mode(
-            "overwrite"
-        ).partitionBy(DAY_COL, KB_COL).parquet(tmp)
-        link_untouched_subpartitions(
-            path, tmp, DAY_COL, KB_COL, {f"{KB_COL}={b}" for b in touched}
+        kbs = {f"{KB_COL}={b}" for b in touched}
+        self._publish_partial(
+            path, df, target, target.layout, lambda leaf: leaf[-1] in kbs,
+            "keyed repair",
         )
-        copy_layout_meta(path, tmp)
-        self._guard_nonempty_publish(path, tmp, "keyed repair")
-        atomic_swap(path, tmp)
         return len(touched)

@@ -439,7 +439,7 @@ def two_level_overlay_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     from streaming_data_lake_spark.functions.parity import dsum, finite
     from streaming_data_lake_spark.overlay import (
         atomic_swap,
-        link_untouched_partitions,
+        link_untouched,
         tmp_sibling,
     )
     from streaming_data_lake_spark.plans.maintenance import _parquet_files
@@ -499,7 +499,7 @@ def two_level_overlay_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     tmp = tmp_sibling(t)
     repaired.repartition(4).write.mode("overwrite").partitionBy(DAY_COL, "etype_pt").parquet(tmp)
-    link_untouched_partitions(t, tmp, DAY_COL, {f"{DAY_COL}={_REPAIR_DAY}"})
+    link_untouched(t, tmp, [DAY_COL], lambda leaf: leaf == (f"{DAY_COL}={_REPAIR_DAY}",))
     atomic_swap(t, tmp)
 
     # Scale-robust file expectation: one file per leaf UNDER the

@@ -78,6 +78,9 @@ _NON_VIEW = {
     "event_quality_spine_hourly",
     "duplicate_rates_hourly",
     "partition_pruned_scan",
+    # builds the durable bucketed orders/lineitem artifacts
+    # (plans/bucketing.bucketed_join) at construction
+    "bucketed_colocated_join",
 }
 
 

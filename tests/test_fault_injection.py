@@ -252,9 +252,9 @@ def test_overlay_and_sweep_outcomes_survive_reversed_readdir(tmp_path, monkeypat
     os.makedirs(dst_a)
     os.makedirs(dst_b)
     rewritten = {("d=1", "kb=1")}
-    n_nat = overlay.link_untouched_leaves(src_a, dst_a, "d", "kb", rewritten)
+    n_nat = overlay.link_untouched(src_a, dst_a, ["d", "kb"], rewritten.__contains__)
     monkeypatch.setattr(os, "listdir", reversed_listdir)
-    n_rev = overlay.link_untouched_leaves(src_b, dst_b, "d", "kb", rewritten)
+    n_rev = overlay.link_untouched(src_b, dst_b, ["d", "kb"], rewritten.__contains__)
     monkeypatch.undo()
     assert n_nat == n_rev == 3
 

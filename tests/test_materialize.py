@@ -1013,8 +1013,7 @@ def test_merge_upsert_day_layout_links_old_days(spark, tmp_path):
     """A time-keyed upsert table (ts_col in keys) gets the two-level
     day_pt=/kb= layout, and a MERGE touching only recent days reuses
     every historical (day x kb) leaf as the same inode — merge IO
-    proportional to the batch's day x key spread, not the table
-    (VERDICT r7 'What's wrong' #1)."""
+    proportional to the batch's day x key spread, not the table."""
     import datetime as dt
 
     from streaming_data_lake_spark.sources.upsert import merge_upsert, read_upsert
@@ -1046,6 +1045,62 @@ def test_merge_upsert_day_layout_links_old_days(spark, tmp_path):
     assert set(got.columns) == {"hour_start", "event_type", "n"}
     assert got.count() == 60
     assert got.filter("n = 9999").count() == 1
+
+
+def test_merge_keep_scan_prunes_on_both_layouts(spark, tmp_path, monkeypatch):
+    """The MERGE keep-scan reads only the touched leaves on both
+    layouts the sink writes: a ``kb=``-only table (the
+    streaming_cms_token_counts shape) and a ``day_pt=/kb=`` table
+    (streaming_upsert_hourly). The predicate a real merge builds from
+    its probe must land in PartitionFilters, not a post-scan Filter —
+    one ``kb`` term for the one-level layout, day equality plus a
+    ``kb`` term per touched day for the two-level one."""
+    import datetime as dt
+
+    from streaming_data_lake_spark.sources import upsert
+
+    built = []
+
+    def recording(layout, leaves):
+        built.append((list(layout), list(leaves)))
+        return real(layout, leaves)
+
+    real = upsert._leaf_predicate
+    monkeypatch.setattr(upsert, "_leaf_predicate", recording)
+
+    def scan_filters(t):
+        layout, leaves = built[-1]
+        df = spark.read.parquet(t).filter(real(layout, leaves))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        scan = next(ln for ln in plan.splitlines() if "PartitionFilters:" in ln)
+        pf = scan.split("PartitionFilters:")[1].split("PushedFilters:")[0]
+        post = [ln for ln in plan.splitlines() if "Filter (" in ln and "FileScan" not in ln]
+        return layout, leaves, pf, post
+
+    flat = str(tmp_path / "flat")
+    schema = "k long, v string"
+    upsert.merge_upsert(spark, flat, spark.createDataFrame(
+        [(i, "a") for i in range(40)], schema), ["k"], n_buckets=8)
+    upsert.merge_upsert(spark, flat, spark.createDataFrame(
+        [(3, "b"), (5, "b")], schema), ["k"], n_buckets=8)
+    layout, leaves, pf, post = scan_filters(flat)
+    assert layout == ["kb"] and 1 <= len(leaves) <= 2
+    assert "kb" in pf and " OR " not in pf, pf
+    assert not any("kb" in ln for ln in post), post
+
+    two = str(tmp_path / "two")
+    schema = "hour_start timestamp, n long"
+    upsert.merge_upsert(spark, two, spark.createDataFrame(
+        [(dt.datetime(2024, 1, 1 + d, h), d * 100 + h) for d in range(3) for h in range(6)],
+        schema), ["hour_start"], ts_col="hour_start", n_buckets=4)
+    upsert.merge_upsert(spark, two, spark.createDataFrame(
+        [(dt.datetime(2024, 1, 2, 1), 1), (dt.datetime(2024, 1, 3, 2), 2)], schema),
+        ["hour_start"], ts_col="hour_start", n_buckets=4)
+    layout, leaves, pf, post = scan_filters(two)
+    assert layout == ["day_pt", "kb"]
+    assert {d for d, _b in leaves} == {dt.date(2024, 1, 2), dt.date(2024, 1, 3)}
+    assert "day_pt" in pf and "kb" in pf, pf
+    assert not any("day_pt" in ln or "kb" in ln for ln in post), post
 
 
 def test_merge_upsert_ts_col_must_be_a_key(spark, tmp_path):

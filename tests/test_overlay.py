@@ -7,7 +7,7 @@ import os
 
 from streaming_data_lake_spark.overlay import (
     atomic_swap,
-    link_untouched_partitions,
+    link_untouched,
     tmp_sibling,
 )
 
@@ -16,22 +16,6 @@ def _mk(path, content=b"x"):
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "wb") as fh:
         fh.write(content)
-
-
-def test_link_untouched_partitions_reuses_inodes(tmp_path):
-    live = str(tmp_path / "t")
-    tmp = str(tmp_path / "t__tmp_x")
-    _mk(os.path.join(live, "day=2024-01-01", "a.parquet"))
-    _mk(os.path.join(live, "day=2024-01-02", "b.parquet"))
-    _mk(os.path.join(live, "_SUCCESS"))
-    _mk(os.path.join(tmp, "day=2024-01-02", "b2.parquet"))  # rewritten
-    n = link_untouched_partitions(live, tmp, "day", {"day=2024-01-02"})
-    assert n == 1
-    src = os.path.join(live, "day=2024-01-01", "a.parquet")
-    dst = os.path.join(tmp, "day=2024-01-01", "a.parquet")
-    assert os.stat(src).st_ino == os.stat(dst).st_ino
-    # rewritten partition untouched by the link pass
-    assert os.listdir(os.path.join(tmp, "day=2024-01-02")) == ["b2.parquet"]
 
 
 def test_atomic_swap_publishes_and_retains_old_version(tmp_path):
@@ -66,15 +50,15 @@ def test_tmp_sibling_is_colocated_and_swept_namable(tmp_path):
 
 def test_link_tree_recurses_two_level_layout(tmp_path):
     """A nested sub-partition level inside an untouched partition must
-    be linked wholesale, not silently dropped (ADVICE r6; the
-    reference's day(ts)+identity(col) two-level spec)."""
+    be linked wholesale, not silently dropped (the reference's
+    day(ts)+identity(col) two-level spec)."""
     live = str(tmp_path / "t")
     tmp = str(tmp_path / "t__tmp_x")
     _mk(os.path.join(live, "day=2024-01-01", "cat=mobile", "a.parquet"))
     _mk(os.path.join(live, "day=2024-01-01", "cat=desktop", "b.parquet"))
     _mk(os.path.join(live, "day=2024-01-02", "cat=mobile", "c.parquet"))
     _mk(os.path.join(tmp, "day=2024-01-02", "cat=mobile", "c2.parquet"))
-    n = link_untouched_partitions(live, tmp, "day", {"day=2024-01-02"})
+    n = link_untouched(live, tmp, ["day"], lambda leaf: leaf == ("day=2024-01-02",))
     assert n == 1
     for sub in ("cat=mobile/a.parquet", "cat=desktop/b.parquet"):
         src = os.path.join(live, "day=2024-01-01", sub)
@@ -95,7 +79,7 @@ def test_overlay_stress_many_partitions(tmp_path):
     touched = set(days[50:60])
     for d in touched:
         _mk(os.path.join(tmp, d, "part-0.parquet"), b"rewritten")
-    n = link_untouched_partitions(live, tmp, "day", touched)
+    n = link_untouched(live, tmp, ["day"], lambda leaf: leaf[0] in touched)
     assert n == 110
     untouched_inodes = {
         d: os.stat(os.path.join(live, d, "part-0.parquet")).st_ino
@@ -119,63 +103,94 @@ def test_overlay_stress_many_partitions(tmp_path):
             assert f2.read() == b"rewritten"
 
 
-def test_subpartition_link_random_trees():
-    """Property: for random two-level trees and random touched-bucket
-    sets, link_untouched_subpartitions + the tmp's own rewrites
-    reconstruct exactly (live minus touched leaves) union (rewritten
-    leaves) — no leaf lost, none duplicated, inodes reused. Pure
-    filesystem, hypothesis-driven."""
+def test_link_untouched_property():
+    """Property over the one linker, for every caller shape: a set of
+    days at depth 1 (M2), a set of (day, kb) pairs at depth 2 (the
+    MERGE sink), and one kb set in every day at depth 2 (keyed
+    M3/M5 repairs), over random two-level trees with stray files at
+    the day level. The published tmp must hold exactly the rewrites
+    plus every untouched leaf, hard-linked (same inode); a stray at
+    an intermediate level is linked when non-hidden and skipped when
+    hidden; inside a depth-1 leaf it rides the leaf; root files
+    (``_SUCCESS``) never move. Pure filesystem, hypothesis-driven."""
     import shutil
     import tempfile
 
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from streaming_data_lake_spark.overlay import link_untouched_subpartitions
-
-    @settings(max_examples=25, deadline=None)
+    @settings(max_examples=60, deadline=None)
     @given(
-        days=st.sets(st.integers(1, 9), min_size=1, max_size=5),
-        buckets_per_day=st.lists(
-            st.sets(st.integers(0, 7), min_size=1, max_size=4), min_size=5, max_size=5
+        tree=st.dictionaries(
+            st.integers(1, 6), st.sets(st.integers(0, 5), min_size=1, max_size=4),
+            min_size=1, max_size=5,
         ),
-        touched=st.sets(st.integers(0, 7), min_size=1, max_size=3),
+        strays=st.dictionaries(
+            st.integers(1, 6), st.sampled_from(["s.parquet", "_meta.json", ".s.crc"]),
+            max_size=3,
+        ),
+        shape=st.sampled_from(["days", "pairs", "kb_in_every_day"]),
+        touched=st.sets(st.tuples(st.integers(1, 6), st.integers(0, 5)), max_size=6),
     )
-    def prop(days, buckets_per_day, touched):
+    def prop(tree, strays, shape, touched):
+        days = {d for d, _b in touched}
+        if shape == "days":
+            layout = ["day"]
+            names = {(f"day={d}",) for d in days}
+            rewritten, hit = names.__contains__, lambda d, b: d in days
+        elif shape == "pairs":
+            layout = ["day", "kb"]
+            names = {(f"day={d}", f"kb={b}") for d, b in touched}
+            rewritten, hit = names.__contains__, lambda d, b: (d, b) in touched
+        else:
+            layout = ["day", "kb"]
+            kbs = {b for _d, b in touched}
+            rewritten = lambda leaf: leaf[1] in {f"kb={b}" for b in kbs}  # noqa: E731
+            hit = lambda d, b: b in kbs  # noqa: E731
         root = tempfile.mkdtemp(prefix="ovl_prop_")
         try:
             live = os.path.join(root, "live")
             tmp = os.path.join(root, "tmp")
-            day_list = sorted(days)
-            expected = {}  # (day, kb) -> content
-            for i, d in enumerate(day_list):
-                for b in buckets_per_day[i]:
-                    content = f"live-{d}-{b}".encode()
-                    _mk(os.path.join(live, f"day={d}", f"kb={b}", "f.parquet"), content)
-                    if b not in touched:
-                        expected[(d, b)] = content
-            # the rewrite produces rows only for SOME touched leaves
-            # (a repair can empty a bucket in a given day)
-            for i, d in enumerate(day_list):
-                for b in buckets_per_day[i] & touched:
-                    if (d + b) % 2 == 0:
-                        content = f"new-{d}-{b}".encode()
-                        _mk(os.path.join(tmp, f"day={d}", f"kb={b}", "f.parquet"), content)
-                        expected[(d, b)] = content
-            os.makedirs(tmp, exist_ok=True)
-            link_untouched_subpartitions(
-                live, tmp, "day", "kb", {f"kb={b}" for b in touched}
-            )
-            got = {}
-            for dd in os.listdir(tmp):
-                if not dd.startswith("day="):
+            expected = {}  # relpath -> (content, linked)
+            _mk(os.path.join(live, "_SUCCESS"), b"")
+            for d, bs in tree.items():
+                for b in bs:
+                    rel = os.path.join(f"day={d}", f"kb={b}", "f.parquet")
+                    _mk(os.path.join(live, rel), f"live-{d}-{b}".encode())
+                    if not hit(d, b):
+                        expected[rel] = (f"live-{d}-{b}".encode(), True)
+                    elif (d + b) % 2 == 0:  # a repair can empty a leaf
+                        _mk(os.path.join(tmp, rel), f"new-{d}-{b}".encode())
+                        expected[rel] = (f"new-{d}-{b}".encode(), False)
+            for d, f in strays.items():
+                if d not in tree:
                     continue
-                for kd in os.listdir(os.path.join(tmp, dd)):
-                    if not kd.startswith("kb="):
-                        continue
-                    with open(os.path.join(tmp, dd, kd, "f.parquet"), "rb") as fh:
-                        got[(int(dd[4:]), int(kd[3:]))] = fh.read()
-            assert got == expected
+                rel = os.path.join(f"day={d}", f)
+                _mk(os.path.join(live, rel), b"stray")
+                in_leaf = len(layout) == 1
+                if (in_leaf and d not in days) or (
+                    not in_leaf and not f.startswith((".", "_"))
+                ):
+                    expected[rel] = (b"stray", True)
+            os.makedirs(tmp, exist_ok=True)
+            n = link_untouched(live, tmp, layout, rewritten)
+            got = {}
+            for r, _dirs, files in os.walk(tmp):
+                for f in files:
+                    rel = os.path.relpath(os.path.join(r, f), tmp)
+                    with open(os.path.join(tmp, rel), "rb") as fh:
+                        got[rel] = fh.read()
+            assert got == {rel: c for rel, (c, _l) in expected.items()}
+            for rel, (_c, linked) in expected.items():
+                same = (
+                    os.stat(os.path.join(tmp, rel)).st_ino
+                    == os.stat(os.path.join(live, rel)).st_ino
+                )
+                assert same == linked, rel
+            if len(layout) == 1:
+                assert n == len(set(tree) - days)
+            else:
+                assert n == sum(not hit(d, b) for d, bs in tree.items() for b in bs)
         finally:
             shutil.rmtree(root, ignore_errors=True)
 
@@ -184,17 +199,16 @@ def test_subpartition_link_random_trees():
 
 def test_subpartitions_links_stray_regular_files(tmp_path):
     """A regular data file sitting directly under an outer partition
-    dir (not inside any inner leaf) must ride the overlay — skipping
-    it would drop it from the published version (ADVICE r7)."""
-    from streaming_data_lake_spark.overlay import link_untouched_subpartitions
-
+    dir (not inside any inner leaf) must ride the overlay of a
+    kb-in-every-day repair — skipping it would drop it from the
+    published version; a hidden one is metadata and stays behind."""
     live = str(tmp_path / "live")
     tmp = str(tmp_path / "tmp")
     _mk(os.path.join(live, "day=1", "kb=0", "a.parquet"), b"a")
     _mk(os.path.join(live, "day=1", "stray.parquet"), b"s")
     _mk(os.path.join(live, "day=1", "_meta.json"), b"m")  # hidden: skipped
     _mk(os.path.join(tmp, "day=1", "kb=1", "new.parquet"), b"n")
-    link_untouched_subpartitions(live, tmp, "day", "kb", {"kb=1"})
+    link_untouched(live, tmp, ["day", "kb"], lambda leaf: leaf[1] == "kb=1")
     assert os.path.isfile(os.path.join(tmp, "day=1", "stray.parquet"))
     assert (
         os.stat(os.path.join(tmp, "day=1", "stray.parquet")).st_ino
@@ -204,101 +218,11 @@ def test_subpartitions_links_stray_regular_files(tmp_path):
     assert not os.path.exists(os.path.join(tmp, "day=1", "_meta.json"))
 
 
-def test_link_untouched_leaves_pair_scoped(tmp_path):
-    """link_untouched_leaves reuses every (outer, inner) leaf NOT in
-    the rewritten pair set — including the same inner value under a
-    different outer (the upsert sink's shape: kb=3 of TODAY is
-    rewritten, kb=3 of history is linked)."""
-    from streaming_data_lake_spark.overlay import link_untouched_leaves
-
-    live = str(tmp_path / "live")
-    tmp = str(tmp_path / "tmp")
-    for d in (1, 2, 3):
-        for b in (0, 1):
-            _mk(os.path.join(live, f"day={d}", f"kb={b}", "f.parquet"), f"{d}-{b}".encode())
-    # batch rewrites only (day=3, kb=1)
-    _mk(os.path.join(tmp, "day=3", "kb=1", "new.parquet"), b"new")
-    n = link_untouched_leaves(live, tmp, "day", "kb", {("day=3", "kb=1")})
-    assert n == 5
-    for d in (1, 2, 3):
-        for b in (0, 1):
-            if (d, b) == (3, 1):
-                continue
-            src = os.path.join(live, f"day={d}", f"kb={b}", "f.parquet")
-            dst = os.path.join(tmp, f"day={d}", f"kb={b}", "f.parquet")
-            assert os.stat(src).st_ino == os.stat(dst).st_ino, (d, b)
-    assert not os.path.exists(os.path.join(tmp, "day=3", "kb=1", "f.parquet"))
-
-
-def test_link_untouched_leaves_random_trees():
-    """Property twin of test_subpartition_link_random_trees for the
-    PAIR-scoped linker: (live minus rewritten pairs) union (tmp's own
-    rewrites) — exact, no loss, no dupes."""
-    import shutil
-    import tempfile
-
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from streaming_data_lake_spark.overlay import link_untouched_leaves
-
-    @settings(max_examples=25, deadline=None)
-    @given(
-        days=st.sets(st.integers(1, 9), min_size=1, max_size=5),
-        buckets_per_day=st.lists(
-            st.sets(st.integers(0, 7), min_size=1, max_size=4), min_size=5, max_size=5
-        ),
-        touched=st.sets(
-            st.tuples(st.integers(1, 9), st.integers(0, 7)), min_size=1, max_size=5
-        ),
-    )
-    def prop(days, buckets_per_day, touched):
-        root = tempfile.mkdtemp(prefix="ovl_leaves_")
-        try:
-            live = os.path.join(root, "live")
-            tmp = os.path.join(root, "tmp")
-            day_list = sorted(days)
-            expected = {}
-            for i, d in enumerate(day_list):
-                for b in buckets_per_day[i]:
-                    content = f"live-{d}-{b}".encode()
-                    _mk(os.path.join(live, f"day={d}", f"kb={b}", "f.parquet"), content)
-                    if (d, b) not in touched:
-                        expected[(d, b)] = content
-            for (d, b) in touched:
-                if d in days and (d + b) % 2 == 0:
-                    content = f"new-{d}-{b}".encode()
-                    _mk(os.path.join(tmp, f"day={d}", f"kb={b}", "f.parquet"), content)
-                    expected[(d, b)] = content
-            os.makedirs(tmp, exist_ok=True)
-            link_untouched_leaves(
-                live, tmp, "day", "kb",
-                {(f"day={d}", f"kb={b}") for d, b in touched},
-            )
-            got = {}
-            for dd in os.listdir(tmp):
-                if not dd.startswith("day="):
-                    continue
-                for kd in os.listdir(os.path.join(tmp, dd)):
-                    if not kd.startswith("kb="):
-                        continue
-                    with open(os.path.join(tmp, dd, kd, "f.parquet"), "rb") as fh:
-                        got[(int(dd[4:]), int(kd[3:]))] = fh.read()
-            assert got == expected
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-
-    prop()
-
-
 def test_leaves_links_stray_regular_files_in_touched_outer(tmp_path):
-    """A regular data file directly under a TOUCHED outer dir must
-    ride the overlay like any untouched data (ADVICE r8 #3): the
-    untouched-outer branch links it wholesale via _link_tree, so the
-    touched-outer branch dropping it would silently lose it from the
-    published version."""
-    from streaming_data_lake_spark.overlay import link_untouched_leaves
-
+    """A regular data file directly under an outer dir rides a
+    pair-scoped overlay whether or not that outer holds a rewritten
+    leaf — dropping it would silently lose it from the published
+    version."""
     live = str(tmp_path / "live")
     tmp = str(tmp_path / "tmp")
     _mk(os.path.join(live, "day=1", "kb=0", "a.parquet"), b"a")
@@ -308,8 +232,8 @@ def test_leaves_links_stray_regular_files_in_touched_outer(tmp_path):
     _mk(os.path.join(live, "day=2", "kb=0", "c.parquet"), b"c")
     _mk(os.path.join(live, "day=2", "stray2.parquet"), b"s2")
     _mk(os.path.join(tmp, "day=1", "kb=1", "new.parquet"), b"n")
-    n = link_untouched_leaves(live, tmp, "day", "kb", {("day=1", "kb=1")})
-    assert n == 2  # day=1/kb=0 individually + day=2/kb=0 wholesale
+    n = link_untouched(live, tmp, ["day", "kb"], {("day=1", "kb=1")}.__contains__)
+    assert n == 2  # day=1/kb=0 + day=2/kb=0
     for rel in (("day=1", "stray.parquet"), ("day=2", "stray2.parquet"),
                 ("day=1", "kb=0", "a.parquet"), ("day=2", "kb=0", "c.parquet")):
         assert (
