@@ -18,6 +18,24 @@ def _mk(path, content=b"x"):
         fh.write(content)
 
 
+def test_link_untouched_partitions_reuses_inodes(tmp_path):
+    """Depth-1 (M2) shape: every day the predicate rejects is linked
+    with its inodes reused; the rewritten day keeps only its rewrite."""
+    live = str(tmp_path / "t")
+    tmp = str(tmp_path / "t__tmp_x")
+    _mk(os.path.join(live, "day=2024-01-01", "a.parquet"))
+    _mk(os.path.join(live, "day=2024-01-02", "b.parquet"))
+    _mk(os.path.join(live, "_SUCCESS"))
+    _mk(os.path.join(tmp, "day=2024-01-02", "b2.parquet"))  # rewritten
+    n = link_untouched(live, tmp, ["day"], lambda leaf: leaf == ("day=2024-01-02",))
+    assert n == 1
+    src = os.path.join(live, "day=2024-01-01", "a.parquet")
+    dst = os.path.join(tmp, "day=2024-01-01", "a.parquet")
+    assert os.stat(src).st_ino == os.stat(dst).st_ino
+    # rewritten partition untouched by the link pass
+    assert os.listdir(os.path.join(tmp, "day=2024-01-02")) == ["b2.parquet"]
+
+
 def test_atomic_swap_publishes_and_retains_old_version(tmp_path):
     """Publish installs the new version and PARKS the previous one as
     an ``__old_`` sibling (r16 retention: inline deletion races a
@@ -193,6 +211,125 @@ def test_link_untouched_property():
                 assert n == sum(not hit(d, b) for d, bs in tree.items() for b in bs)
         finally:
             shutil.rmtree(root, ignore_errors=True)
+
+    prop()
+
+
+def _check_two_level_reconstruction(days, buckets_per_day, hit, rewritten):
+    """Build a random day/kb tree, rewrite SOME hit leaves into tmp
+    (a repair can empty a leaf), link the rest, and assert tmp holds
+    exactly (live minus hit leaves) union (rewrites) — no leaf lost,
+    none duplicated, linked leaves sharing the live inode."""
+    import shutil
+    import tempfile
+
+    root = tempfile.mkdtemp(prefix="ovl_tree_")
+    try:
+        live = os.path.join(root, "live")
+        tmp = os.path.join(root, "tmp")
+        expected = {}  # (day, kb) -> content
+        for d, bs in zip(sorted(days), buckets_per_day):
+            for b in bs:
+                rel = os.path.join(f"day={d}", f"kb={b}", "f.parquet")
+                _mk(os.path.join(live, rel), f"live-{d}-{b}".encode())
+                if not hit(d, b):
+                    expected[(d, b)] = f"live-{d}-{b}".encode()
+                elif (d + b) % 2 == 0:
+                    _mk(os.path.join(tmp, rel), f"new-{d}-{b}".encode())
+                    expected[(d, b)] = f"new-{d}-{b}".encode()
+        os.makedirs(tmp, exist_ok=True)
+        n = link_untouched(live, tmp, ["day", "kb"], rewritten)
+        got = {}
+        for dd in os.listdir(tmp):
+            for kd in os.listdir(os.path.join(tmp, dd)):
+                path = os.path.join(tmp, dd, kd, "f.parquet")
+                with open(path, "rb") as fh:
+                    got[(int(dd[4:]), int(kd[3:]))] = fh.read()
+                d, b = int(dd[4:]), int(kd[3:])
+                if not hit(d, b):
+                    src = os.path.join(live, dd, kd, "f.parquet")
+                    assert os.stat(src).st_ino == os.stat(path).st_ino, (d, b)
+        assert got == expected
+        assert n == sum(
+            not hit(d, b) for d, bs in zip(sorted(days), buckets_per_day) for b in bs
+        )
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_subpartition_link_random_trees():
+    """Property, kb-in-every-day shape (keyed M3/M5 repairs): for random
+    two-level trees and random touched-bucket sets, the linker plus
+    the tmp's own rewrites reconstruct exactly (live minus touched
+    leaves) union (rewritten leaves). Pure filesystem, hypothesis-driven."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    @settings(max_examples=25, deadline=None)
+    @given(
+        days=st.sets(st.integers(1, 9), min_size=1, max_size=5),
+        buckets_per_day=st.lists(
+            st.sets(st.integers(0, 7), min_size=1, max_size=4), min_size=5, max_size=5
+        ),
+        touched=st.sets(st.integers(0, 7), min_size=1, max_size=3),
+    )
+    def prop(days, buckets_per_day, touched):
+        names = {f"kb={b}" for b in touched}
+        _check_two_level_reconstruction(
+            days, buckets_per_day,
+            lambda d, b: b in touched, lambda leaf: leaf[1] in names,
+        )
+
+    prop()
+
+
+def test_link_untouched_leaves_pair_scoped(tmp_path):
+    """Pair shape (the MERGE sink): every (day, kb) leaf NOT in the
+    rewritten pair set is reused — including the same kb under a
+    different day (kb=1 of day=3 is rewritten, kb=1 of history is
+    linked)."""
+    live = str(tmp_path / "live")
+    tmp = str(tmp_path / "tmp")
+    for d in (1, 2, 3):
+        for b in (0, 1):
+            _mk(os.path.join(live, f"day={d}", f"kb={b}", "f.parquet"), f"{d}-{b}".encode())
+    # batch rewrites only (day=3, kb=1)
+    _mk(os.path.join(tmp, "day=3", "kb=1", "new.parquet"), b"new")
+    n = link_untouched(live, tmp, ["day", "kb"], {("day=3", "kb=1")}.__contains__)
+    assert n == 5
+    for d in (1, 2, 3):
+        for b in (0, 1):
+            if (d, b) == (3, 1):
+                continue
+            src = os.path.join(live, f"day={d}", f"kb={b}", "f.parquet")
+            dst = os.path.join(tmp, f"day={d}", f"kb={b}", "f.parquet")
+            assert os.stat(src).st_ino == os.stat(dst).st_ino, (d, b)
+    assert not os.path.exists(os.path.join(tmp, "day=3", "kb=1", "f.parquet"))
+
+
+def test_link_untouched_leaves_random_trees():
+    """Property twin of test_subpartition_link_random_trees for the
+    pair shape: (live minus rewritten pairs) union (tmp's own
+    rewrites) — exact, no loss, no dupes."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    @settings(max_examples=25, deadline=None)
+    @given(
+        days=st.sets(st.integers(1, 9), min_size=1, max_size=5),
+        buckets_per_day=st.lists(
+            st.sets(st.integers(0, 7), min_size=1, max_size=4), min_size=5, max_size=5
+        ),
+        touched=st.sets(
+            st.tuples(st.integers(1, 9), st.integers(0, 7)), min_size=1, max_size=5
+        ),
+    )
+    def prop(days, buckets_per_day, touched):
+        names = {(f"day={d}", f"kb={b}") for d, b in touched}
+        _check_two_level_reconstruction(
+            days, buckets_per_day,
+            lambda d, b: (d, b) in touched, names.__contains__,
+        )
 
     prop()
 
