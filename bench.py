@@ -108,10 +108,9 @@ def main() -> int:
     # loading. Uses the 5-row region table: machinery only.
     from streaming_data_lake_spark.scratch import scratch_dir
     from streaming_data_lake_spark.sources.streams import stream_table
-    from streaming_data_lake_spark.sources.upsert import foreach_batch_upsert
+    from streaming_data_lake_spark.streaming.pipelines import run_upsert_stream
 
-    warm_tbl = os.path.join(scratch_dir("bench_warm_out_"), "t")
-    (
+    run_upsert_stream(
         stream_table(spark, sf_dir, "region")
         .select(
             F.timestamp_seconds(F.col("r_regionkey")).alias("wts"),
@@ -120,13 +119,10 @@ def main() -> int:
         .withWatermark("wts", "1 second")
         .groupBy(F.window(F.col("wts"), "1 hour"))
         .count()
-        .select(F.col("window.start").alias("wts"), "count")
-        .writeStream.outputMode("update")
-        .foreachBatch(foreach_batch_upsert(spark, warm_tbl, ["wts"], ts_col="wts"))
-        .option("checkpointLocation", scratch_dir("bench_warm_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .select(F.col("window.start").alias("wts"), "count"),
+        os.path.join(scratch_dir("bench_warm_out_"), "t"),
+        ["wts"],
+        ts_col="wts",
     )
 
     # Host-state probes, recorded raw beside the timings so a reader

@@ -23,7 +23,8 @@ from streaming_data_lake_spark.functions.parity import (
     finite,
 )
 
-#: Event-time admission snippet on raw ``ts`` (r13 time-edge contract).
+#: Event-time admission snippet on raw ``ts``: the time-edge window
+#: (epoch, 2100) of ``admissible_ts``.
 _TS_ADM = DUCK_TS_ADMISSIBLE.format(c="ts")
 from streaming_data_lake_spark.queries.core import _EVENTS_CLEAN_ORACLE, _FUNNEL_ORACLE
 from streaming_data_lake_spark.streaming import pipelines
@@ -35,7 +36,7 @@ SELECT date_trunc('hour', ts) AS hour_start,
        -- isfinite: raw-events finiteness contract (core/analytics)
        CAST(sum(CAST((CASE WHEN isfinite(value) THEN value END) AS DECIMAL(12,2))) AS DOUBLE) AS total_value
 FROM events
--- time-keyed admission (r13 time-edge contract): windowed
+-- time-keyed admission (the time-edge window): windowed
 -- aggregation is defined only over in-range timestamped rows — the
 -- engine filters explicitly; a far-future row would otherwise poison
 -- the watermark and an ancient one aborts driver materialization
@@ -100,11 +101,11 @@ def streaming_interval_join_daily(spark: SparkSession, sf_dir: str) -> DataFrame
 _FANOUT_ORACLE = f"""
 SELECT 'clean' AS sink, count(*) AS n_rows
 FROM events
--- admission: the clean contract incl. the r13 time-edge window
+-- admission: the clean contract incl. the time-edge window
 WHERE value > 0 AND isfinite(value) AND event_type <> 'error' AND {_TS_ADM}
 UNION ALL
 SELECT 'rejected' AS sink, count(*) AS n_rows
--- coalesce: NULL-total complement, matching rejected_events (r10)
+-- coalesce: NULL-total complement, matching rejected_events
 FROM events
 WHERE NOT coalesce(value > 0 AND isfinite(value)
                    AND event_type <> 'error' AND {_TS_ADM}, false)
@@ -144,7 +145,7 @@ SELECT date_trunc('hour', ts) AS hour_start,
        -- isfinite: raw-events finiteness contract
        CAST(sum(CAST((CASE WHEN isfinite(value) THEN value END) AS DECIMAL(12,2))) AS DOUBLE) AS total_value
 FROM events
--- admission: r13 time-edge contract on the hour_start key source
+-- admission: the time-edge window on the hour_start key source
 WHERE {_TS_ADM} AND event_type IS NOT NULL
 GROUP BY 1, 2
 """
@@ -165,7 +166,7 @@ def streaming_upsert_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # event time (contrast streaming_dedup_keys, whose plain
 # dropDuplicates admits NULL-ts rows and whose oracle has no filter)
 _DEDUP_WM_ORACLE = (
-    # admission: r13 time-edge contract (watermark-evicted state)
+    # admission: the time-edge window (watermark-evicted state)
     f"SELECT DISTINCT event_id, event_type FROM events WHERE {_TS_ADM}"
 )
 
@@ -187,7 +188,7 @@ WITH o AS (
                 OR ts - lag(ts) OVER w > INTERVAL '120 minutes'
               THEN 1 ELSE 0 END AS new_sess
   FROM events
-  -- time-keyed admission (r13 time-edge contract): sessions are
+  -- time-keyed admission (the time-edge window): sessions are
   -- gap-defined over event time, so untimestamped rows cannot belong
   -- to any session, a far-future row would poison the streaming
   -- watermark (flushing/dropping live sessions), and an ancient one
@@ -222,8 +223,7 @@ GROUP BY user_id, sess_id
 def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streaming_data_lake_spark.streaming.sessionize import sessionize_native_replay
 
-    with pipelines._state_partitions(spark):
-        return sessionize_native_replay(spark, sf_dir, gap_minutes=120)
+    return sessionize_native_replay(spark, sf_dir, gap_minutes=120)
 
 
 @register(
@@ -261,7 +261,7 @@ def streaming_cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def batch_sessionize_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap_us = 120 * 60_000_000
-    # time-keyed admission (r13 time-edge contract): untimestamped
+    # time-keyed admission (the time-edge window): untimestamped
     # or out-of-range rows cannot belong to any gap-defined session
     # (without the filter each NULL-ts row forged its own session and
     # an ancient-ts session start aborted the driver's collect; the

@@ -7,7 +7,7 @@ HDFS-backed state store writes a delta file per store per micro-batch
 commit into the checkpoint dir, and on bounded availableNow replays
 that per-commit disk I/O is pure floor — the checkpoints are
 atexit-deleted scratch that nothing ever recovers from. A production
-deployment of the SAME pipelines points checkpointLocation at durable
+deployment of the SAME pipelines points its checkpoints at durable
 object storage (recovery is the point there); this only relocates the
 replay-harness scratch, not the production contract.
 

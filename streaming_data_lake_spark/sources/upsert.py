@@ -540,21 +540,3 @@ def _maybe_grow(
             keys, ts_col, desired, exists=True,
         )
 
-
-def foreach_batch_upsert(
-    spark: SparkSession,
-    table_dir: str,
-    keys: list[str],
-    ts_col: str | None = None,
-    n_buckets: int | None = None,
-):
-    """``foreachBatch`` hook writing each micro-batch through
-    :func:`merge_upsert` — the Spark equivalent of the reference's
-    Iceberg upsert sink. Pass ``ts_col`` (one of ``keys``) for
-    windowed-aggregate sinks so the table gets the day-level layout
-    and historical days stop riding every micro-batch's merge."""
-
-    def _fn(batch_df: DataFrame, batch_id: int) -> None:
-        merge_upsert(spark, table_dir, batch_df, keys, ts_col=ts_col, n_buckets=n_buckets)
-
-    return _fn

@@ -32,7 +32,7 @@ report ``shouldRunAnotherBatch`` while the advanced watermark has
 state to evict — delivers the timeout callbacks that flush them.
 Verified: one sentinel yields the exact batch gaps-and-islands row
 set, and the single-data-batch shape is row-identical to the
-one-file-per-batch shape (r19 A/B: 3 micro-batches → 2, −30% wall;
+one-file-per-batch shape (3 micro-batches → 2, measured −30% wall;
 the per-file multi-batch fold semantics stay pinned by the
 ``maxFilesPerTrigger=1`` streams tests/test_streaming.py builds).
 In production the continuous arrival of new data plays the
@@ -57,25 +57,27 @@ from pyspark.sql import functions as F
 
 from streaming_data_lake_spark.functions.parity import admissible_ts as _admissible
 from streaming_data_lake_spark.functions.parity import finite as _finite
+from streaming_data_lake_spark.scratch import scratch_dir
+from streaming_data_lake_spark.streaming.pipelines import STATE_PARTITIONS, run_bounded
 
 
 def _require_ansi(df: DataFrame) -> None:
-    """The shared value-domain contract (ADVICE r17 #2) is
-    loud-or-excluded on EVERY path: the hand fold raises explicitly
-    on finite out-of-decimal-domain values, the native twin via its
-    ANSI ``decimal(12,2)`` cast. Under ANSI-off (external
-    spark-defaults, Spark 3.x where the default was false) that cast
-    silently NULLs instead — recreating the exact path divergence the
-    contract eliminates. ``session.get_spark()`` pins
-    ``spark.sql.ansi.enabled=true`` (ADVICE r18 #1; the Spark 4.x
-    default, so a behavioral no-op there), and this assert makes the
+    """The shared value-domain contract is loud-or-excluded on EVERY
+    path: the hand fold raises explicitly on finite
+    out-of-decimal-domain values, the native twin via its ANSI
+    ``decimal(12,2)`` cast. Under ANSI-off (external spark-defaults,
+    Spark 3.x where the default was false) that cast silently NULLs
+    instead — recreating the exact path divergence the contract
+    eliminates. ``session.get_spark()`` pins
+    ``spark.sql.ansi.enabled=true`` (the Spark 4.x default, so a
+    behavioral no-op there), and this assert makes the
     native builder refuse any session where the pin is absent — the
     contract is config-independent, not convention-dependent."""
     # No fallback argument: conf.get(key) returns the EFFECTIVE value
     # (session setting or Spark's own default — "true" on 4.x). A
     # caller-supplied default would shadow Spark's default for unset
     # keys, making this assert refuse a bare driver session where
-    # ANSI is in fact on (r19 bare-sweep catch).
+    # ANSI is in fact on (tools/bare_sweep.py runs that session).
     if str(df.sparkSession.conf.get("spark.sql.ansi.enabled")).lower() != "true":
         raise RuntimeError(
             "sessionize_native requires spark.sql.ansi.enabled=true: the "
@@ -85,12 +87,6 @@ def _require_ansi(df: DataFrame) -> None:
         )
 
 
-def _scratch(prefix: str) -> str:
-    """Process-exit-cleaned scratch dir (see pipelines._scratch_dir)."""
-    from streaming_data_lake_spark.scratch import scratch_dir as _scratch_dir
-
-    return _scratch_dir(prefix)
-
 SESSION_SCHEMA = (
     "user_id long, session_start timestamp, session_end timestamp, "
     "n_events long, total_value double"
@@ -98,13 +94,13 @@ SESSION_SCHEMA = (
 
 # Per-user PENDING sessions (parallel arrays, start-ascending). Every
 # session stays in state until the watermark passes session_end + gap
-# (r17 review): emitting a gap-closed session IMMEDIATELY was wrong in
+# because emitting a gap-closed session IMMEDIATELY is wrong in
 # multi-batch runs — a late-but-admissible row in a later micro-batch
 # can still merge with it (the watermark only guarantees no MORE
-# admissible rows once it passes end + gap), so eager emission split
+# admissible rows once it passes end + gap), so eager emission splits
 # one oracle session into two sink rows. The native session_window
 # buffers until the watermark passes the window end for exactly this
-# reason; the hand fold now follows the same protocol.
+# reason; the hand fold follows the same protocol.
 _STATE_SCHEMA = (
     "starts array<long>, ends array<long>, ns array<long>, "
     "centss array<long>, nfins array<long>"
@@ -141,7 +137,7 @@ def _emit_sessions(
     nfin) sessions of one user. A session whose every value was
     NULL/non-finite (nfin == 0) emits total_value NULL — matching the
     NULL-skipping decimal SUM of the batch oracle and the certified
-    sessionize_native path, not 0.0 (ADVICE r12)."""
+    sessionize_native path, not 0.0."""
     a = np.asarray(sessions, dtype="int64")
     return pd.DataFrame(
         {
@@ -149,7 +145,7 @@ def _emit_sessions(
             # real key (edge corpora plant them; the native twin
             # sessionizes them) and np.full(n, None, dtype='int64')
             # raises TypeError in the executor worker, killing the
-            # whole query (r17 review).
+            # whole query.
             "user_id": pd.array([user_id] * len(sessions), dtype="Int64"),
             "session_start": pd.to_datetime(a[:, 0], unit="us"),
             "session_end": pd.to_datetime(a[:, 1], unit="us"),
@@ -184,17 +180,17 @@ def _fold_batch(pdf: pd.DataFrame, carried, gap_us: int):
     # INT64_MIN on most platforms — corrupting the whole session).
     # nfin counts the finite values per segment so an all-excluded
     # session can emit total_value NULL like the decimal-SUM twins
-    # instead of 0.0 (ADVICE r12).
+    # instead of 0.0.
     vals = pdf["value"].to_numpy(dtype="float64", na_value=float("nan"))
     # Shared value-domain contract, both halves loud-or-excluded the
-    # SAME way on every path (ADVICE r17 #2): non-finite values
-    # (NULL/NaN/Inf) are EXCLUDED — the native twin nulls them via
-    # _finite() before its decimal cast — while a FINITE value
-    # outside the decimal(12,2) domain (|v| >= 1e10) RAISES, exactly
-    # where the native path's ANSI decimal cast errors. The previous
-    # silent clamp (r17 review) prevented the int64-garbage-cents
-    # corruption but made the two paths diverge on out-of-domain
-    # corpora: the hand fold dropped what the native path refused.
+    # SAME way on every path: non-finite values (NULL/NaN/Inf) are
+    # EXCLUDED — the native twin nulls them via _finite() before its
+    # decimal cast — while a FINITE value outside the decimal(12,2)
+    # domain (|v| >= 1e10) RAISES, exactly where the native path's
+    # ANSI decimal cast errors. A silent clamp would prevent the
+    # int64-garbage-cents corruption but make the two paths diverge
+    # on out-of-domain corpora: the hand fold would drop what the
+    # native path refuses.
     fin = np.isfinite(vals)
     over = fin & (np.abs(vals) >= 1e10)
     if over.any():
@@ -228,8 +224,8 @@ def _fold_batch(pdf: pd.DataFrame, carried, gap_us: int):
         # seg_start - carried_end <= gap), merging sessions the batch
         # gaps-and-islands oracle and session_window keep separate —
         # and it kept late segments from merging with EACH OTHER
-        # before the carried session's span (r10 review finding; the
-        # r9 min-merge fix handled only the overlapping-start case).
+        # before the carried session's span (a min-merge on the
+        # carried start alone handles only the overlapping-start case).
         segments.extend(tuple(c) for c in carried)
         segments.sort(key=lambda s: (s[0], s[1]))
     cur, segments = segments[0], segments[1:]
@@ -277,7 +273,7 @@ def _split_ripe(
 def sessionize(src: DataFrame, gap_minutes: int = 120) -> DataFrame:
     """Stateful sessionization over a watermarked event stream.
 
-    Emission protocol (r17 review): a merged session is emitted only
+    Emission protocol: a merged session is emitted only
     once the watermark passes ``session_end + gap`` — before that, a
     late-but-admissible row in a later micro-batch can still extend
     it, and eager emission would split one oracle session into two
@@ -330,7 +326,8 @@ def sessionize(src: DataFrame, gap_minutes: int = 120) -> DataFrame:
         # Prune to the three columns the fold reads BEFORE the keyed
         # shuffle: the wide props payload would otherwise ride every
         # shuffle block and Arrow batch into the state operator.
-        # Admission matches the native twin (r13 time-edge contract);
+        # Admission matches the native twin (the admissible_ts
+        # time-edge window);
         # the replay sentinel (user int64-min, ts 2030) passes it.
         src.select("user_id", "ts", "value")
         .filter(_admissible(F.col("ts")))
@@ -394,7 +391,7 @@ def sessionize_native(src: DataFrame, gap_minutes: int = 120) -> DataFrame:
         # states the contract (the oracle carries the same admission
         # WHERE) and is safe against the pushdown NOTE above because
         # an inadmissible ts is never a watermark carrier (the replay
-        # sentinel's 2030 timestamps sit inside the r13 time-edge
+        # sentinel's 2030 timestamps sit inside the time-edge
         # window (epoch, 2100); a far-future row would otherwise
         # poison the watermark and flush live sessions — measured).
         src.select("user_id", "ts", "value")
@@ -416,63 +413,38 @@ def _replay_to_parquet(
     sf_dir: str,
     gap_minutes: int,
     build,
-    name_prefix: str,
+    state_partitions: int,
     drop_sentinel: bool = False,
-    state_partitions: int = 16,
 ) -> DataFrame:
-    """Shared bounded-replay harness for every sessionize variant:
+    """Shared bounded replay for every sessionize variant:
     sentinel-staged file stream -> variant -> durable scratch parquet
-    sink, run to completion. One implementation so the replay
-    discipline (staging, per-file triggers, checkpointing, sentinel
-    filtering) cannot drift between variants (r10 review: the three
-    replays had triplicated this block). The sink is parquet, not
+    sink (:func:`pipelines.run_bounded`). The sink is parquet, not
     memory: session rows grow with users × activity — fact-scale at
-    100× — so they land on storage via executor-written files, with
-    the file sink's ``_spark_metadata`` commit log making the
-    read-back exactly-once (VERDICT r10 "What's wrong" #1)."""
+    100× — so they land on storage via executor-written files.
+
+    ``state_partitions`` is per variant: the Python fold's measured
+    optimum is 16, while the native session_window path holds far
+    cheaper per-store state and measured fastest at the pipelines
+    default of 4 (min-of-3 interleaved at sf0.1: 4 → 2.06 s, 8 → 2.93,
+    16 → 3.19 — the per-store commit floor dominates JVM-side
+    state)."""
     from streaming_data_lake_spark.catalog import normalize_timestamps
     from streaming_data_lake_spark.sources.streams import physical_schema
 
-    from streaming_data_lake_spark.streaming.pipelines import _state_partitions
-
-    stage = _stage_with_sentinels(sf_dir)
     # No maxFilesPerTrigger: events + sentinel land in ONE data
     # batch (watermark 0 while it runs, so nothing emits early), and
     # the final no-data batch availableNow schedules for watermark-
     # pending state flushes every sealed session — one fewer full
-    # state-commit round than per-file batching, bit-identical sink
-    # (r19 A/B; multi-batch folding stays pinned by the per-file
-    # streams the tests build themselves).
+    # state-commit round than per-file batching, with an identical
+    # sink (multi-batch folding stays pinned by the per-file streams
+    # the tests build themselves).
     raw = (
         spark.readStream.schema(physical_schema(spark, sf_dir, "events"))
         .format("parquet")
-        .load(stage)
+        .load(_stage_with_sentinels(sf_dir))
     )
     sessions = build(normalize_timestamps(raw, "events"), gap_minutes)
-    out_dir = _scratch(f"{name_prefix}_")
-    # State-partition count is per VARIANT (r19): the Python fold's
-    # measured optimum is 16 (pipelines._state_partitions docstring —
-    # previously no caller passed it, so unwrapped replays ran at the
-    # ambient 32 and paid the per-store commit floor, r17 review),
-    # while the native session_window path holds far cheaper
-    # per-store state and measured fastest at the pipelines default
-    # of 4 (min-of-3 interleaved at sf0.1: 4 → 2.06 s, 8 → 2.93, 16 →
-    # 3.19 — per-store commit floor dominates JVM-side state).
-    # Scoped here, an OUTER _state_partitions (the certified streamq
-    # wrapper) set its value first and this inner scope simply
-    # re-sets/restores around the start — last writer before
-    # .start() wins.
-    with _state_partitions(spark, state_partitions):
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", _scratch("ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    out = spark.read.schema(sessions.schema).parquet(out_dir)
+    out = run_bounded(sessions, "parquet", state_partitions=state_partitions)
     if drop_sentinel:
         # The sentinel session never flushes (its window end outruns
         # the final watermark), but filter defensively: the sink is
@@ -487,25 +459,20 @@ def sessionize_native_replay(
     spark: SparkSession, sf_dir: str, gap_minutes: int = 120
 ) -> DataFrame:
     """Bounded replay of :func:`sessionize_native` (same staging and
-    sentinel discipline as :func:`sessionize_replay`): batch 0 folds
-    the events, batch 1's far-future sentinel advances the watermark,
-    and the final no-data batch flushes every open session."""
-    from streaming_data_lake_spark.streaming.pipelines import STATE_PARTITIONS
-
+    sentinel discipline as :func:`sessionize_replay`): the one data
+    batch folds the events and carries the far-future sentinel that
+    advances the watermark, and the final no-data batch flushes every
+    open session."""
     return _replay_to_parquet(
-        spark, sf_dir, gap_minutes, sessionize_native, "sessions_native",
+        spark, sf_dir, gap_minutes, sessionize_native, STATE_PARTITIONS,
         drop_sentinel=True,
-        # The pipelines default (4): the JVM-side session store's
-        # per-partition state is cheap, so the per-store commit floor
-        # dominates and fewer instances win (measured — see
-        # _replay_to_parquet).
-        state_partitions=STATE_PARTITIONS,
     )
 
 
 def _stage_with_sentinels(sf_dir: str) -> str:
     """Stage (events, sentinel) as two files with strictly increasing
-    mtimes so the file source replays them as ordered micro-batches."""
+    mtimes, so the file source lists the events first; without
+    ``maxFilesPerTrigger`` both land in one data batch."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -515,7 +482,7 @@ def _stage_with_sentinels(sf_dir: str) -> str:
     # resolve against the scratch dir (dangling link — same fix as
     # sources/streams._stream_dir).
     src = os.path.abspath(table_path(sf_dir, "events"))
-    d = _scratch("sessionize_")
+    d = scratch_dir("sessionize_")
     main = os.path.join(d, "a_events.parquet")
     os.symlink(src, main)
     schema = pq.read_schema(src)
@@ -545,6 +512,6 @@ def sessionize_replay(
     spark: SparkSession, sf_dir: str, gap_minutes: int = 120
 ) -> DataFrame:
     """Run sessionization over the bounded events table to completion
-    (availableNow, one staged file per micro-batch) and return every
-    emitted session."""
-    return _replay_to_parquet(spark, sf_dir, gap_minutes, sessionize, "sessions")
+    (availableNow, events and sentinel staged as one data batch) and
+    return every emitted session."""
+    return _replay_to_parquet(spark, sf_dir, gap_minutes, sessionize, 16)

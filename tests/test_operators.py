@@ -722,9 +722,6 @@ def test_non_view_covers_every_eager_query_fn():
         r"|artifacts\.ensure\(|seed_dimensions\(|_trained_centroids\("
         r"|ivf_knn_materialized\(|bloom_bitmap\(|Materializer\("
         r"|commit_snapshot\(|pipelines\.|compact\(|cached_parquet\("
-        # the durable bucketed-artifact writer: the LSH queries reach
-        # it four calls deep, one past the recursion bound below
-        r"|bucketed_frame\("
     )
     call_pat = re.compile(r"\b([A-Za-z_][A-Za-z0-9_]*)\(")
 
@@ -753,14 +750,20 @@ def test_non_view_covers_every_eager_query_fn():
                     names[a.asname or a.name] = getattr(mod, a.name, None)
         return names
 
-    def is_eager(fn, depth: int, seen: set) -> bool:
+    def is_eager(fn, seen: set) -> bool:
         """Recursive scan: eager work can hide INSIDE the package
         operators a query fn calls (ngram_jaccard_pairs
         localCheckpoints, dup_clusters iterates with .first(), the
-        embedding/ivfpq paths build durable artifacts) — a top-level
-        scan alone misses them. Callees resolve through the module
-        globals and the function-local imports."""
-        if id(fn) in seen or depth > 3:
+        embedding/ivfpq paths build durable artifacts, a streaming
+        replay starts its query in pipelines.start_bounded) — a
+        top-level scan alone misses them. Callees resolve through the
+        module globals and the function-local imports. The search has
+        no depth bound: it visits every package function reachable
+        from the query fn once, so one ``seen`` set per query is
+        exact: a function met again is either on the current call
+        path or was scanned and found not eager (had it been eager,
+        the search would have stopped there)."""
+        if id(fn) in seen:
             return False
         seen.add(id(fn))
         try:
@@ -775,15 +778,13 @@ def test_non_view_covers_every_eager_query_fn():
             if callee is None or not callable(callee):
                 continue
             mod = getattr(callee, "__module__", "") or ""
-            if mod.startswith("streaming_data_lake_spark") and is_eager(
-                callee, depth + 1, seen
-            ):
+            if mod.startswith("streaming_data_lake_spark") and is_eager(callee, seen):
                 return True
         return False
 
     offenders = []
     for name, q in all_queries().items():
-        if is_eager(q.fn, 0, set()) and name not in views._NON_VIEW:
+        if is_eager(q.fn, set()) and name not in views._NON_VIEW:
             offenders.append(name)
     assert not offenders, (
         f"eager-at-construction queries missing from views._NON_VIEW: {offenders}"

@@ -553,14 +553,17 @@ def test_review_r11_advice_contracts(spark):
 
 
 def test_memory_sink_sites_are_bounded_aggregates_only():
-    """VERDICT r10 #1 lint: the driver-memory sink materializes every
-    emitted row on the driver, so within the package it is reserved
-    for BOUNDED KEYED AGGREGATES — fact-scale intermediates (pair
-    sets, cleaned event streams, per-key dedup emissions, session
-    rows) must ride durable parquet sinks. Asserts (a) the only
-    `format("memory")` construction site in the package is
-    pipelines._start_to_memory, and (b) the only functions that call
-    into it are the approved bounded-aggregate list."""
+    """The driver-memory sink materializes every emitted row on the
+    driver, so within the package it is reserved for BOUNDED KEYED
+    AGGREGATES — fact-scale intermediates (pair sets, cleaned event
+    streams, per-key dedup emissions, session rows) must ride durable
+    parquet sinks. Asserts (a) the only `format("memory")`
+    construction site in the package is pipelines.start_bounded, and
+    (b) the string "memory" appears nowhere in the package except in
+    the runner's own sink dispatch (start_bounded, run_bounded) and
+    as the sink argument of the approved bounded-aggregate pipelines'
+    runner calls — so no other function can ask for the memory sink,
+    directly or through a variable."""
     import ast
     import pathlib
 
@@ -572,38 +575,54 @@ def test_memory_sink_sites_are_bounded_aggregates_only():
 
     src = (pkg / "streaming" / "pipelines.py").read_text()
     assert src.count('format("memory")') == 1
-
-    # Which top-level functions reach _start_to_memory (directly or
-    # via _run_to_memory)?
     tree = ast.parse(src)
-    callers: dict[str, set[str]] = {}
-    for node in tree.body:
-        if isinstance(node, ast.FunctionDef):
-            names = {
-                n.id
-                for n in ast.walk(node)
-                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
-            }
-            callers[node.name] = names
-    reaches = {"_start_to_memory"}
-    changed = True
-    while changed:
-        changed = False
-        for fn, names in callers.items():
-            if fn not in reaches and names & reaches:
-                reaches.add(fn)
-                changed = True
+    builder = next(
+        n for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name == "start_bounded"
+    )
+    assert 'format("memory")' in ast.get_source_segment(src, builder)
+
+    runners = {"start_bounded", "run_bounded"}
     approved = {
-        "_start_to_memory",
-        "_run_to_memory",
         # hour × event-type keyed aggregate: bounded state, update
         # mode (file sinks are append-only, MERGE sink is overkill).
-        "streaming_hourly_metrics",
+        "streaming/pipelines.py:streaming_hourly_metrics",
     }
-    assert reaches == approved, (
-        f"unapproved memory-sink reachers: {sorted(reaches - approved)}; "
-        f"fact-scale intermediates belong on _start_to_parquet"
+
+    def is_memory(node) -> bool:
+        return isinstance(node, ast.Constant) and node.value == "memory"
+
+    requesters, stray = set(), []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        mod = ast.parse(path.read_text())
+        allowed = set()
+        for fn in ast.walk(mod):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for call in ast.walk(fn):
+                if not isinstance(call, ast.Call):
+                    continue
+                callee = getattr(call.func, "id", getattr(call.func, "attr", None))
+                sink_args = call.args[1:2] + [
+                    k.value for k in call.keywords if k.arg == "sink"
+                ]
+                if callee in runners and any(is_memory(a) for a in sink_args):
+                    requesters.add(f"{rel}:{fn.name}")
+                    allowed.update(id(a) for a in sink_args)
+            if rel == "streaming/pipelines.py" and fn.name in runners:
+                # the runner's own sink dispatch and writer
+                allowed.update(id(n) for n in ast.walk(fn) if is_memory(n))
+        stray += [
+            f"{rel}:{n.lineno}"
+            for n in ast.walk(mod)
+            if is_memory(n) and id(n) not in allowed
+        ]
+    assert requesters == approved, (
+        f"unapproved memory-sink requesters: {sorted(requesters - approved)}; "
+        f"fact-scale intermediates belong on the parquet sink"
     )
+    assert not stray, f'"memory" outside the runner and its approved calls: {stray}'
 
 
 def test_parquet_sink_zero_row_stream_reads_back_empty(spark):
@@ -614,11 +633,11 @@ def test_parquet_sink_zero_row_stream_reads_back_empty(spark):
     from pyspark.sql import functions as F
 
     from streaming_data_lake_spark.sources.streams import stream_table
-    from streaming_data_lake_spark.streaming.pipelines import _run_to_parquet
+    from streaming_data_lake_spark.streaming.pipelines import run_bounded
     from tests.conftest import SF_DIR
 
     src = stream_table(spark, SF_DIR, "region")
-    out = _run_to_parquet(src.filter(F.col("r_name") == "NO_SUCH_REGION"))
+    out = run_bounded(src.filter(F.col("r_name") == "NO_SUCH_REGION"), "parquet")
     assert out.count() == 0
     assert out.columns == src.columns
 
@@ -681,7 +700,7 @@ def test_parquet_sink_reads_only_committed_files(spark, tmp_path):
 
     import pyspark.sql.functions as F
 
-    from streaming_data_lake_spark.streaming.pipelines import _start_to_parquet
+    from streaming_data_lake_spark.streaming.pipelines import start_bounded
 
     # Stage 3 single-file parquets -> 3 micro-batches under
     # maxFilesPerTrigger=1 (the file stream source lists plain files,
@@ -701,7 +720,7 @@ def test_parquet_sink_reads_only_committed_files(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(stage))
     )
-    q, result = _start_to_parquet(src.withColumn("v2", F.col("v") * 2))
+    q, result = start_bounded(src.withColumn("v2", F.col("v") * 2), "parquet")
     q.awaitTermination()
     assert q.lastProgress is not None
     out_dir = None
@@ -729,6 +748,62 @@ def test_parquet_sink_reads_only_committed_files(spark, tmp_path):
     )
     again = sorted(r["v"] for r in result().collect())
     assert again == list(range(30)), "uncommitted files must be invisible"
+
+
+def test_update_mode_memory_sink_refuses_multi_batch(spark, tmp_path):
+    """The memory sink only appends, so an update-mode key re-emitted
+    in a later micro-batch would sit beside its stale row. The runner
+    counts the data micro-batches and raises when there is more than
+    one; a single-batch replay of the same aggregate runs through."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest as _pytest
+
+    from streaming_data_lake_spark.streaming.pipelines import run_bounded
+
+    stage = tmp_path / "stage"
+    stage.mkdir()
+    for i in range(2):
+        pq.write_table(
+            pa.table({"k": pa.array([1, 2], pa.int64())}),
+            str(stage / f"f{i}.parquet"),
+        )
+
+    def counts(max_files: int):
+        return (
+            spark.readStream.schema("k long")
+            .option("maxFilesPerTrigger", max_files)
+            .parquet(str(stage))
+            .groupBy("k")
+            .count()
+        )
+
+    with _pytest.raises(RuntimeError, match="2 data micro-batches"):
+        run_bounded(counts(1), "memory", "update")
+    got = sorted((r["k"], r["count"]) for r in run_bounded(counts(2), "memory", "update").collect())
+    assert got == [(1, 2), (2, 2)]
+
+
+def test_upsert_stream_empty_input_reads_back_empty(spark, tmp_path):
+    """An empty replay MERGEs no batch, so the keyed table is never
+    created: the MERGE stream sink hands back zero rows with the
+    stream's own schema, not PATH_NOT_FOUND."""
+    from pyspark.sql import functions as F
+
+    from streaming_data_lake_spark.sources.streams import stream_table
+    from streaming_data_lake_spark.streaming.pipelines import run_upsert_stream
+
+    agg = (
+        stream_table(spark, SF_DIR, "region")
+        .filter(F.col("r_name") == "NO_SUCH_REGION")
+        .groupBy("r_regionkey")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    table_dir = str(tmp_path / "t")
+    out = run_upsert_stream(agg, table_dir, ["r_regionkey"])
+    assert not (tmp_path / "t").exists()
+    assert out.count() == 0
+    assert out.schema == agg.schema
 
 
 def test_merge_upsert_literal_key_names(spark, tmp_path):
