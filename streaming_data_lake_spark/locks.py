@@ -1,47 +1,62 @@
 """Advisory-flock acquisition shared by every serialized writer.
 
-Three write paths serialize multi-process races with a blocking
-``flock`` on a sibling lock file: the materializer's whole-cycle
-lock and watermark-store lock (plans/materialize.py) and the
-upsert sink's whole-MERGE lock (sources/upsert.py). All three
-degrade to a documented single-writer assumption where flock is
-unavailable — but that degradation must be LOUD and leak-free
-(ADVICE r15): if ``open()`` succeeds and ``flock()`` itself then
-fails (ENOLCK on NFS is the classic), the naive handler leaks the
-open descriptor and silently runs the cycle UNSERIALIZED,
-reintroducing the exact double-append race the lock exists to
-prevent, with no signal. This helper closes the fh in that branch
-and emits one stderr line so an unserialized run is always visible.
+Which path takes which lock (each a blocking ``flock`` on a sibling
+lock file unless noted):
 
-Inode revalidation (r18, ADVICE r17 #4 prerequisite): after taking
-the flock, the acquirer confirms the lock PATH still resolves to the
-inode its descriptor holds; on mismatch the blocking variant releases
-and retries (unbounded — each mismatch is proof a holder just
-completed a GC'd release, so the loop cannot live-lock) and the
-non-blocking variant reports ``busy`` (defer to the holder that just
-churned the inode).
+- ``<table>.lock`` (``overlay.writer_lock_path``), held through
+  ``overlay.table_writer``: the MERGE sink (``sources/upsert.py``),
+  the materializer cycle (``plans/materialize.py``) and compaction
+  (``plans/maintenance.compact_parquet``). The orphan sweep takes the
+  same file NON-blocking (:func:`acquire_flock_nonblocking`) before it
+  restores a base-missing table, and backs off a live holder.
+- ``<wm_dir>/_watermarks.json.lock``: the materializer's watermark store,
+  around its read-modify-write.
+- ``<table>/_commit.lock``: ``VersionedTable`` commit and
+  ``expire_snapshots``.
+
+All of them degrade to a documented single-writer assumption where
+flock is unavailable, and that degradation is LOUD and leak-free: if
+``open()`` succeeds and ``flock()`` itself then fails (ENOLCK on NFS
+is the classic), a naive handler would leak the open descriptor and
+run the writer UNSERIALIZED with no signal, bringing back the
+double-append and lost-leaf races the lock exists to prevent. These
+helpers close the fh in that branch and emit one stderr line, so an
+unserialized run is always visible.
+
+Inode revalidation: after taking the flock, the acquirer confirms
+the lock PATH still resolves to the inode its descriptor holds; on
+mismatch the blocking variant releases and retries (unbounded, since
+each mismatch is proof a holder just completed a GC'd release, so
+the loop cannot live-lock) and the non-blocking variant reports
+``busy`` (defer to the holder that just churned the inode).
 Without this, unlinking a lock file splits the lock: waiter A holds
 the fd of the unlinked inode while newcomer B creates a fresh file at
 the same path and locks THAT — two concurrent "holders". With it,
-lock files become garbage-collectable (:func:`release_flock` with
+lock files are garbage-collectable (:func:`release_flock` with
 ``gc=True``), which is what lets the orphan sweep and compaction stop
-littering ``<base>.merge.lock``/``.cycle.lock`` files for tables that
-are never writer targets. Every flock in the engine goes through this
-module, so the revalidation invariant is global.
+littering ``<table>.lock`` files for tables that are never writer
+targets. Every flock in the engine goes through this module, so the
+revalidation invariant is global.
 
-MIXED-VERSION DEPLOYMENT CONSTRAINT (ADVICE r18 #2): the GC safety
-argument covers exactly the processes that revalidate — i.e. every
-writer running THIS module. A pre-r18 binary (or any external flock
-user) sharing the same lake dir locks the path without revalidating,
-so a new-code holder's gc-unlink can hand it a split lock and
-silently re-enable the double-writer race. Operationally: DRAIN
-old-code writers before enabling sweep/compaction on a shared lake
-dir (a rolling upgrade must complete before the first GC'd release),
-and never point non-engine flock tooling at ``*.lock`` files the
-sweep may collect. The steady-state writers (upsert / materializer /
-versioned) deliberately keep their lock files — only the sweep and
-compaction release with ``gc=True`` — so the exposure window is
-maintenance, not every MERGE.
+MIXED-VERSION DEPLOYMENT CONSTRAINT: serialization covers exactly the
+processes that lock the same path and revalidate, i.e. every writer
+running THIS module. Two cases break it, and both call for the same
+rule: DRAIN old-code writers before new code runs on a shared lake
+dir (a rolling upgrade must complete first).
+
+- A binary that locks without revalidating (or any external flock
+  user) can be handed a split lock by a new-code holder's gc-unlink,
+  silently re-enabling the double-writer race. Never point
+  non-engine flock tooling at ``*.lock`` files the sweep or
+  compaction may collect. The steady-state writers (upsert,
+  materializer, versioned) keep their lock files; only the sweep and
+  compaction release with ``gc=True``, so the exposure window is
+  maintenance, not every MERGE.
+- Earlier releases locked one file per writer kind: the MERGE sink
+  and the materializer each had their own suffix beside the table,
+  and compaction took both. Such a writer and a new-code writer on
+  the same table lock DIFFERENT files, so they do not exclude each
+  other at all.
 """
 
 from __future__ import annotations
@@ -117,11 +132,11 @@ def acquire_flock(lock_path: str, what: str) -> IO[str] | None:
     GC'd release between our open and our grant — i.e. every failed
     attempt is proof of real progress elsewhere, so the loop cannot
     live-lock (no concurrent activity → first attempt validates).
-    The r18 multiprocess churn pin showed a bounded retry under
-    worst-case unlink-every-release contention exhausting into the
-    UNSERIALIZED degradation — the one outcome transient churn must
-    never produce; degradation stays reserved for flock being truly
-    unusable (ENOLCK, EMFILE, ...).
+    A bounded retry would, under worst-case unlink-every-release
+    contention (tests/test_fault_injection.py's multiprocess churn
+    test), exhaust into the UNSERIALIZED degradation — the one
+    outcome transient churn must never produce; degradation stays
+    reserved for flock being truly unusable (ENOLCK, EMFILE, ...).
     """
     fh = None
     try:
@@ -151,7 +166,7 @@ def release_flock(fh: IO[str], lock_path: str, gc: bool = False) -> None:
     lock file so opportunistic lockers (the orphan sweep's
     base-missing restore, compaction of a table that is never an
     upsert/materializer target) stop accumulating empty ``*.lock``
-    entries in the lake dir (ADVICE r17 #4).
+    entries in the lake dir.
 
     Unlink happens BEFORE close, while this process still holds the
     exclusive flock: a waiter blocked on this inode wakes after the

@@ -9,8 +9,8 @@ hard-links every untouched partition directory from the live version
 into it, and the result is published with the same single atomic
 directory swap used for full rewrites — so readers never see a
 partial state and the crash-recovery rule stays one rule
-(``plans/maintenance.remove_orphans``: restore the NEWEST ``__old_``
-when the base is missing). Publishes RETAIN the previous version as
+(:func:`heal_missing_base`: restore the NEWEST ``__old_`` when the
+base is missing). Publishes RETAIN the previous version as
 an ``__old_`` sibling instead of deleting it inline, because an
 inline delete races a reader's already-resolved directory handle
 into a partial or empty listing — Iceberg's snapshot-expiry model:
@@ -29,6 +29,15 @@ data bytes move for untouched partitions. The fallback copy only
 triggers if scratch and table live on different filesystems (the
 engine stages both under one scratch root).
 
+Every publisher of a table directory serializes on one writer lock:
+:func:`table_writer` takes a blocking flock on
+:func:`writer_lock_path` (``<table>.lock``) and, once it holds it,
+heals a crashed swap before the body runs. The MERGE sink, the
+materializer cycle and compaction each run their body inside it; the
+orphan sweep takes the same lock non-blocking before it restores a
+base-missing table. One lock per table means no lock-order rule and
+one healer per table at a time.
+
 Used by the incremental materializer (M2 lookback repair rewrites
 only the lookback-day partitions; keyed M3/M5 repairs rewrite one
 set of ``kb`` buckets in every day) and the keyed MERGE upsert sink
@@ -37,14 +46,16 @@ set of ``kb`` buckets in every day) and the keyed MERGE upsert sink
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import sys
 import time
 import uuid
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
 
 from streaming_data_lake_spark.layout import layout_leaves
+from streaming_data_lake_spark.locks import acquire_flock, release_flock
 
 
 def _link_file(src: str, dst: str) -> None:
@@ -371,18 +382,21 @@ def retire_old_siblings(
 
 
 def heal_missing_base(path: str) -> str | None:
-    """Self-heal a crashed fallback swap: a crash between the two-step swap's renames leaves ``path``
-    missing with the committed state parked as its newest ``__old_``
-    sibling — and the SCHEDULED orphan sweep rightly refuses to
-    restore young entries (the mid-swap restore race), so the table
-    stays loudly unreadable for up to ORPHAN_MIN_AGE_S. A writer that
-    HOLDS the per-table flock knows no swap is in flight for its own
-    target, so it can restore immediately at cycle entry with no age
-    guard. Restores the NEWEST sibling (publish-order stamp, ctime
-    fallback for legacy names, name as tiebreak — the same rule as
-    remove_orphans); older retained versions stay parked for normal
-    reclamation. Returns the restored entry name, or None when the
-    base exists or nothing is parked."""
+    """Restore a crashed fallback swap: a crash between the two-step
+    swap's renames leaves ``path`` missing with the committed state
+    parked as its newest ``__old_`` sibling. Renames the NEWEST
+    sibling (:func:`sibling_order_key`) back to ``path``; older
+    retained versions stay parked for normal reclamation. This is the
+    one place a parked version becomes the base again.
+
+    Callers must hold the table's writer lock (:func:`table_writer`,
+    or the orphan sweep's non-blocking take of
+    :func:`writer_lock_path`): under it no flock-abiding publisher is
+    mid-swap on ``path``, so the restore needs no age guard. A rename
+    that fails while the base is present lost a race to a restorer
+    outside the lock (a degraded-flock writer or sweep) and returns
+    None; any other failure is raised. Returns the restored entry
+    name, or None when the base exists or nothing is parked."""
     if os.path.exists(path):
         return None
     parent = os.path.dirname(path)
@@ -392,15 +406,55 @@ def heal_missing_base(path: str) -> str | None:
     newest = max(group, key=lambda e: sibling_order_key(parent, e))
     try:
         os.rename(os.path.join(parent, newest), path)
-    except FileNotFoundError:
-        # A concurrent restorer (a scheduled sweep whose age guard
-        # elapsed, or another flock-scoped healer on a different lock)
-        # renamed it first. If the base is back, the heal happened —
-        # by whichever hand; anything else is a real error.
+    except OSError:
         if os.path.exists(path):
-            return None
+            return None  # another restorer won; the base is back
         raise
     return newest
+
+
+def writer_lock_path(table_dir: str) -> str:
+    """The one lock file that serializes every publisher of
+    ``table_dir``: the MERGE sink, the materializer cycle, compaction
+    and the orphan sweep's restore."""
+    return table_dir.rstrip("/") + ".lock"
+
+
+@contextlib.contextmanager
+def table_writer(table_dir: str, what: str, gc: bool = False) -> Iterator[None]:
+    """Hold ``table_dir``'s writer lock (a blocking flock on
+    :func:`writer_lock_path`) for the body, healing a crashed swap at
+    entry.
+
+    Only a real lock holder may run the age-guard-free
+    :func:`heal_missing_base`: with the flock degraded
+    (``locks.acquire_flock`` warned UNSERIALIZED and returned None)
+    another process may be mid-swap, and an unserialized heal would
+    resurrect the pre-swap state under its second rename, so the heal
+    is left to the real holder or the age-guarded sweep. Without the
+    heal a missing base reads as an empty or absent table: the MERGE
+    would create it from one batch, the materializer would full-load
+    it and compaction would report a no-op, each orphaning the parked
+    table. ``gc`` is :func:`locks.release_flock`'s: True unlinks the
+    lock file on release (compaction, which also runs on tables no
+    steady-state writer targets)."""
+    lock_path = writer_lock_path(table_dir)
+    lock_dir = os.path.dirname(lock_path)
+    if lock_dir:
+        os.makedirs(lock_dir, exist_ok=True)
+    fh = acquire_flock(lock_path, what)
+    try:
+        healed = heal_missing_base(table_dir) if fh is not None else None
+        if healed is not None:
+            print(
+                f"{what}: restored {table_dir!r} from parked {healed!r} "
+                f"(crashed swap healed at entry)",
+                file=sys.stderr,
+            )
+        yield
+    finally:
+        if fh is not None:
+            release_flock(fh, lock_path, gc=gc)
 
 
 def tmp_sibling(path: str) -> str:

@@ -20,7 +20,6 @@ engine's parquet tables.
 
 from __future__ import annotations
 
-import errno
 import math
 import os
 import shutil
@@ -30,7 +29,6 @@ import time
 from pyspark.sql import SparkSession
 
 from streaming_data_lake_spark.locks import (
-    acquire_flock,
     acquire_flock_nonblocking,
     release_flock,
 )
@@ -46,8 +44,9 @@ from streaming_data_lake_spark.overlay import (
     heal_missing_base,
     list_old_siblings,
     rmtree_reclaim,
-    sibling_order_key,
+    table_writer,
     tmp_sibling,
+    writer_lock_path,
     young_entry,
 )
 
@@ -76,31 +75,41 @@ def _partition_cols(table_dir: str) -> list[str]:
     outermost first — ``[]`` for a flat table, one entry per level
     for partitioned layouts (e.g. ``['day_pt', 'device_category']``
     for the reference's ``day(ts) + identity(col)`` two-level spec,
-    iceberg/tables/bid_requests_enriched.yml:59-63). Detection
-    recurses down the FIRST partition dir of each level; hive layouts
-    written by Spark are homogeneous, and a heterogeneous tree would
-    fail the subsequent read anyway. Raises beyond two levels: the
-    engine's layouts (and the reference's specs) never nest deeper,
-    so a third level indicates a foreign tree compaction should not
-    silently restructure."""
+    iceberg/tables/bid_requests_enriched.yml:59-63). Every ``=``
+    directory of a level must name the same column: a foreign
+    ``x=1`` beside ``day_pt=`` leaves would otherwise decide the
+    layout by sort order, so a mixed level raises ``ValueError``
+    naming the columns before any Spark job runs. Raises
+    ``NotImplementedError`` beyond two levels: the engine's layouts
+    (and the reference's specs) never nest deeper, so a third level
+    indicates a foreign tree compaction should not silently
+    restructure."""
     cols: list[str] = []
-    d = table_dir
+    level = [table_dir]
     while True:
-        nxt = None
-        for e in sorted(os.listdir(d)):
-            if "=" in e and os.path.isdir(os.path.join(d, e)):
-                nxt = e
-                break
-        if nxt is None:
+        names: set[str] = set()
+        below: list[str] = []
+        for d in level:
+            for e in os.listdir(d):
+                if "=" in e and os.path.isdir(os.path.join(d, e)):
+                    names.add(e.split("=", 1)[0])
+                    below.append(os.path.join(d, e))
+        if not below:
             return cols
-        cols.append(nxt.split("=", 1)[0])
+        if len(names) > 1:
+            raise ValueError(
+                f"compact_parquet: {table_dir!r} mixes partition columns "
+                f"{sorted(names)} at level {len(cols) + 1}; a table's "
+                f"layout names one column per level"
+            )
+        cols.append(names.pop())
         if len(cols) > 2:
             raise NotImplementedError(
                 f"compact_parquet: {table_dir!r} has a partition layout "
                 f"deeper than two levels ({'/'.join(cols)}...); compact "
                 f"each leaf partition directory instead"
             )
-        d = os.path.join(d, nxt)
+        level = below
 
 
 def _leaf_sizes(
@@ -190,60 +199,20 @@ def compact_parquet(
     table (fresh deployment, all-empty source) is a state, not an
     error (empty-input sweep finding).
 
-    The whole compaction holds BOTH of the table's per-table writer
-    flocks: compaction publishes with the same
-    atomic_swap as the writers, and the writers' heal-at-entry
-    (overlay.heal_missing_base, no age guard) assumes the flock
-    holder is the only publisher for its target — an unserialized
-    compaction's two-step fallback window could otherwise be "healed"
-    mid-swap, failing its second rename and orphaning the compacted
-    output. The upsert sink locks ``<table>.merge.lock`` and the
-    materializer ``<table>.cycle.lock``; compaction takes both in
-    that fixed order. The orphan sweep's restore also takes both, but
-    NON-blocking (it backs off a live holder), so compaction is the
-    only BLOCKING both-lock path — no hold-and-wait cycle exists.
-    Degrades loudly where flock is unavailable, like every other
-    serialized writer."""
-    locks = [
-        (
-            table_dir.rstrip("/") + suffix,
-            acquire_flock(
-                table_dir.rstrip("/") + suffix, f"compact_parquet {table_dir!r}"
-            ),
-        )
-        for suffix in (".merge.lock", ".cycle.lock")
-    ]
-    try:
-        # Heal a crashed fallback swap at entry, like the other two
-        # flock-entry writers: without this, a missing
-        # base walks as "empty table" and compaction reports a silent
-        # no-op success while holding the very locks that make an
-        # immediate heal safe. The age-guard-free heal is only sound
-        # FOR A LOCK HOLDER — if either flock degraded (None), another
-        # process's lock may still be live and mid-swap, so leave the
-        # heal to the real holder or the age-guarded sweep.
-        healed = (
-            heal_missing_base(table_dir)
-            if all(fh is not None for _p, fh in locks)
-            else None
-        )
-        if healed is not None:
-            print(
-                f"compact_parquet: restored {table_dir!r} from parked "
-                f"{healed!r} (crashed swap healed at entry)",
-                file=sys.stderr,
-            )
+    The whole compaction runs inside the table's writer lock
+    (``overlay.table_writer``): it publishes with the same atomic_swap
+    as the MERGE sink and the materializer, and their heal-at-entry
+    assumes the lock holder is the only publisher for the table, so
+    an unserialized compaction's two-step fallback window could be
+    "healed" mid-swap, failing its second rename and orphaning the
+    compacted output. The lock's heal also runs here: without it a
+    missing base walks as an empty table and compaction would report
+    a silent no-op. The lock file is unlinked on release (``gc=True``)
+    so compacting a table no steady-state writer targets leaves no
+    ``*.lock`` entry behind. Degrades loudly where flock is
+    unavailable, like every other serialized writer."""
+    with table_writer(table_dir, "compact_parquet", gc=True):
         return _compact_parquet_locked(spark, table_dir, target_bytes)
-    finally:
-        for lock_path, fh in locks:
-            if fh is not None:
-                # gc=True: releases the flock AND unlinks the (always
-                # zero-length) lock file, so compacting a table that
-                # is never an upsert/materializer target leaves no
-                # stray *.lock entries behind — safe because every
-                # flock user revalidates inode-vs-path after acquiring
-                # (locks.py).
-                release_flock(fh, lock_path, gc=True)
 
 
 def _compact_parquet_locked(
@@ -417,39 +386,6 @@ def remove_orphans(
         moment because rename preserves mtime)."""
         return young_entry(path, now, min_age_s)
 
-    def try_writer_flocks(base: str) -> tuple[bool, list]:
-        """NON-BLOCKING acquisition of both per-table writer flocks
-        for a base-missing restore: under both locks no flock-abiding publisher (upsert MERGE,
-        materializer cycle, compaction) can be mid-swap for this
-        base, and concurrent SWEEPS serialize against each other too
-        — closing the microsecond hole where a restore-then-new-swap
-        lands between this sweep's listing and its rename. A LIVE
-        holder means skip: a flock-holding writer heals its own
-        target at entry, so the restore is its job, not ours.
-        Platforms without working flock proceed unlocked under the
-        documented single-writer assumption (the pre-lock behavior) —
-        LOUDLY, via locks.acquire_flock_nonblocking, like every other
-        degradation in the engine. Returns (path, fh) pairs so the
-        caller releases with gc=True — the sweep visits every
-        base-missing group, most of which are never upsert/
-        materializer targets, and without GC their lock files would
-        accumulate in the lake dir forever."""
-        fhs: list = []
-        for suffix in (".merge.lock", ".cycle.lock"):
-            lock_path = base + suffix
-            status, fh = acquire_flock_nonblocking(
-                lock_path, f"orphan restore of {base!r}"
-            )
-            if status == "acquired":
-                fhs.append((lock_path, fh))
-            elif status == "busy":
-                for p, h in fhs:
-                    release_flock(h, p, gc=True)
-                return False, []
-            # "unavailable": warned loudly; proceed with whatever
-            # locks were taken (documented single-writer assumption)
-        return True, fhs
-
     # Retention: every publish parks the previous version as an
     # ``__old_`` sibling, so multiple entries per base are the NORMAL
     # steady state, and base-missing recovery must restore the NEWEST
@@ -460,24 +396,32 @@ def remove_orphans(
     for base_name, group in sorted(by_base.items()):
         base = os.path.join(lake_dir, base_name)
         if not os.path.exists(base):
-            acquired, lock_fhs = try_writer_flocks(base)
-            if not acquired:
-                continue  # a live flock-holding writer owns this
-                # base; it heals its own target at entry
+            # The writers' lock, taken NON-blocking: under it no
+            # flock-abiding publisher (MERGE, materializer cycle,
+            # compaction) can be mid-swap for this base, and
+            # concurrent sweeps serialize too. A LIVE holder means
+            # skip: it heals its own table at entry. Where flock is
+            # unavailable the sweep proceeds unlocked under the
+            # documented single-writer assumption, loudly. The lock
+            # file is unlinked on release: most swept bases are never
+            # writer targets.
+            lock_path = writer_lock_path(base)
+            status, fh = acquire_flock_nonblocking(
+                lock_path, f"orphan restore of {base!r}"
+            )
+            if status == "busy":
+                continue
             try:
-                # Decide from a FRESH listing taken UNDER the writer
-                # locks, not the pass-start one:
-                # the pass listing can be seconds stale, so it would
-                # MISS a fallback publisher's just-parked young
-                # sibling — a stale-group decision would see only the
-                # aged siblings, conclude the base-missing state is a
-                # crash, and restore a STALE version into the
-                # publisher's two-step window (its second rename
-                # fails ENOTEMPTY and the just-parked committed state
-                # is later reclaimed as disposable: silent data
-                # loss). Under the locks, no flock-abiding publisher
-                # can start a swap between this listing and the
-                # rename below.
+                # Decide from a FRESH listing taken UNDER the lock,
+                # not the pass-start one: the pass listing can be
+                # seconds stale, so it would MISS a fallback
+                # publisher's just-parked young sibling, and a
+                # stale-group decision would restore a STALE version
+                # into the publisher's two-step window (its second
+                # rename fails ENOTEMPTY and the just-parked committed
+                # state is later reclaimed as disposable: silent data
+                # loss). Under the lock no flock-abiding publisher can
+                # start a swap between this listing and the restore.
                 group = list_old_siblings(base)
                 if os.path.exists(base):
                     continue  # a publisher/healer completed
@@ -492,37 +436,25 @@ def remove_orphans(
                     # second rename. Leave the whole group for the
                     # next sweep.
                     continue
-                newest = max(
-                    group, key=lambda e: sibling_order_key(lake_dir, e)
-                )
                 try:
-                    os.rename(os.path.join(lake_dir, newest), base)
+                    newest = heal_missing_base(base)
                 except OSError as exc:
-                    if isinstance(exc, (FileNotFoundError, FileExistsError)) or (
-                        exc.errno == errno.ENOTEMPTY
-                    ):
-                        # the two RACE shapes: another restorer (a
-                        # non-flock-abiding healer on a legacy lock
-                        # path, or an unlocked-platform sweep) won.
-                        # Whoever won owns the base now; skip this
-                        # group — aborting the pass would strand
-                        # every later base's restore/reclaim.
-                        continue
                     # A PERSISTENT failure (EACCES, EIO, ...) must be
-                    # LOUD, not silently skipped forever (locks.py
-                    # convention) — but still must not abort the
-                    # sweep of every other base.
+                    # LOUD, not silently skipped forever, but must not
+                    # abort the sweep of every other base.
                     print(
-                        f"remove_orphans: cannot restore {newest!r} -> "
-                        f"{base!r} ({exc!r}); table stays unreadable — "
-                        f"inspect manually",
+                        f"remove_orphans: cannot restore {base!r} from "
+                        f"its newest parked version ({exc!r}); table "
+                        f"stays unreadable — inspect manually",
                         file=sys.stderr,
                     )
                     continue
+                if newest is None:
+                    continue  # another restorer won; it owns the base
                 removed.append(f"restored:{newest}")
                 group = [e for e in group if e != newest]
             finally:
-                for lock_path, fh in lock_fhs:
+                if fh is not None:
                     release_flock(fh, lock_path, gc=True)
         for entry in group:
             path = os.path.join(lake_dir, entry)

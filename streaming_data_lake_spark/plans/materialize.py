@@ -100,8 +100,8 @@ from streaming_data_lake_spark.layout import (
 from streaming_data_lake_spark.locks import acquire_flock
 from streaming_data_lake_spark.overlay import (
     atomic_swap,
-    heal_missing_base,
     link_untouched,
+    table_writer,
     tmp_sibling,
 )
 
@@ -592,47 +592,26 @@ class Materializer:
         attributed to a PASS instead of re-litigated from aggregate
         bench numbers.
 
-        The WHOLE cycle holds a blocking per-target flock: the
-        watermark-store flock alone only
-        serializes the wm read-modify-write, so two cycles fired
+        The WHOLE cycle runs inside the target table's writer lock
+        (``overlay.table_writer``, shared with the MERGE sink,
+        compaction and the orphan sweep), which also heals a crashed
+        swap at entry instead of waiting out the scheduled sweep's
+        ORPHAN_MIN_AGE_S blackout. The watermark-store flock alone
+        only serializes the wm read-modify-write, so two cycles fired
         concurrently on the SAME target (a scheduler double-fire, the
         oldest cron failure there is) would both read the old
         watermark, both stage the same increment, and both rename
-        their UUID-named files in — a silent DOUBLE-APPEND, with the
+        their UUID-named files in: a silent DOUBLE-APPEND, with the
         second cycle's intent journal overwriting the first's crash
-        protection. Under the cycle lock the late cycle blocks, then
-        reads the COMMITTED watermark and appends nothing — a
+        protection. Under the writer lock the late cycle blocks, then
+        reads the COMMITTED watermark and appends nothing: a
         double-fire degrades to a serialized no-op, which is exactly
         Delta/Iceberg's optimistic-retry outcome without the
         conflict-abort. Where flock is unavailable the documented
-        single-writer-per-target assumption applies — loudly, with
-        no fd leak (locks.acquire_flock)."""
-        lock_path = self._mat_dir(target.name) + ".cycle.lock"
-        os.makedirs(os.path.dirname(lock_path), exist_ok=True)
-        lock_fh = acquire_flock(lock_path, f"materialize cycle {target.name!r}")
-        try:
-            # Self-heal a crashed fallback swap at cycle entry: under
-            # the cycle flock no swap is in
-            # flight for THIS target, so a base-missing table with a
-            # parked __old_ sibling recovers now instead of waiting
-            # out the scheduled sweep's ORPHAN_MIN_AGE_S blackout.
-            # Only a real lock holder may run the age-guard-free heal
-            # (the same guard as compact_parquet/merge_upsert).
-            healed = (
-                heal_missing_base(self._mat_dir(target.name))
-                if lock_fh is not None
-                else None
-            )
-            if healed is not None:
-                print(
-                    f"materialize: restored {target.name!r} from parked "
-                    f"{healed!r} (crashed swap healed at cycle entry)",
-                    file=sys.stderr,
-                )
+        single-writer-per-target assumption applies, loudly
+        (locks.acquire_flock)."""
+        with table_writer(self._mat_dir(target.name), "materialize"):
             return self._run_cycle(target, lookback_hours)
-        finally:
-            if lock_fh is not None:
-                lock_fh.close()  # releases the flock
 
     def _run_cycle(self, target: MatTarget, lookback_hours: int = 1) -> dict[str, str]:
         log: dict[str, str] = {}

@@ -73,7 +73,6 @@ table state.
 from __future__ import annotations
 
 import os
-import sys
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -90,11 +89,10 @@ from streaming_data_lake_spark.layout import (
     with_layout,
     write_layout_meta,
 )
-from streaming_data_lake_spark.locks import acquire_flock
 from streaming_data_lake_spark.overlay import (
     atomic_swap,
-    heal_missing_base,
     link_untouched,
+    table_writer,
     tmp_sibling,
 )
 
@@ -278,46 +276,24 @@ def merge_upsert(
     multi-matching sources outright; collapsing deterministically is
     kinder to streams).
 
-    The whole MERGE holds a blocking per-table flock: within one
-    streaming query, foreachBatch micro-batches are sequential, but two PROCESSES — a
-    double-started pipeline, or a batch backfill racing the stream —
-    would interleave per-leaf atomic swaps and lose whole leaves of
-    each other's updates. Serialized, concurrent merges compose to
-    last-writer-wins per key, which is MERGE semantics. Where flock
-    is unavailable the documented single-writer-per-table assumption
-    applies — loudly, with no fd leak (locks.acquire_flock).
+    The whole MERGE runs inside the table's writer lock
+    (``overlay.table_writer``), which also heals a crashed swap at
+    entry: without the heal a missing base reads as "first write" and
+    the MERGE would create the table from this batch alone, orphaning
+    the parked full table. Within one streaming query foreachBatch
+    micro-batches are sequential, but two PROCESSES (a double-started
+    pipeline, or a batch backfill racing the stream) would interleave
+    per-leaf atomic swaps and lose whole leaves of each other's
+    updates. Serialized, concurrent merges compose to last-writer-wins
+    per key, which is MERGE semantics. Compaction and the orphan
+    sweep take the same lock. Where flock is unavailable the
+    documented single-writer-per-table assumption applies, loudly
+    (locks.acquire_flock).
     """
-    lock_path = table_dir.rstrip("/") + ".merge.lock"
-    lock_dir = os.path.dirname(lock_path)
-    if lock_dir:
-        os.makedirs(lock_dir, exist_ok=True)
-    lock_fh = acquire_flock(lock_path, f"merge_upsert {table_dir!r}")
-    try:
-        # Self-heal a crashed fallback swap at MERGE entry: under the
-        # per-table flock no swap is in
-        # flight for THIS table, so a base-missing dir with a parked
-        # __old_ sibling recovers now — without this, a missing base
-        # reads as "first write" and the merge would CTAS just the
-        # batch, orphaning the parked full table.
-        # The age-guard-free heal is only sound FOR A LOCK HOLDER
-        # (the same guard as compact_parquet): with a
-        # degraded flock another process's live lock may be mid-swap,
-        # and an unserialized heal would resurrect the pre-swap state
-        # under its second rename. Degraded = defer to the real
-        # holder or the age-guarded sweep.
-        healed = heal_missing_base(table_dir) if lock_fh is not None else None
-        if healed is not None:
-            print(
-                f"merge_upsert: restored {table_dir!r} from parked "
-                f"{healed!r} (crashed swap healed at merge entry)",
-                file=sys.stderr,
-            )
+    with table_writer(table_dir, "merge_upsert"):
         return _merge_upsert_locked(
             spark, table_dir, updates, keys, ts_col=ts_col, n_buckets=n_buckets
         )
-    finally:
-        if lock_fh is not None:
-            lock_fh.close()  # releases the flock
 
 
 def _merge_upsert_locked(

@@ -9,8 +9,8 @@ contract is implemented over plain parquet: every commit writes an
 immutable ``v{N}`` directory plus a row in a ``_snapshots`` metadata
 table.
 
-Snapshot economics follow Iceberg's manifest reuse (VERDICT r8 "Next
-round" #6): an ``append`` commit takes ONLY the new rows, hard-links
+Snapshot economics follow Iceberg's manifest reuse, so append IO
+stays proportional to the appended data: an ``append`` commit takes ONLY the new rows, hard-links
 every data file of the previous version into the new ``v{N}`` dir
 (zero bytes copied for existing data — the single-filesystem analog
 of a new snapshot referencing the prior snapshot's files) and writes
@@ -53,8 +53,8 @@ class VersionedTable:
         return os.path.join(self.table_dir, "_snapshots.json")
 
     def _read_meta(self) -> list[dict]:
-        """Parse the snapshot log, tolerating a TORN FINAL line (r16
-        torn-write probe): the log is append-mode, so a crash mid-
+        """Parse the snapshot log, tolerating a TORN FINAL line
+        (tests/test_torn_writes.py): the log is append-mode, so a crash mid-
         append (or a power loss that loses the tail block) leaves a
         half-written last record — and a hard parse error here
         bricked EVERY later operation on the table (latest_version,
@@ -85,8 +85,8 @@ class VersionedTable:
         return out
 
     def _repair_torn_tail(self) -> None:
-        """Physically truncate a torn final record BEFORE appending
-        (ADVICE r16, high): _read_meta's read-side tolerance alone is
+        """Physically truncate a torn final record BEFORE appending:
+        _read_meta's read-side tolerance alone is
         DEFEATED by commit() — the torn half-line has no trailing
         newline, so an 'a'-mode append GLUES the new JSON record onto
         it. That glued line is itself unparseable, so the fresh
@@ -138,7 +138,7 @@ class VersionedTable:
         lake-level orphan sweep never descends here). Age-guarded so
         a concurrent writer's live scratch AND a straddling reader's
         expire-parked snapshot survive. The guard is the SHARED
-        overlay.young_entry rule (r17 review): a private mtime-only
+        overlay.young_entry rule, because a private mtime-only
         check read expire-parked dirs as instantly old — os.rename
         PRESERVES the directory's mtime, so a version written hours
         ago looked hours old one second after expire_snapshots parked
@@ -155,9 +155,9 @@ class VersionedTable:
             path = os.path.join(self.table_dir, entry)
             if young_entry(path, now, self._SCRATCH_MIN_AGE_S):
                 continue
-            # The shared loud-reclamation convention (r18, VERDICT
-            # r17 #3 scope extended): races silent, persistent
-            # EACCES/EIO surfaces once on stderr; retried next commit.
+            # The shared loud-reclamation convention: races silent,
+            # persistent EACCES/EIO surfaces once on stderr; retried
+            # next commit.
             rmtree_reclaim(path, "VersionedTable._sweep_stale_scratch")
 
     def _link_data_files(self, src_dir: str, dst_dir: str) -> int:
@@ -208,15 +208,15 @@ class VersionedTable:
         REJECTED: a linked-append ``v{N}`` dir mixes files from
         multiple writes, and a plain parquet read of a mixed-schema
         dir resolves to one arbitrary footer's schema — an evolved
-        column would drop nondeterministically (ADVICE r9). Iceberg
+        column would drop nondeterministically. Iceberg
         likewise gates column changes behind explicit ALTER TABLE;
         here the evolution path is an ``overwrite`` commit (which
         materializes a uniform-schema version — see
         ``schema_evolution_read`` for the mergeSchema read pattern
         over heterogeneous HISTORY).
 
-        The whole commit holds a blocking per-table flock (r17,
-        VERDICT r16 "What's wrong" #3): two unserialized committers
+        The whole commit holds a blocking per-table flock on
+        ``_commit.lock`` inside the table dir: two unserialized committers
         race _next_version's disk scan to the SAME v{N} — the loser
         hits ENOTEMPTY on the rename at best, interleaves the
         metadata log at worst. Under the flock the late committer
@@ -261,8 +261,8 @@ class VersionedTable:
         tmp = os.path.join(self.table_dir, f"__tmp_{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(tmp)
         # n_rows = previous snapshot's recorded count + the staged
-        # files' count, read BEFORE linking the previous version in
-        # (r17 review): counting the fully-linked dir opens every
+        # files' count, read BEFORE linking the previous version in:
+        # counting the fully-linked dir opens every
         # accumulated part file's footer on every small append —
         # O(all files) per commit, contradicting the module's
         # append-IO-proportional-to-appended-data contract. Linked
@@ -305,7 +305,7 @@ class VersionedTable:
         data directories (metadata rows are kept, as Iceberg keeps
         history of expired snapshots in the metadata log).
 
-        Holds the per-table commit flock (r17 review): with
+        Holds the per-table commit flock, because with
         ``keep_last=0`` an unserialized expire could rename the
         previous version out from under a concurrent append commit's
         _link_data_files walk — os.walk silently skips vanished
@@ -329,7 +329,7 @@ class VersionedTable:
         # crash between the v{N} rename and the metadata append (the
         # case _next_version numbers past) leaves a full UNRECORDED
         # v{N} dir that metadata-only candidates would never expire —
-        # an unbounded storage leak (r10 review finding). An orphan
+        # an unbounded storage leak. An orphan
         # NEWER than every recorded version is left alone (it may be
         # a commit mid-recovery); older orphans expire with their
         # recorded peers.
@@ -349,8 +349,8 @@ class VersionedTable:
         # retained metadata history alone would re-report
         # already-deleted versions on every later call.
         #
-        # Expire by RENAME, not inline rmtree (r16 — the last member
-        # of the dying-listing class): a time-travel reader mid-scan
+        # Expire by RENAME, not inline rmtree, like every other
+        # retirement in the engine: a time-travel reader mid-scan
         # of an expiring version would otherwise see its directory
         # being emptied — a silent partial read, worse than the clean
         # "version does not exist" a post-expiry lookup gets. Renamed
@@ -367,13 +367,13 @@ class VersionedTable:
             try:
                 os.rename(src, os.path.join(self.table_dir, f"__tmp_{uuid.uuid4().hex}"))
             except OSError as exc:
-                # Do NOT fall back to an inline rmtree (ADVICE r16):
-                # that reintroduces the partial-listing reader race the
+                # Do NOT fall back to an inline rmtree: that
+                # reintroduces the partial-listing reader race the
                 # rename-parking exists to eliminate, on precisely the
-                # filesystems where rename is flaky. Skip LOUDLY (r17
-                # review — the engine's degradation convention): a
-                # persistent failure must be distinguishable from
-                # already-expired, or storage grows with no signal.
+                # filesystems where rename is flaky. Skip LOUDLY (the
+                # engine's degradation convention): a persistent
+                # failure must be distinguishable from already-expired,
+                # or storage grows with no signal.
                 import sys
 
                 print(

@@ -433,7 +433,7 @@ def test_enospc_creating_commit_lockfile_degrades_loudly(
 # ---------------------------------------------------------------------------
 # r19 adversarial axis (VERDICT r18 "Next round" #5): concurrent
 # multi-writer contention on the SAME upsert table ACROSS PROCESSES,
-# with the lock-GC machinery churning the merge lock's inode under
+# with the lock-GC machinery churning the table's writer-lock inode under
 # the live writers — the flock degradation convention's hardest case
 # now that locks are GC'd and inode-revalidated. The invariants: no
 # lost updates (every writer's every key survives with its final
@@ -473,7 +473,7 @@ spark.stop()
 
 def _gc_churn_worker(lock_path: str, stop_path: str, repo: str) -> None:
     """Emulates compaction/sweep behavior against a live writer
-    table: opportunistically take the merge lock and GC-release it
+    table: opportunistically take its writer lock and GC-release it
     (unlink the inode) in a tight loop. Every successful cycle
     destroys the lock file under any blocked writer — the exact
     dead-inode retry path the revalidation invariant covers."""
@@ -503,8 +503,9 @@ def test_multiprocess_merge_contention_with_gc_churn_no_lost_updates(
     """Two independent JVM writer processes MERGE into the same
     upsert table (disjoint key ranges, several rounds each, the
     small-table single-bucket layout so every merge rewrites the same
-    leaf — maximal contention) while a third process churns the merge
-    lock's inode with GC'd releases. A lost leaf rewrite shows up as
+    leaf — maximal contention) while a third process churns the
+    table's writer-lock inode (overlay.writer_lock_path, the file
+    merge_upsert locks) with GC'd releases. A lost leaf rewrite shows up as
     missing keys or a stale round value; a split lock shows up the
     same way; contention or churn must never trip the UNSERIALIZED
     degradation."""
@@ -512,9 +513,11 @@ def test_multiprocess_merge_contention_with_gc_churn_no_lost_updates(
     import subprocess
     import sys as _sys
 
+    import streaming_data_lake_spark.overlay as overlay
+
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     table_dir = str(tmp_path / "contended_table")
-    lock_path = table_dir.rstrip("/") + ".merge.lock"
+    lock_path = overlay.writer_lock_path(table_dir)
     stop_path = str(tmp_path / "stop_churn")
     rounds, keys_per_writer, writers = 3, 25, 2
 

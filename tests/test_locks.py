@@ -107,7 +107,7 @@ def test_release_flock_gc_unlinks_zero_length_lock(tmp_path):
     and survives."""
     from streaming_data_lake_spark.locks import acquire_flock, release_flock
 
-    p = str(tmp_path / "t.merge.lock")
+    p = str(tmp_path / "t.lock")
     fh = acquire_flock(p, "test")
     assert fh is not None and os.path.exists(p)
     release_flock(fh, p, gc=True)
@@ -154,7 +154,7 @@ def test_nonblocking_acquire_gc_roundtrip(tmp_path):
         release_flock,
     )
 
-    p = str(tmp_path / "t.cycle.lock")
+    p = str(tmp_path / "t.lock")
     status, fh = acquire_flock_nonblocking(p, "sweep")
     assert status == "acquired"
     status2, fh2 = acquire_flock_nonblocking(p, "sweep2")

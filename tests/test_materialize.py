@@ -555,6 +555,65 @@ def test_compaction_refuses_three_level_layout(spark, tmp_path):
         compact_parquet(spark, t)
 
 
+def test_compaction_refuses_mixed_partition_columns(tmp_path):
+    """A level whose ``=`` directories name more than one column is
+    not a layout: a foreign ``a=1`` dir sorting before two ``day_pt=``
+    leaves used to decide the layout (``['a']``, one expected file
+    where the day layout holds two leaves). Both the expectation and
+    compaction raise ValueError naming the table and the columns,
+    before any Spark job; the ``__HIVE_DEFAULT_PARTITION__`` leaf of
+    a homogeneous tree stays legal."""
+    import pytest
+
+    from streaming_data_lake_spark.plans.maintenance import (
+        _partition_cols,
+        expected_files_after_compact,
+    )
+
+    class NoSpark:
+        def __getattr__(self, name):
+            raise AssertionError(f"Spark touched before the layout check: {name}")
+
+    def leaf(*parts):
+        d = os.path.join(t, *parts)
+        os.makedirs(d)
+        with open(os.path.join(d, "part-00000.parquet"), "w") as fh:
+            fh.write("x")
+
+    t = str(tmp_path / "t")
+    leaf("day_pt=2024-01-01")
+    leaf("day_pt=__HIVE_DEFAULT_PARTITION__")
+    assert _partition_cols(t) == ["day_pt"]
+    assert expected_files_after_compact(t) == 2
+    leaf("a=1")
+    before = sorted(os.listdir(tmp_path))
+    with pytest.raises(ValueError, match=r"'a', 'day_pt'") as exc:
+        expected_files_after_compact(t)
+    assert repr(t) in str(exc.value)
+    with pytest.raises(ValueError, match=r"'a', 'day_pt'"):
+        compact_parquet(NoSpark(), t)
+    assert sorted(os.listdir(tmp_path)) == before  # nothing staged
+
+
+def test_compaction_heals_missing_base_at_entry(spark, tmp_path, capsys):
+    """A crashed fallback swap leaves the base missing with the
+    committed table parked: compaction restores it under the writer
+    lock at entry, then compacts it (not a silent empty no-op), and
+    leaves no lock file behind."""
+    from streaming_data_lake_spark import overlay
+
+    t = str(tmp_path / "t")
+    spark.range(0, 500).repartition(5).write.parquet(t)
+    parked = overlay.old_sibling(t)
+    os.rename(t, parked)
+    n = compact_parquet(spark, t)
+    err = capsys.readouterr().err
+    assert "compact_parquet" in err and os.path.basename(parked) in err
+    assert n == 1
+    assert spark.read.parquet(t).count() == 500
+    assert not os.path.exists(overlay.writer_lock_path(t))
+
+
 def test_merge_upsert_multi_batch_matches_dict_model(spark, tmp_path):
     """Ten deterministic pseudo-random MERGE batches (inserts,
     overwrites, an empty batch) must leave the table exactly equal to

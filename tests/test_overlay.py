@@ -908,11 +908,11 @@ def test_retire_persistent_failure_is_loud_not_swallowed(
 
 
 def test_sweep_restore_leaves_no_lock_litter(tmp_path):
-    """ADVICE r17 #4: the orphan sweep's base-missing restore takes
-    both per-table writer flocks for EVERY swept group — without GC
-    the empty <base>.merge.lock/.cycle.lock files accumulate in the
-    lake dir forever. release_flock(gc=True) reclaims them; safe
-    because every flock user inode-revalidates after acquiring."""
+    """The orphan sweep's base-missing restore takes the table's one
+    writer lock (overlay.writer_lock_path) for EVERY swept group —
+    without GC the empty <base>.lock files accumulate in the lake dir
+    forever. release_flock(gc=True) reclaims them; safe because every
+    flock user inode-revalidates after acquiring."""
     from streaming_data_lake_spark.plans.maintenance import remove_orphans
 
     import streaming_data_lake_spark.overlay as overlay
@@ -989,3 +989,115 @@ def test_clock_step_torture_retirement_keeps_true_newest(tmp_path, monkeypatch):
     healed = overlay.heal_missing_base(str(live))
     assert healed is not None
     assert os.path.isfile(live / f"v{len(offsets_s)}.parquet")
+
+
+def _park(base, name):
+    """Park one version of ``base`` as its newest ``__old_`` sibling
+    holding the file ``name``; returns the sibling path."""
+    import streaming_data_lake_spark.overlay as overlay
+
+    old = overlay.old_sibling(base)
+    _mk(os.path.join(old, name), name.encode())
+    return old
+
+
+def test_table_writer_heals_newest_parked_version_and_reports(tmp_path, capsys):
+    """With a working flock, table_writer restores the newest parked
+    sibling before the body runs and reports it once on stderr; the
+    older retained version stays parked."""
+    import streaming_data_lake_spark.overlay as overlay
+
+    base = str(tmp_path / "t")
+    older = _park(base, "v1.parquet")
+    newest = _park(base, "v2.parquet")
+    with overlay.table_writer(base, "unit writer"):
+        assert os.path.isfile(os.path.join(base, "v2.parquet"))
+    err = capsys.readouterr().err
+    assert err.count("restored") == 1
+    assert "unit writer" in err and os.path.basename(newest) in err
+    assert os.path.isdir(older) and not os.path.exists(newest)
+    # the steady-state writers keep their lock file (gc=False)
+    assert os.path.exists(overlay.writer_lock_path(base))
+
+
+def test_table_writer_degraded_flock_warns_and_leaves_heal(
+    tmp_path, monkeypatch, capsys
+):
+    """With flock unavailable (ENOLCK), table_writer warns UNSERIALIZED
+    once and runs the body WITHOUT the age-guard-free heal: another
+    process may be mid-swap, so the base stays missing and the
+    sibling stays parked for the real holder or the sweep."""
+    import errno
+    import fcntl
+
+    import streaming_data_lake_spark.overlay as overlay
+
+    def no_locks(*a, **kw):
+        raise OSError(errno.ENOLCK, "No locks available (injected)")
+
+    monkeypatch.setattr(fcntl, "flock", no_locks)
+    base = str(tmp_path / "t")
+    parked = _park(base, "v1.parquet")
+    ran = []
+    with overlay.table_writer(base, "unit writer"):
+        ran.append(True)
+    err = capsys.readouterr().err
+    assert ran == [True]
+    assert err.count("UNSERIALIZED") == 1 and "restored" not in err
+    assert not os.path.exists(base) and os.path.isdir(parked)
+
+
+def test_sweep_shares_the_writer_lock(tmp_path):
+    """remove_orphans skips a base-missing group while a writer holds
+    writer_lock_path(base) through acquire_flock, and restores it once
+    the writer releases: the sweep and the writers lock one file."""
+    import streaming_data_lake_spark.overlay as overlay
+    from streaming_data_lake_spark.locks import acquire_flock, release_flock
+    from streaming_data_lake_spark.plans.maintenance import remove_orphans
+
+    lake = str(tmp_path)
+    base = os.path.join(lake, "t")
+    parked = _park(base, "v.parquet")
+    lock_path = overlay.writer_lock_path(base)
+    fh = acquire_flock(lock_path, "unit writer")
+    assert fh is not None
+    try:
+        assert remove_orphans(lake, min_age_s=0) == []
+        assert not os.path.exists(base) and os.path.isdir(parked)
+    finally:
+        release_flock(fh, lock_path)
+    assert remove_orphans(lake, min_age_s=0) == [
+        f"restored:{os.path.basename(parked)}"
+    ]
+    assert os.path.isfile(os.path.join(base, "v.parquet"))
+
+
+def test_sweep_persistent_restore_failure_is_loud_and_local(
+    tmp_path, monkeypatch, capsys
+):
+    """A restore rename that fails for good (PermissionError) is
+    reported as ``cannot restore``, leaves that group parked, and the
+    same pass still restores the next group."""
+    from streaming_data_lake_spark.plans.maintenance import remove_orphans
+
+    lake = str(tmp_path)
+    base_a = os.path.join(lake, "a")
+    old_a = _park(base_a, "a.parquet")
+    base_b = os.path.join(lake, "b")
+    old_b = _park(base_b, "b.parquet")
+
+    real_rename = os.rename
+
+    def deny_a(src, dst, *a, **kw):
+        if str(src) == old_a:
+            raise PermissionError(13, "Permission denied (injected)", src)
+        return real_rename(src, dst, *a, **kw)
+
+    monkeypatch.setattr(os, "rename", deny_a)
+    actions = remove_orphans(lake, min_age_s=0)
+    monkeypatch.undo()
+    err = capsys.readouterr().err
+    assert "cannot restore" in err and repr(base_a) in err
+    assert not os.path.exists(base_a) and os.path.isdir(old_a)
+    assert actions == [f"restored:{os.path.basename(old_b)}"]
+    assert os.path.isfile(os.path.join(base_b, "b.parquet"))

@@ -1,12 +1,13 @@
-"""Concurrent-materializer probe (r15): a scheduler DOUBLE-FIRE on
-the same target must not duplicate facts.
+"""Concurrent-materializer probe: a scheduler DOUBLE-FIRE on the
+same target must not duplicate facts.
 
-Before the per-target cycle flock, two concurrent ``Materializer.run``
-calls on one target both read the old watermark, both staged the same
-increment, and both renamed their UUID-named files in — a silent
-double-append (and the second intent journal overwrote the first's
-crash protection). Under the cycle lock the late cycle blocks, reads
-the COMMITTED watermark, and appends nothing.
+Without a per-target lock, two concurrent ``Materializer.run`` calls
+on one target both read the old watermark, both stage the same
+increment, and both rename their UUID-named files in — a silent
+double-append (and the second intent journal overwrites the first's
+crash protection). Under the target table's writer lock
+(``overlay.table_writer``) the late cycle blocks, reads the COMMITTED
+watermark, and appends nothing.
 
 Lanes:
 - ``m1-race``: two fresh processes race the INITIAL load of a
