@@ -2018,7 +2018,7 @@ def test_merge_upsert_self_heals_crashed_swap(spark, tmp_path, monkeypatch):
     """The upsert twin of the cycle self-heal: without healing, a
     base-missing table reads as 'first write' and the next MERGE
     would CTAS just its batch — silently orphaning the parked full
-    table. Under the merge flock the base is restored at entry, so
+    table. Under the table's writer lock the base is restored at entry, so
     the merge sees the full table."""
     import pytest
 

@@ -181,7 +181,7 @@ GATES: list[tuple[str, list[str], str, str]] = [
     ("dup-keys-sweep", [sys.executable, "tools/probe_dup_keys.py"], "ALL GREEN", "sweeps-f"),
     # Scheduler double-fire (17th gate, r15): two processes race the
     # SAME materializer target (initial load AND incremental cycle);
-    # the per-target cycle flock must degrade the double-fire to a
+    # the target table's writer lock must degrade the double-fire to a
     # serialized no-op — one full load / one non-zero append, no
     # duplicated keys. Rides the light huge-doc lane (~180 s).
     ("mat-race", [sys.executable, "tools/probe_concurrent_mat.py"], "ALL GREEN", "sweeps-c"),
