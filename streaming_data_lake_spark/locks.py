@@ -1,7 +1,6 @@
 """Advisory-flock acquisition shared by every serialized writer.
 
-Which path takes which lock (each a blocking ``flock`` on a sibling
-lock file unless noted):
+Which path takes which lock (each a blocking ``flock`` unless noted):
 
 - ``<table>.lock`` (``overlay.writer_lock_path``), held through
   ``overlay.table_writer``: the MERGE sink (``sources/upsert.py``),
@@ -9,8 +8,8 @@ lock file unless noted):
   (``plans/maintenance.compact_parquet``). The orphan sweep takes the
   same file NON-blocking (:func:`acquire_flock_nonblocking`) before it
   restores a base-missing table, and backs off a live holder.
-- ``<wm_dir>/_watermarks.json.lock``: the materializer's watermark store,
-  around its read-modify-write.
+- ``<wm_dir>/_watermarks.json.lock``: the materializer's watermark
+  store, around its read-modify-write.
 - ``<table>/_commit.lock``: ``VersionedTable`` commit and
   ``expire_snapshots``.
 

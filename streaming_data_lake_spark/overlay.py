@@ -35,8 +35,9 @@ Every publisher of a table directory serializes on one writer lock:
 heals a crashed swap before the body runs. The MERGE sink, the
 materializer cycle and compaction each run their body inside it; the
 orphan sweep takes the same lock non-blocking before it restores a
-base-missing table. One lock per table means no lock-order rule and
-one healer per table at a time.
+base-missing table. One lock per table means no lock-order rule, and
+a healer that holds it is the only flock-abiding publisher of its
+table.
 
 Used by the incremental materializer (M2 lookback repair rewrites
 only the lookback-day partitions; keyed M3/M5 repairs rewrite one
