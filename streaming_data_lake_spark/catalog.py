@@ -41,7 +41,7 @@ def table_path(sf_dir: str, name: str) -> str:
 # (path, mtime_ns, size) -> inferred physical schema. Schema
 # inference reads the parquet footer through a fresh DataSource
 # resolution on EVERY ``spark.read.parquet`` call — measured 70-90 ms
-# per call vs 13-20 ms with an explicit schema (r19). A bench/oracle
+# per call vs 13-20 ms with an explicit schema. A bench/oracle
 # run issues hundreds of load_table calls over the same immutable
 # files, so the footer work is pure repeat. At 100 TB the same role
 # is played by the catalog (metastore/table format) supplying the
@@ -74,8 +74,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # table_path names a single file): a dir's stat does not
         # change when an inner file is rewritten in place at the same
         # size, so the (mtime, size) fingerprint below would be
-        # unsound. Skip the memo rather than trust it (VERDICT r19
-        # minor #4).
+        # unsound. Skip the memo rather than trust it.
         return normalize_timestamps(spark.read.parquet(path), name)
     key = (path, st.st_mtime_ns, st.st_size)
     schema = _SCHEMA_MEMO.get(key)
@@ -162,7 +161,7 @@ def check_drift(spark: SparkSession, sf_dir: str) -> dict[str, list[str]]:
     normalized one — normalize_timestamps rewrites any long column
     declared as timestamp via nanos//1000, so a table that drifted to
     millis-as-long (or plain int64) would report NO drift while every
-    timestamp read is off by 1000x (r10 review finding). A physical
+    timestamp read is off by 1000x. A physical
     long under a declared timestamp counts as conforming ONLY when
     the parquet footer's logical type is timestamp[ns] — exactly the
     encoding the normalization assumes."""

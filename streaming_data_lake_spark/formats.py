@@ -61,7 +61,7 @@ class TableFormat:
         pins the emulation's key-hash bucket count (default:
         auto-sized toward ~128 MB leaves with amortized growth);
         backends whose format manages file sizing itself ignore it,
-        like ``ts_col`` (ADVICE r8 #4)."""
+        like ``ts_col``."""
         raise NotImplementedError
 
     def foreach_batch_upsert(

@@ -32,17 +32,17 @@ from streaming_data_lake_spark.functions.scalar import event_class
 # construction needs an active SparkContext.
 #
 # A valid event time is part of the clean contract: a NULL ``ts``
-# cannot be watermarked (Spark never evicts NULL-event-time state —
-# see the r11 chained-funnel probe), cannot land in an hourly/day
-# partition, and would silently fall out of every watermark-bounded
-# incremental predicate (``ts <= wm`` is NULL-false — the edge sweep
-# caught the materializer losing exactly those rows). An OUT-OF-RANGE
-# event time (outside parity.admissible_ts's (epoch, 2100) window) is
-# just as toxic at 100 TB: one far-future row advances every
-# downstream watermark past the whole legitimate stream (silent total
-# data loss, measured by the r13 time-edge sweep), and one ancient
-# row aborts driver-side materialization in pyspark's client datetime
-# conversion. Both go to the reject path with their own reasons
+# cannot be watermarked (Spark never evicts NULL-event-time state;
+# streaming_funnel_daily documents the probe), cannot land in an
+# hourly/day partition, and would silently fall out of every
+# watermark-bounded incremental predicate (``ts <= wm`` is NULL-false
+# — the edge sweep caught the materializer losing exactly those
+# rows). An OUT-OF-RANGE event time (outside parity.admissible_ts's
+# (epoch, 2100) window) is just as toxic at 100 TB: one far-future
+# row advances every downstream watermark past the whole legitimate
+# stream (silent total data loss, measured by the time-edge sweep),
+# and one ancient row aborts driver-side materialization in pyspark's
+# client datetime conversion. Both go to the reject path with their own reasons
 # instead of drifting between pipelines.
 def _clean_pred():
     from streaming_data_lake_spark.functions.parity import admissible_ts
@@ -87,7 +87,7 @@ def clean_events(df: DataFrame) -> DataFrame:
                 # [ \t\n\r\f\x0B]: Java-\s spelled explicitly — RE2's
                 # \s omits \x0B, so a bare \s here diverges from the
                 # DuckDB oracle on a VT between ':' and the digits
-                # (r15 control-char probe; see dedup.WS_CLASS)
+                # (see dedup.WS_CLASS)
                 F.regexp_extract(F.col("props"), r'"k":[ \t\n\r\f\x0B]*(\d+)', 1), F.lit("")
             )
             .try_cast("int")

@@ -119,8 +119,9 @@ def footer_max_ts_us(table_dir: str, ts_col: str) -> int | None:
     read from row-group FOOTER STATISTICS alone — zero Spark jobs,
     zero data pages. The filesystem analog of reading a max from
     Iceberg/Delta manifest metadata (guide §6: make readers use
-    metadata, not scans); the M6 watermark derivation is the one
-    consumer that needs a full-table max per maintenance cycle.
+    metadata, not scans). Its consumers are the M6 watermark
+    derivation (a full-table max) and M4's staged increment (the
+    append's max, which becomes the new watermark).
 
     EXACTNESS CONTRACT: returns a value only when EVERY data file's
     every row group carries usable min/max statistics for a
@@ -930,19 +931,30 @@ class Materializer:
                             os.path.relpath(os.path.join(root, f), staged)
                         )
             if moved:
-                # One footer-only job carries BOTH the audit count and
-                # the increment's max(ts): the append's max is the
-                # cycle's new watermark whenever an append happened
-                # (see M6 below), so reading it here removes M6's
-                # full-table scan from every appending cycle.
-                n_new, staged_max_us = (
-                    self.spark.read.parquet(staged)
-                    .agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.unix_micros(F.max(ts)).alias("us"),
+                # The staged footers carry BOTH the audit count and
+                # the increment's max(ts), with no Spark job: the
+                # append's max is the cycle's new watermark whenever
+                # an append happened (see M6 below), so reading it
+                # here removes M6's full-table scan from every
+                # appending cycle. Footers without usable ts
+                # statistics fall back to one Spark aggregate.
+                staged_max_us = footer_max_ts_us(staged, target.ts_col)
+                if staged_max_us is not None:
+                    import pyarrow.parquet as pq
+
+                    n_new = sum(
+                        pq.read_metadata(os.path.join(staged, rel)).num_rows
+                        for rel in moved
                     )
-                    .collect()[0]
-                )
+                else:
+                    n_new, staged_max_us = (
+                        self.spark.read.parquet(staged)
+                        .agg(
+                            F.count(F.lit(1)).alias("n"),
+                            F.unix_micros(F.max(ts)).alias("us"),
+                        )
+                        .collect()[0]
+                    )
                 self._write_m4_intent(target.name, wm, moved)
                 for rel in moved:
                     dst = os.path.join(mat_dir, rel)
@@ -964,8 +976,8 @@ class Materializer:
         # cycle):
         #  - an appending incremental cycle: every pre-existing and
         #    repaired row is <= wm while every appended row is > wm,
-        #    so max(mat) == max(staged) — already read by M4's
-        #    count+max footer job above;
+        #    so max(mat) == max(staged) — already read from M4's
+        #    staged footers above;
         #  - a no-append, no-repair cycle: the table is bit-unchanged,
         #    so wm' == wm and even the store write is a no-op;
         #  - only a repairing cycle WITHOUT appends (a repair can

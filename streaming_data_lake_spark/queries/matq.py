@@ -24,7 +24,8 @@ from streaming_data_lake_spark.catalog import load_table
 from streaming_data_lake_spark.functions.parity import DUCK_TS_ADMISSIBLE
 from streaming_data_lake_spark.operators.ingest import clean_events
 
-#: Event-time admission snippet on raw ``ts`` (r13 time-edge contract).
+#: Event-time admission snippet on raw ``ts`` (the time-edge window of
+#: :func:`functions.parity.admissible_ts`).
 _TS_ADM = DUCK_TS_ADMISSIBLE.format(c="ts")
 from streaming_data_lake_spark.plans.materialize import Materializer, MatTarget
 from streaming_data_lake_spark.queries import register
@@ -74,7 +75,7 @@ _TIME_TRAVEL_ORACLE = f"""
 -- (snapshots are history, nothing is dropped), but an out-of-range
 -- event time cannot be materialized by the pyspark client (year <1 /
 -- >9999 in host tz aborts the collect), so the certified read
--- projects NULL there (r13 time-edge contract)
+-- projects NULL there (the admissible_ts time-edge window)
 SELECT event_id, CASE WHEN {_TS_ADM} THEN ts END AS ts,
        user_id, event_type, value
 -- OR ts IS NULL: v1 carries the unknown-time rows (NULL-total split)
@@ -109,9 +110,10 @@ def time_travel_read_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, ref, events.filter((F.col("ts") <= cutoff) | F.col("ts").isNull()), "append"
     )
     fmt.commit_snapshot(spark, ref, events.filter(F.col("ts") > cutoff), "append")
-    # Output-safe ts (r13 time-edge contract): storage keeps the raw
-    # committed value; the certified read projects NULL for event
-    # times the pyspark client cannot materialize (oracle mirrors).
+    # Output-safe ts (the admissible_ts time-edge window): storage
+    # keeps the raw committed value; the certified read projects NULL
+    # for event times the pyspark client cannot materialize (oracle
+    # mirrors).
     from streaming_data_lake_spark.functions.parity import admissible_ts
 
     return fmt.read(spark, ref, version=1).withColumn(
@@ -216,7 +218,7 @@ SELECT event_id, ts, user_id, user_id % 10 AS user_bucket,
             THEN 'tier_' || CAST(user_id % 10 AS VARCHAR) || '_v2'
             ELSE 'tier_' || CAST(user_id % 10 AS VARCHAR) || '_v1' END AS tier_label
 FROM events
--- event-time admission (r13 time-edge contract): mat tables are
+-- event-time admission (the admissible_ts time-edge window): mat tables are
 -- day-partitioned on ts, so only rows with an in-range event time
 -- enter them (Materializer enforces; an out-of-range ts would mint a
 -- garbage day partition / wedge the watermark / abort driver reads)
@@ -308,7 +310,7 @@ def materialize_dim_change_repair(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 
 _EXISTS_REPAIR_ORACLE = f"""
--- v: admissible ts — event-time admission (r13 time-edge contract);
+-- v: admissible ts — event-time admission (admissible_ts window);
 -- mat tables are day-partitioned on ts (Materializer enforces).
 -- Click-side ts needs no filter on either side: the interval
 -- predicate is NULL-false, and an out-of-range click ts can never
@@ -379,8 +381,8 @@ def materialize_funnel_exists_repair(spark: SparkSession, sf_dir: str) -> DataFr
         ts_col="ts",
         # value_cols=n_clicks: a late SECOND click on a view whose
         # has_click already flipped true changes the certified count
-        # without flipping the flag — flag-only detection left it
-        # stale (latent vs the oracle; r9 review finding).
+        # without flipping the flag, so flag-only detection would
+        # leave the count stale against the oracle.
         exists_repair=ExistsRepair(
             key_col="event_id", flag_cols=("has_click",), value_cols=("n_clicks",)
         ),
@@ -474,10 +476,10 @@ def two_level_overlay_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
         .withColumn(DAY_COL, F.to_date("ts"))
         .withColumn("etype_pt", etype_pt)
     )
-    # Cardinality guard on the DERIVED identity key (r15, VERDICT r14
-    # #5): identity partitioning presumes a bounded enum — above the
-    # bound one directory per value is small-files soup (the r14
-    # group-key probe: 24x the wall at 5,815 types). Warn mode here:
+    # Cardinality guard on the DERIVED identity key: identity
+    # partitioning presumes a bounded enum — above the bound one
+    # directory per value is small-files soup (a group-key probe
+    # measured 24x the wall at 5,815 types). Warn mode here:
     # this scenario's certified outputs are DEFINED over whatever
     # leaves the data implies (the oracle counts them from the data
     # too), so it degrades loudly instead of refusing; a production
@@ -507,7 +509,7 @@ def two_level_overlay_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     # salt-split path) — computed BEFORE compacting, from the same
     # pre-compaction sizes the salt k keys on (a post-compaction
     # read diverges when re-encoding moves a leaf across the target
-    # boundary — ADVICE r9).
+    # boundary).
     from streaming_data_lake_spark.plans.maintenance import (
         expected_files_after_compact,
     )

@@ -41,7 +41,7 @@ def get_spark(app_name: str = "streaming_data_lake_spark", cpus: str | None = No
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # ANSI mode PINNED, not inherited (ADVICE r18 #1): the
+        # ANSI mode PINNED, not inherited: the
         # sessionize value-domain contract is "finite out-of-domain
         # RAISES on every path" — the hand fold raises explicitly,
         # the native twin via the ANSI decimal(12,2) cast. Spark 4.x
@@ -64,10 +64,10 @@ def get_spark(app_name: str = "streaming_data_lake_spark", cpus: str | None = No
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
         # INT64 micros timestamps on write, not the INT96 default:
-        # INT96 is deprecated, carries NO column statistics (so every
-        # engine-written table was opaque to row-group skipping on ts
-        # predicates AND to the M6 footer-stats watermark read), and
-        # is 4 bytes/value fatter. Also pinned at runtime by
+        # INT96 is deprecated, carries NO column statistics (so an
+        # INT96 table is opaque to row-group skipping on ts predicates
+        # AND to the materializer's footer-stats max reads in M4 and
+        # M6), and is 4 bytes/value fatter. Also pinned at runtime by
         # catalog.pin_session_confs for bare driver sessions.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # The driver's testdata stores timestamps as parquet

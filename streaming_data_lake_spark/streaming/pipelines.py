@@ -10,7 +10,7 @@ synchronously. In production the same code runs unbounded with
 Bounded runs have one owner. :func:`start_bounded` is the only code
 that builds a streaming writer (scratch checkpoint, ``availableNow``
 trigger) and :func:`run_bounded` starts, awaits and reads back under
-one state-partition scope. A run goes to one of three sinks:
+one conf scope (:func:`_stream_confs`). A run goes to one of three sinks:
  - ``"memory"``: bounded keyed aggregates only (driver memory);
  - ``"parquet"``: a durable, append-only scratch sink for fact-scale
    output;
@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,28 +44,77 @@ from streaming_data_lake_spark.scratch import scratch_dir
 
 
 #: Default state-store (shuffle) partition count for stream starts;
-#: see :func:`_state_partitions`.
+#: see :func:`_stream_confs`.
 STATE_PARTITIONS = 4
+
+#: Spark's FileSystem-API checkpoint file manager. On ``file:`` it
+#: renames with ``File.renameTo`` (atomic, ``.crc`` companions moved
+#: along); the FileContext default forks a ``readlink`` per rename
+#: when Hadoop runs without its native library.
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+#: Logical operators that fire timers (state timeouts) in no-data
+#: micro-batches: flatMapGroupsWithState, applyInPandasWithState and
+#: the transformWithState family. A tree-string line opens with the
+#: tree drawing, and ``~`` marks a streaming node, before the name.
+_TIMER_OPERATOR = re.compile(
+    r"^[\s:|+~-]*(FlatMapGroups\w*WithState|TransformWithState\w*)\b", re.M
+)
+
+
+def _fires_timers(stream_df: DataFrame) -> bool:
+    """True when ``stream_df``'s plan holds an operator that does work
+    in a no-data micro-batch beyond evicting state."""
+    plan = stream_df._jdf.queryExecution().analyzed().treeString()
+    return _TIMER_OPERATOR.search(plan) is not None
 
 
 @contextlib.contextmanager
-def _state_partitions(spark: SparkSession, n: int = STATE_PARTITIONS):
-    """Scope the shuffle-partition count around stream starts: the
-    number of state-store instances per stateful operator is locked
-    to ``spark.sql.shuffle.partitions`` at query start, and per-store
-    setup cost dominates bounded local replays (measured 15.6s→10.3s
-    on the funnel at sf0.1 going 32→8, and another ~2s going 8→4 —
-    state per partition is tiny here, commit overhead is not). On a
-    production cluster this would be sized to executor count × cores,
-    not lowered. Callers that measured a different optimum pass ``n``
-    explicitly (the sessionizer's Python fold wants 16)."""
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
+def _stream_confs(
+    spark: SparkSession, n: int = STATE_PARTITIONS, no_data_batches: bool = True
+):
+    """Scope the session confs a bounded stream starts under; the
+    stream clones the session at start, so the scope must cover the
+    start, and every conf is put back afterwards.
+
+    - ``spark.sql.shuffle.partitions`` = ``n``: the number of
+      state-store instances per stateful operator is locked to it at
+      query start, and per-store setup and commit cost dominates
+      bounded local replays (measured 15.6s→10.3s on the funnel at
+      sf0.1 going 32→8, and another ~2s going 8→4 — state per
+      partition is tiny here, commit overhead is not). On a
+      production cluster this would be sized to executor count ×
+      cores, not lowered. Callers that measured a different optimum
+      pass ``n`` explicitly (the sessionizer's Python fold wants 16).
+    - ``spark.sql.streaming.checkpointFileManagerClass`` =
+      :data:`FS_CHECKPOINT_MANAGER`: every offset, commit and
+      state-store delta file is written to a temp name and renamed.
+      The bounded replay's checkpoint is scratch, written by one
+      query, so the FileContext manager's cross-writer guarantees buy
+      nothing, while its rename costs a forked process each.
+    - ``no_data_batches=False`` sets
+      ``spark.sql.streaming.noDataMicroBatches.enabled=false``
+      (:func:`run_bounded` says for which streams)."""
+    confs = {
+        "spark.sql.shuffle.partitions": str(n),
+        "spark.sql.streaming.checkpointFileManagerClass": FS_CHECKPOINT_MANAGER,
+    }
+    if not no_data_batches:
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    prev = {k: spark.conf.get(k, None) for k in confs}
     try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
         yield
     finally:
-        spark.conf.set(key, prev)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def start_bounded(stream_df: DataFrame, sink, mode: str = "append"):
@@ -130,10 +180,18 @@ def run_bounded(
     """Run ``stream_df`` to completion into ``sink`` (see
     :func:`start_bounded`) and return the result thunk's value.
 
-    The state-partition scope stays open over the start AND the await:
-    a ``foreachBatch`` MERGE plans its reads of the live table in the
-    caller's session, so that session's shuffle-partition count still
-    applies while the batches run.
+    The conf scope (:func:`_stream_confs`) stays open over the start
+    AND the await: a ``foreachBatch`` MERGE plans its reads of the live
+    table in the caller's session, so that session's shuffle-partition
+    count still applies while the batches run.
+
+    An update-mode stream runs without no-data micro-batches. Such a
+    batch follows the last data batch to advance the watermark: an
+    update-mode aggregate only evicts state in it, emitting nothing
+    (the MERGE hook gets an empty frame), and nothing resumes the
+    replay's checkpoint. Append-mode windows and outer stream joins
+    emit their final rows in it, and so do timer-firing plans
+    (:func:`_fires_timers`) in any mode, so those keep it.
 
     UPDATE-mode memory sink invariant, enforced: the memory sink only
     APPENDS, so an update-mode key re-emitted across micro-batches
@@ -143,7 +201,8 @@ def run_bounded(
     maxFilesPerTrigger) — but rather than rely on an unchecked
     assumption, verify it and fail loudly; the multi-batch shape
     belongs on the keyed MERGE sink (:func:`run_upsert_stream`)."""
-    with _state_partitions(stream_df.sparkSession, state_partitions):
+    no_data_batches = mode != "update" or _fires_timers(stream_df)
+    with _stream_confs(stream_df.sparkSession, state_partitions, no_data_batches):
         q, result = start_bounded(stream_df, sink, mode)
         q.awaitTermination()
     if mode == "update" and sink == "memory":
@@ -394,7 +453,7 @@ def streaming_funnel_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream's state-store setup. The (view,click) and
     # (click,purchase) pair sets are fact-scale: durable parquet
     # sinks, never driver memory.
-    with _state_partitions(spark):
+    with _stream_confs(spark):
         q1, vc_res = start_bounded(vc, "parquet")
         q2, cp_res = start_bounded(cp, "parquet")
         for q in (q1, q2):

@@ -126,29 +126,43 @@ def test_scratch_base_capacity_gate(monkeypatch):
 
 
 def test_state_partitions_scopes_and_restores(spark):
-    """_state_partitions sets spark.sql.shuffle.partitions only inside
-    its scope — the default count, or an explicit ``n`` — and puts the
-    previous value back afterwards, also when the body raises."""
+    """_stream_confs sets spark.sql.shuffle.partitions (the default
+    count, or an explicit ``n``), pins the FileSystem checkpoint
+    manager and, when asked, turns off no-data micro-batches only
+    inside its scope, and puts every previous value back afterwards,
+    also when the body raises."""
     import pytest as _pytest
 
     from streaming_data_lake_spark.streaming.pipelines import (
+        FS_CHECKPOINT_MANAGER,
         STATE_PARTITIONS,
-        _state_partitions,
+        _stream_confs,
     )
 
     key = "spark.sql.shuffle.partitions"
+    mgr = "spark.sql.streaming.checkpointFileManagerClass"
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
     orig = spark.conf.get(key)
     spark.conf.set(key, "11")
     try:
-        with _state_partitions(spark):
+        assert spark.conf.get(mgr, None) is None
+        assert spark.conf.get(no_data, None) is None
+        with _stream_confs(spark):
             assert spark.conf.get(key) == str(STATE_PARTITIONS) == "4"
+            assert spark.conf.get(mgr) == FS_CHECKPOINT_MANAGER
+            assert spark.conf.get(no_data, None) is None
         assert spark.conf.get(key) == "11"
-        with _state_partitions(spark, 6):
+        assert spark.conf.get(mgr, None) is None
+        with _stream_confs(spark, 6, no_data_batches=False):
             assert spark.conf.get(key) == "6"
+            assert spark.conf.get(no_data) == "false"
         assert spark.conf.get(key) == "11"
+        assert spark.conf.get(no_data, None) is None
         with _pytest.raises(RuntimeError):
-            with _state_partitions(spark, 3):
+            with _stream_confs(spark, 3, no_data_batches=False):
                 raise RuntimeError("stream start failed")
         assert spark.conf.get(key) == "11"
+        assert spark.conf.get(mgr, None) is None
+        assert spark.conf.get(no_data, None) is None
     finally:
         spark.conf.set(key, orig)

@@ -21,8 +21,29 @@ def test_streaming_clean_matches_batch(spark):
     assert _rows(stream, cols) == _rows(batch, cols)
 
 
-def test_streaming_upsert_converges(spark):
+def _started_queries(monkeypatch):
+    """Record every query :func:`pipelines.start_bounded` starts, so a
+    test can read its ``recentProgress`` after the bounded run."""
+    started = []
+    real = pipelines.start_bounded
+
+    def spy(*args, **kwargs):
+        q, result = real(*args, **kwargs)
+        started.append(q)
+        return q, result
+
+    monkeypatch.setattr(pipelines, "start_bounded", spy)
+    return started
+
+
+def test_streaming_upsert_converges(spark, monkeypatch):
+    """The watermarked single-file replay runs exactly ONE micro-batch
+    (no eviction-only no-data batch after it) and the MERGEd table
+    equals the batch hourly aggregate."""
+    started = _started_queries(monkeypatch)
     got = pipelines.streaming_upsert_hourly(spark, SF_DIR)
+    (q,) = started
+    assert len(q.recentProgress) == 1, [p["batchId"] for p in q.recentProgress]
     import pyspark.sql.functions as F
 
     from streaming_data_lake_spark.functions.parity import dsum
@@ -177,7 +198,7 @@ def test_sessionize_pandas_matches_native(spark):
     )
 
     cols = ["user_id", "session_start", "session_end", "n_events", "total_value"]
-    with pipelines._state_partitions(spark):
+    with pipelines._stream_confs(spark):
         native = sessionize_native_replay(spark, SF_DIR, 120)
         pandas_path = sessionize_replay(spark, SF_DIR, 120)
     assert _rows(native, cols) == _rows(pandas_path, cols)
@@ -806,6 +827,66 @@ def test_upsert_stream_empty_input_reads_back_empty(spark, tmp_path):
     assert out.schema == agg.schema
 
 
+def test_upsert_stream_keeps_no_data_batch_for_timers(spark, tmp_path, monkeypatch):
+    """A flatMapGroupsWithState-style plan (applyInPandasWithState with
+    an event-time timeout) emits its timed-out groups in the no-data
+    micro-batch that follows the data, so run_upsert_stream keeps that
+    batch for it: two micro-batches, and the timed-out group lands in
+    the MERGEd table."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from streaming_data_lake_spark.streaming.pipelines import (
+        _fires_timers,
+        run_upsert_stream,
+    )
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [("a", "2024-03-05 10:00:00"), ("a", "2024-03-05 10:05:00"),
+         ("b", "2024-03-05 12:00:00")],
+        "k string, ts string",
+    ).select("k", F.to_timestamp("ts").alias("ts")).coalesce(1).write.parquet(src)
+
+    def on_group(key, pdfs, state):
+        # Emit a group's count only when its event-time timeout fires.
+        if state.hasTimedOut:
+            (n, _top) = state.get
+            state.remove()
+            yield pd.DataFrame({"k": [key[0]], "n": [n]})
+        else:
+            n, top = state.get if state.exists else (0, 0)
+            for pdf in pdfs:
+                n += len(pdf)
+                top = max(top, int(pdf["ms"].max()))
+            state.update((n, top))
+            state.setTimeoutTimestamp(top)
+
+    timed = (
+        spark.readStream.schema("k string, ts timestamp")
+        .parquet(src)
+        .withWatermark("ts", "10 minutes")
+        .select("k", "ts", F.unix_millis("ts").alias("ms"))
+        .groupBy("k")
+        .applyInPandasWithState(
+            on_group,
+            "k string, n long",
+            "n long, top long",
+            "Update",
+            GroupStateTimeout.EventTimeTimeout,
+        )
+    )
+    assert _fires_timers(timed)
+    started = _started_queries(monkeypatch)
+    out = run_upsert_stream(timed, str(tmp_path / "sink"), ["k"])
+    (q,) = started
+    assert [p["numInputRows"] for p in q.recentProgress] == [3, 0]
+    # The watermark after the data batch is 11:50: group a (timeout
+    # 10:05) fires in the no-data batch, group b (12:00) stays open.
+    assert sorted((r["k"], r["n"]) for r in out.collect()) == [("a", 2)]
+
+
 def test_merge_upsert_literal_key_names(spark, tmp_path):
     """The whole merge path (layout hash, null gate, anti-join keys,
     day derivation) takes key names literally — dotted and backticked
@@ -897,14 +978,11 @@ def test_parquet_sink_survives_midstream_stop_and_resume(spark, tmp_path):
     assert got == list(range(60)), "each staged row exactly once across the restart"
 
 
-def test_stateful_upsert_resumes_from_checkpoint_after_crash(spark, tmp_path):
-    """T2/T4 depth: a STATEFUL windowed aggregate whose foreachBatch
-    sink CRASHES on its second micro-batch must, on restart from the
-    same checkpoint, recover its window state and converge the keyed
-    MERGE table to exactly the batch aggregate — state-store recovery
-    plus sink idempotency, driven together through a real failed
-    query. (The convergence test covers multi-batch update mode; this
-    adds the crash/restart transition on top.)"""
+def _crash_and_resume_upsert(spark, tmp_path) -> str:
+    """Run a stateful update-mode windowed aggregate whose
+    foreachBatch MERGE sink crashes on its second micro-batch, restart
+    it from the same checkpoint, assert the table converged to the
+    batch aggregate and return the checkpoint directory."""
     import datetime as dt
     import os
 
@@ -996,6 +1074,47 @@ def test_stateful_upsert_resumes_from_checkpoint_after_crash(spark, tmp_path):
         for r in read_upsert(spark, table).collect()
     }
     assert got == expected
+    return ckpt
+
+
+def test_stateful_upsert_resumes_from_checkpoint_after_crash(spark, tmp_path):
+    """T2/T4 depth: a STATEFUL windowed aggregate whose foreachBatch
+    sink CRASHES on its second micro-batch must, on restart from the
+    same checkpoint, recover its window state and converge the keyed
+    MERGE table to exactly the batch aggregate — state-store recovery
+    plus sink idempotency, driven together through a real failed
+    query. (The convergence test covers multi-batch update mode; this
+    adds the crash/restart transition on top.)"""
+    _crash_and_resume_upsert(spark, tmp_path)
+
+
+def test_stateful_upsert_resumes_under_pinned_checkpoint_manager(spark, tmp_path):
+    """The same crash/resume, started inside the bounded-stream conf
+    scope: the checkpoint (offset and commit logs, state-store deltas)
+    is written and re-read by the pinned FileSystem checkpoint
+    manager, and every checkpoint file keeps its ``.crc`` companion."""
+    import os
+
+    with pipelines._stream_confs(spark):
+        jvm = spark._jvm
+        mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+            jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+            spark._jsparkSession.sessionState().newHadoopConf(),
+        )
+        assert mgr.getClass().getName() == pipelines.FS_CHECKPOINT_MANAGER
+        ckpt = _crash_and_resume_upsert(spark, tmp_path)
+
+    checked = 0
+    for sub in ("offsets", "commits", "state"):
+        for root, _dirs, files in os.walk(os.path.join(ckpt, sub)):
+            for f in files:
+                if f.startswith("."):
+                    continue
+                assert f".{f}.crc" in files, f"no .crc companion for {root}/{f}"
+                checked += 1
+    # offsets + commits of the crashed run and the resume, plus the
+    # state-store delta files.
+    assert checked >= 6
 
 
 def test_sessionize_pandas_handles_null_user(spark, tmp_path):
@@ -1044,7 +1163,7 @@ def test_sessionize_pandas_handles_null_user(spark, tmp_path):
         out = [tuple(r[c] for c in cols) for r in df.collect()]
         return sorted(out, key=lambda t: ((t[0] is None, t[0] or 0), t[1]))
 
-    with pipelines._state_partitions(spark):
+    with pipelines._stream_confs(spark):
         native = sessionize_native_replay(spark, sf, 120)
         pandas_path = sessionize_replay(spark, sf, 120)
     nat = rows(native)
@@ -1137,7 +1256,7 @@ def test_sessionize_multibatch_late_row_merges_sessions(spark, tmp_path):
             for r_ in got.filter(f"user_id = 5").collect()
         )
 
-    with pipelines._state_partitions(spark):
+    with pipelines._stream_confs(spark):
         pandas_rows = run(sessionize, "pandas")
         native_rows = run(sessionize_native, "native")
     assert native_rows == [(5, t0, S, 3)], native_rows
@@ -1359,7 +1478,7 @@ def test_sessionize_multibatch_random_splits_match_batch_oracle(spark, tmp_path)
             for r_ in got.filter(f"user_id != {_SENTINEL_USER}").collect()
         )
 
-    with pipelines._state_partitions(spark):
+    with pipelines._stream_confs(spark):
         for seed in (7, 18):
             rows = corpus(seed)
             want = oracle(rows)
